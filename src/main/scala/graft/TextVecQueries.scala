@@ -579,7 +579,7 @@ object TextVecQueries {
     // source that often arrives as ONE parquet split — without it the whole
     // extraction stage runs on a single task (TextOps.spread passes
     // well-split inputs through untouched)
-    val d = asciiGuarded(TextOps.spread(docs(spark, dir)))
+    val d = requireAscii(TextOps.spread(docs(spark, dir)))
       .where(col("text").isNotNull)
     lawGuards(MediaOps.extractFeaturesKeeping(
       MediaOps.syntheticMedia(lawAnnotated(d), keep = LawCols)))
@@ -684,7 +684,7 @@ object TextVecQueries {
     * guards the projected text column itself) if the corpus ever stops
     * being ASCII instead of silently drifting from the oracle.
     */
-  private[graft] def asciiGuarded(d: DataFrame): DataFrame =
+  private[graft] def requireAscii(d: DataFrame): DataFrame =
     d.withColumn("text",
       // null text passes THROUGH (the equality is null for it, and falling
       // to raise_error would misdiagnose an incomplete corpus as non-ASCII)
@@ -698,7 +698,7 @@ object TextVecQueries {
     // the repartition exchange cost more than the single-task compute it
     // parallelized (unlike mediaFeatures' law byte-walk and mediaDecode's
     // real codecs, which keep it)
-    val d = asciiGuarded(docs(spark, dir))
+    val d = requireAscii(docs(spark, dir))
     MediaOps.extractFeatures(MediaOps.syntheticMedia(d))
       .toDF()
       .select(col("doc_id"), col("n_bytes"), col("header_hex"),
@@ -727,7 +727,7 @@ object TextVecQueries {
     // single task while 31 cores idled
     MediaOps.decodeAvFeatures(
         MediaOps.syntheticAvMedia(
-          asciiGuarded(TextOps.spread(docs(spark, dir)))
+          requireAscii(TextOps.spread(docs(spark, dir)))
             .where(col("text").isNotNull)))
       .toDF()
       .select(col("doc_id"), col("img_w"), col("img_h"),

@@ -42,29 +42,6 @@ object Lineage {
         col("row_count"), col("content_hash"))
   }
 
-  /** O10 entity-level manifest: exact per-entity row counts — the stats
-    * product the skew router consumes ([[SkewPolicy.Precomputed]] takes this
-    * frame directly). Computing it also PUBLISHES the top-K counts to the
-    * session registry (bounded at [[Rolling.MaxHotKeys]] pairs of driver
-    * memory), so any later [[Pipeline.backfill]] / [[Rolling.rollingAgg]]
-    * over the SAME input routes its whales with ZERO detection scans under
-    * the default `SkewPolicy.Auto` — the manifest pass already counted
-    * every entity (SURVEY.md §4.2 "reuse, don't re-scan"; zero-job pin in
-    * SkewSuite). The publish step is one extra narrow job over the counts
-    * aggregate, paid once where the manifest is materialized anyway.
-    */
-  def entityManifest(df: DataFrame, entity: String): DataFrame = {
-    val counts = df.groupBy(col(entity)).agg(count(lit(1)).as("row_count"))
-    val topDesc = counts
-      .orderBy(col("row_count").desc)
-      .limit(Rolling.MaxHotKeys)
-      .collect()
-      .map(r => (r.get(0), r.getLong(1)))
-      .toSeq
-    Rolling.registerEntityCounts(df, entity, topDesc)
-    counts
-  }
-
   /** Table-level (partition-layout-independent) fingerprint. */
   def tableFingerprint(df: DataFrame, hashCols: Seq[String] = Nil): (Long, Long) = {
     val cols = if (hashCols.nonEmpty) hashCols else df.columns.toSeq
@@ -111,7 +88,6 @@ object Resume {
     * "reads the input once" claim is about THIS method's scans; a `job`
     * whose own plan runs extra input passes (e.g. `rollingAgg`'s default
     * skew detection on large inputs) adds its own — pass
-    * `SkewPolicy.Precomputed` (per-entity counts from the manifest pass) or
     * `SkewPolicy.WindowOnly` inside the job to keep a strict one-scan
     * budget; under Auto the session detection cache at least collapses the
     * per-wave repeats to one job per distinct slice plan.

@@ -19,14 +19,9 @@ case class FeatureSpec(
 
 object Pipeline {
 
-  /** `skewPolicy` threads to every rolling call. Under the default Auto:
-    * if [[Lineage.entityManifest]] ran over this input in this session, its
-    * published counts answer the hot-key query with ZERO detection scans
-    * (the registry in Rolling); otherwise one detection job runs, and the
-    * session detection cache collapses repeated calls over the same input
-    * to that ONE job. [[SkewPolicy.Precomputed]] stays for callers holding
-    * an explicit counts frame (e.g. read back from manifest files in a NEW
-    * session, where the registry is empty).
+  /** `skewPolicy` threads to every rolling call. Under the default Auto one
+    * detection job runs, and the session detection cache collapses repeated
+    * calls over the same input to that ONE job.
     */
   def backfill(
       turns: DataFrame,

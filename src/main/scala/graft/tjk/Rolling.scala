@@ -75,10 +75,6 @@ object Rolling {
       case SkewPolicy.Auto =>
         val t = df.sparkSession.conf.get(HotThresholdKey, HotThresholdDefault.toString).toLong
         detectHotKeysCached(df, entity, t)
-      case SkewPolicy.Guarded(t) => detectHotKeysCached(df, entity, t)
-      case SkewPolicy.Precomputed(counts, countCol) =>
-        val t = df.sparkSession.conf.get(HotThresholdKey, HotThresholdDefault.toString).toLong
-        hotKeysFromCounts(counts, entity, countCol, t)
     }
     if (hot.isEmpty) windowRolling(df, entity, tsCol, specs)
     else {
@@ -92,8 +88,8 @@ object Rolling {
       // Routing mechanism scales with |hot| (VERDICT r4 #5): a small set
       // compiles to an InSet literal (cheapest probe, tiny plan); past
       // HotBroadcastMin keys a literal list baked into the plan is real
-      // analysis/codegen pressure (hotKeysFromCounts can hit the 10k cap
-      // routinely on hot-heavy counts), so the keys ride a broadcast
+      // analysis/codegen pressure (detection can hit the 10k cap on
+      // hot-heavy inputs), so the keys ride a broadcast
       // left-join flag instead — plan size O(1) in |hot|, same semantics
       // (SkewSuite equivalence pin at the cap).
       val (routed, isHot) =
@@ -167,12 +163,11 @@ object Rolling {
     * key lists. A hash collision or a stale entry (input files rewritten
     * under the same plan within one session) only mis-ROUTES — results are
     * identical on either path — and [[clearDetectionCache]] resets
-    * explicitly; [[SkewPolicy.Precomputed]] skips detection entirely when
-    * the caller already has per-entity counts (the O10 manifest shape).
+    * explicitly.
     */
   private val detectionCache =
     new java.util.WeakHashMap[SparkSession,
-      java.util.LinkedHashMap[(Int, Int, String, String, Long), Seq[Any]]]()
+      java.util.LinkedHashMap[(Int, Int, String, Long), Seq[Any]]]()
   private val DetectionCacheMax = 64
 
   /** Test pin: number of detection JOBS actually run (cache misses that
@@ -183,126 +178,33 @@ object Rolling {
   def clearDetectionCache(spark: SparkSession): Unit =
     detectionCache.synchronized { detectionCache.remove(spark) }
 
-  private def cachedKeys(
-      df: DataFrame, kind: String, entity: String, threshold: Long)(
-      compute: => Seq[Any]): Seq[Any] = {
+  private def detectHotKeysCached(
+      df: DataFrame,
+      entity: String,
+      threshold: Long): Seq[Any] = {
+    if (threshold <= 0L) return Nil
     val spark = df.sparkSession
     val canon = df.queryExecution.optimizedPlan.canonicalized
     // (semanticHash, node count) — two independent cheap fingerprints; a
     // simultaneous collision only affects routing, never results
     val key = (canon.semanticHash(), canon.collect { case _ => 1 }.sum,
-      kind, entity, threshold)
+      entity, threshold)
     detectionCache.synchronized {
       val m = detectionCache.computeIfAbsent(spark, _ =>
-        new java.util.LinkedHashMap[(Int, Int, String, String, Long), Seq[Any]](16, 0.75f, true) {
+        new java.util.LinkedHashMap[(Int, Int, String, Long), Seq[Any]](16, 0.75f, true) {
           override def removeEldestEntry(
-              e: java.util.Map.Entry[(Int, Int, String, String, Long), Seq[Any]]): Boolean =
+              e: java.util.Map.Entry[(Int, Int, String, Long), Seq[Any]]): Boolean =
             size > DetectionCacheMax
         })
       Option(m.get(key))
     } match {
       case Some(hit) => hit
       case None =>
-        val res = compute
+        val res = detectHotKeys(df, entity, threshold)
         detectionCache.synchronized {
           Option(detectionCache.get(spark)).foreach(_.put(key, res))
         }
         res
-    }
-  }
-
-  /** Session registry of per-entity top-K counts published by the O10
-    * entity-manifest pass ([[Lineage.entityManifest]]): same plan-fingerprint
-    * keying (and the same no-strong-plan-reference rule) as the detection
-    * cache, values bounded at [[MaxHotKeys]] (key, count) pairs. Auto /
-    * Guarded detection consults this FIRST, so a manifest-bearing pipeline
-    * routes with ZERO detection scans by default (VERDICT r4 #6) — the
-    * manifest aggregation already counted every entity; re-scanning the
-    * input to re-derive a subset of it would be the "re-scan, don't reuse"
-    * anti-pattern O10 exists to kill.
-    */
-  private val countsRegistry =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.LinkedHashMap[(Int, Int, String), Seq[(Any, Long)]]]()
-
-  /** Publish exact per-entity counts for `src` (top [[MaxHotKeys]] by count,
-    * DESCENDING — the registry answers "which entities exceed t" queries).
-    */
-  private[tjk] def registerEntityCounts(
-      src: DataFrame, entity: String, topDesc: Seq[(Any, Long)]): Unit = {
-    val spark = src.sparkSession
-    val canon = src.queryExecution.optimizedPlan.canonicalized
-    val key = (canon.semanticHash(), canon.collect { case _ => 1 }.sum, entity)
-    countsRegistry.synchronized {
-      val m = countsRegistry.computeIfAbsent(spark, _ =>
-        new java.util.LinkedHashMap[(Int, Int, String), Seq[(Any, Long)]](16, 0.75f, true) {
-          override def removeEldestEntry(
-              e: java.util.Map.Entry[(Int, Int, String), Seq[(Any, Long)]]): Boolean =
-            size > DetectionCacheMax
-        })
-      m.put(key, topDesc.take(MaxHotKeys))
-    }
-  }
-
-  /** Hot keys from the registry, if this (input plan, entity) has published
-    * counts that can answer `threshold`: a SATURATED registration (exactly
-    * MaxHotKeys entries) is a truncation — entities outside it have counts
-    * ≤ its smallest stored count, so it only answers thresholds at or above
-    * that floor (below it, fall through to detection; mis-answering would
-    * only mis-route, but there is no need to accept even that).
-    */
-  private def registeredHotKeys(
-      df: DataFrame, entity: String, threshold: Long): Option[Seq[Any]] = {
-    val canon = df.queryExecution.optimizedPlan.canonicalized
-    val key = (canon.semanticHash(), canon.collect { case _ => 1 }.sum, entity)
-    val hit = countsRegistry.synchronized {
-      Option(countsRegistry.get(df.sparkSession)).flatMap(m => Option(m.get(key)))
-    }
-    hit.flatMap { top =>
-      val saturated = top.size >= MaxHotKeys
-      // complete iff every entity OUTSIDE the stored set (count ≤ smallest
-      // stored) is provably below the threshold
-      val answerable = !saturated || top.lastOption.forall(_._2 < threshold)
-      if (answerable) Some(top.takeWhile(_._2 >= threshold).map(_._1))
-      else None
-    }
-  }
-
-  private[graft] def detectHotKeysCached(
-      df: DataFrame,
-      entity: String,
-      threshold: Long): Seq[Any] = {
-    if (threshold <= 0L) return Nil
-    registeredHotKeys(df, entity, threshold) match {
-      case Some(keys) => keys
-      case None =>
-        cachedKeys(df, "detect", entity, threshold)(detectHotKeys(df, entity, threshold))
-    }
-  }
-
-  /** Hot keys from PRECOMPUTED per-entity counts ([[SkewPolicy.Precomputed]]):
-    * no detection scan of the INPUT at all — the caller's lineage/manifest
-    * aggregation is the stats source (SURVEY.md §4.2). Exact counts ⇒ exact
-    * threshold, no sampling cutoff. The threshold filter still evaluates
-    * the `counts` plan once, so callers should hand over a MATERIALIZED
-    * frame (persisted, or read back from the manifest files) — and the
-    * session cache above covers repeated calls with the same counts plan
-    * either way.
-    */
-  private[graft] def hotKeysFromCounts(
-      counts: DataFrame,
-      entity: String,
-      countCol: String,
-      threshold: Long): Seq[Any] = {
-    if (threshold <= 0L) return Nil
-    cachedKeys(counts, s"precomputed:$countCol", entity, threshold) {
-      counts
-        .where(col(countCol) >= threshold)
-        .orderBy(col(countCol).desc)
-        .limit(MaxHotKeys)
-        .select(col(entity))
-        .collect()
-        .map(_.get(0)).toSeq
     }
   }
 

@@ -5,21 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.mutable
 
-/** O9 — mandated physical layouts (BASELINE.json:6, SURVEY.md §4.4). */
-object Layout {
-
-  /** Hash co-partition by entity (for merge joins / salted merges). */
-  def coPartitioned(df: DataFrame, entity: String, numPartitions: Int): DataFrame =
-    df.repartition(numPartitions, col(entity))
-
-  /** Range-partitioned + sorted on (conv_id, turn_idx, ts) — the co-sorted
-    * layout the as-of sort-merge fallback and golden dumps rely on.
-    */
-  def rangeSorted(df: DataFrame, numPartitions: Int, cols: Seq[String]): DataFrame =
-    df.repartitionByRange(numPartitions, cols.map(col): _*)
-      .sortWithinPartitions(cols.map(col): _*)
-}
-
 /** O8 — skew handling for hot entities (SURVEY.md §2.1 O8, §4.2).
   *
   * Two result-invariant mechanisms:

@@ -1,10 +1,7 @@
 package graft.tjk
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Incremental (Structured Streaming) mode — SURVEY.md §2.8 / §7.6 stretch.
   *
@@ -54,47 +51,15 @@ object Streaming {
       pending: Seq[(Long, Int, java.sql.Timestamp, Double)],
       window: Seq[(Long, Double)])
 
-  /** Incremental trailing-window features (count/sum over `[ts − W, ts]`)
-    * via `flatMapGroupsWithState` — the custom-state streaming path for the
-    * rolling semantics session_window cannot express (SURVEY.md §2.8).
-    *
-    * Correctness under out-of-order arrival is by WATERMARK-DELAYED
-    * FINALIZATION, not by trusting arrival order: admitted rows buffer in
-    * state, and a row is emitted only once the watermark passes its event
-    * time — at which point Spark guarantees no earlier-ts row can ever be
-    * admitted, so finalization order IS event-time order, globally. Each
-    * finalized row's frame is computed from the sliding window of already-
-    * finalized events, in equal-ts groups (the batch engine's RANGE-frame
-    * convention: all equal-ts rows see each other — and since equal-ts rows
-    * finalize at the same watermark, a tie straddling micro-batches still
-    * emits identical full-frame values). The frame can therefore never
-    * contain an event with ts > the row's ts: the zero-leakage invariant
-    * holds for ANY arrival order the watermark admits, at the price of
-    * emission latency = the watermark delay — and, as with every
-    * append-mode watermark aggregation (session_window included), rows the
-    * watermark never passes (the final watermark-delay of a stopped stream)
-    * stay buffered unemitted; a terminal flush requires advancing the
-    * watermark past them (e.g. a sentinel heartbeat event), not a special
-    * code path here.
-    *
-    * State is bounded: the window holds ≤ W of finalized events, pending
-    * holds ≤ watermark-delay of admitted rows. A group whose pending set is
-    * non-empty schedules an event-time timeout just past its max pending ts
-    * so buffered rows flush as soon as the (globally-driven) watermark
-    * passes them, even if the entity itself goes silent; an idle group with
-    * nothing pending times out and drops its state entirely.
-    */
   // java.sql.Timestamp → epoch micros (getTime carries millis; getNanos the
   // full sub-second part)
   private def micros(ts: java.sql.Timestamp): Long =
     ts.getTime / 1000 * 1000000L + ts.getNanos / 1000
 
-  /** The ONE finalization core both streaming-state APIs call — rows
-    * strictly below the watermark are final (nothing earlier can ever be
-    * admitted again; a whole equal-ts group crosses at once), each finalized
-    * equal-ts group sees the full trailing window of finalized events.
-    * Sharing the core is what makes legacy/TWS parity structural, not a
-    * promise kept by hand.
+  /** The finalization core of [[rollingStream]] — rows strictly below the
+    * watermark are final (nothing earlier can ever be admitted again; a
+    * whole equal-ts group crosses at once), each finalized equal-ts group
+    * sees the full trailing window of finalized events.
     *
     * Returns (state after this step, rows finalized this step).
     */
@@ -130,7 +95,7 @@ object Streaming {
   /** When this group next needs waking: as soon as the OLDEST pending row
     * becomes final (each row flushes promptly, not when the newest does);
     * with nothing pending, one window past the last finalized event (idle
-    * GC). Never at/below the current watermark — both timer APIs reject it.
+    * GC). Never at/below the current watermark — the timeout API rejects it.
     */
   private def nextWakeMs(st: RollState, wmMs: Long, windowMicros: Long): Long = {
     val wake =
@@ -140,6 +105,36 @@ object Streaming {
     math.max(wake, wmMs + 1L)
   }
 
+  /** Incremental trailing-window features (count/sum over `[ts − W, ts]`)
+    * via `flatMapGroupsWithState` — the custom-state streaming path for the
+    * rolling semantics session_window cannot express (SURVEY.md §2.8).
+    *
+    * Correctness under out-of-order arrival is by WATERMARK-DELAYED
+    * FINALIZATION, not by trusting arrival order: admitted rows buffer in
+    * state, and a row is emitted only once the watermark passes its event
+    * time — at which point Spark guarantees no earlier-ts row can ever be
+    * admitted, so finalization order IS event-time order, globally. Each
+    * finalized row's frame is computed from the sliding window of already-
+    * finalized events, in equal-ts groups (the batch engine's RANGE-frame
+    * convention: all equal-ts rows see each other — and since equal-ts rows
+    * finalize at the same watermark, a tie straddling micro-batches still
+    * emits identical full-frame values). The frame can therefore never
+    * contain an event with ts > the row's ts: the zero-leakage invariant
+    * holds for ANY arrival order the watermark admits, at the price of
+    * emission latency = the watermark delay — and, as with every
+    * append-mode watermark aggregation (session_window included), rows the
+    * watermark never passes (the final watermark-delay of a stopped stream)
+    * stay buffered unemitted; a terminal flush requires advancing the
+    * watermark past them (e.g. a sentinel heartbeat event), not a special
+    * code path here.
+    *
+    * State is bounded: the window holds ≤ W of finalized events, pending
+    * holds ≤ watermark-delay of admitted rows. A group whose pending set is
+    * non-empty schedules an event-time timeout just past its max pending ts
+    * so buffered rows flush as soon as the (globally-driven) watermark
+    * passes them, even if the entity itself goes silent; an idle group with
+    * nothing pending times out and drops its state entirely.
+    */
   def rollingStream(
       df: DataFrame, // streaming, transcript schema + value
       windowMicros: Long,
@@ -162,87 +157,5 @@ object Streaming {
           }
           out.iterator
         })
-  }
-
-  /** The SAME rolling semantics on `transformWithState` — Spark 4.x's
-    * maintained arbitrary-state API (StatefulProcessor + typed state
-    * variables + explicit timers; `flatMapGroupsWithState` above is the
-    * legacy surface, VERDICT r4 #7). Both delegate to [[advanceState]] /
-    * [[nextWakeMs]], so the two paths cannot drift; StreamingSuite pins
-    * cross-API parity on an out-of-order replay.
-    *
-    * Deployment note: transformWithState requires the RocksDB state-store
-    * provider (`spark.sql.streaming.stateStore.providerClass` =
-    * `...RocksDBStateStoreProvider`) — the right store at production state
-    * sizes anyway (the default HDFS-backed store keeps state on the heap).
-    * The legacy path stays the default entry (q41) only because it runs on
-    * ANY state store; on a RocksDB cluster prefer this one.
-    */
-  def rollingStreamTws(
-      df: DataFrame,
-      windowMicros: Long,
-      watermark: String): Dataset[RollingFeature] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.selectExpr("conv_id", "turn_idx", "ts", "value").as[RollingEvent]
-      .withWatermark("ts", watermark)
-      .groupByKey(_.conv_id)
-      .transformWithState(
-        new RollingProcessor(windowMicros),
-        TimeMode.EventTime(),
-        OutputMode.Append())
-  }
-
-  private class RollingProcessor(windowMicros: Long)
-      extends StatefulProcessor[String, RollingEvent, RollingFeature] {
-    @transient private var state: ValueState[RollState] = _
-    @transient private var wake: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      state = getHandle.getValueState[RollState](
-        "roll", Encoders.product[RollState], TTLConfig.NONE)
-      // one live timer per group, tracked so re-scheduling deletes the old
-      // one instead of accumulating stale timers in the store
-      wake = getHandle.getValueState[Long](
-        "wake", Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    private def step(
-        key: String,
-        rows: Iterator[RollingEvent],
-        tv: TimerValues,
-        timerFired: Boolean): Iterator[RollingFeature] = {
-      val prior = if (state.exists()) state.get() else RollState(Nil, Nil)
-      val wmMs = tv.getCurrentWatermarkInMs()
-      val (next, out) = advanceState(key, prior, rows, wmMs * 1000L, windowMicros)
-      if (next.pending.isEmpty && timerFired && out.isEmpty) {
-        state.clear()
-        if (wake.exists()) { getHandle.deleteTimer(wake.get()); wake.clear() }
-      } else {
-        state.update(next)
-        val t = nextWakeMs(next, wmMs, windowMicros)
-        if (!wake.exists() || wake.get() != t) {
-          if (wake.exists()) getHandle.deleteTimer(wake.get())
-          getHandle.registerTimer(t)
-          wake.update(t)
-        }
-      }
-      out.iterator
-    }
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[RollingEvent],
-        tv: TimerValues): Iterator[RollingFeature] =
-      step(key, rows, tv, timerFired = false)
-
-    override def handleExpiredTimer(
-        key: String,
-        tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[RollingFeature] = {
-      // this timer just fired — it no longer exists to delete
-      if (wake.exists() && wake.get() == info.getExpiryTimeInMs) wake.clear()
-      step(key, Iterator.empty, tv, timerFired = true)
-    }
   }
 }

@@ -55,29 +55,11 @@ object SkewPolicy {
     * result-invariant, property-pinned in SkewSuite).
     */
   case object Auto extends SkewPolicy
-  /** Auto with an explicit per-entity row threshold (rows > threshold ⇒ hot). */
-  final case class Guarded(hotThreshold: Long) extends SkewPolicy
   /** Single Window node, no detection job — for inputs KNOWN to carry no hot
     * entity (tiny dimensions, pre-bucketed slices) or for benchmarking the
     * raw window path. A whale entity on this path owns one task end-to-end.
     */
   case object WindowOnly extends SkewPolicy
-  /** Route from CALLER-SUPPLIED per-entity counts — the O10 lineage/manifest
-    * aggregation shape (SURVEY.md §4.2 "reuse, don't re-scan"): `counts`
-    * must carry the entity column plus `countCol` (e.g.
-    * `df.groupBy(entity).count()` — hand over a MATERIALIZED frame: the
-    * threshold filter evaluates the counts plan, so a lazy unpersisted
-    * groupBy would re-scan the input, which is the cost this policy exists
-    * to avoid; the session cache covers repeated calls either way). No
-    * detection scan runs at all; entities with count ≥ the session
-    * `spark.graft.rolling.hotThreshold` route to the chunked path. Exact
-    * counts, exact threshold — no sampling cutoff. Inside
-    * [[Resume.runBucketed]] jobs this preserves the strict one-input-scan
-    * budget that Auto's detection job would break.
-    */
-  final case class Precomputed(
-      counts: org.apache.spark.sql.DataFrame,
-      countCol: String = "count") extends SkewPolicy
 }
 
 /** One time-window rolling feature: agg(col) over the trailing window

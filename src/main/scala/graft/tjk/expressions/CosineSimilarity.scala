@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, SparkSession}
 
 /** Native cosine similarity over two `array<float>` columns, with
   * whole-stage codegen (SURVEY.md §4.3 escalation path (b): a custom scalar
@@ -120,30 +120,34 @@ object NativeFunctions {
     // Idempotence guard: re-registration is harmless but logs a WARN per
     // call; skip when this session already holds the functions.
     if (registeredIn eq spark) return
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      cosineName,
-      { exprs: Seq[Expression] => CosineSimilarity(exprs(0), exprs(1)) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      hyperplaneSigName,
-      { exprs: Seq[Expression] => HyperplaneSignature(exprs(0), exprs(1)) },
-      "built-in")
+    define(spark, cosineName, 2)(e => CosineSimilarity(e(0), e(1)))
+    define(spark, hyperplaneSigName, 2)(e => HyperplaneSignature(e(0), e(1)))
     // Aggregate functions are returned bare; the analyzer wraps them in an
     // AggregateExpression at resolution (same as the builtin registry).
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      windowNUniqueName,
-      { exprs: Seq[Expression] => WindowNUnique(exprs(0)) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      minhashSigName,
-      { exprs: Seq[Expression] => MinHashSig(exprs(0), exprs(1)) },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      simhashName,
-      { exprs: Seq[Expression] => SimHashAgg(exprs(0)) },
-      "built-in")
+    define(spark, windowNUniqueName, 1)(e => WindowNUnique(e(0)))
+    define(spark, minhashSigName, 2)(e => MinHashSig(e(0), e(1)))
+    define(spark, simhashName, 1)(e => SimHashAgg(e(0)))
     registeredIn = spark
   }
+
+  /** Registers `name` behind an argument-count check: a wrong count is the
+    * builtin registry's WRONG_NUM_ARGS analysis error naming the function,
+    * never an IndexOutOfBounds from `build` or silently dropped arguments.
+    */
+  private def define(spark: SparkSession, name: String, arity: Int)(
+      build: Seq[Expression] => Expression): Unit =
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      name,
+      { exprs: Seq[Expression] =>
+        if (exprs.size != arity)
+          throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION", Map(
+            "functionName" -> s"`$name`",
+            "expectedNum" -> arity.toString,
+            "actualNum" -> exprs.size.toString,
+            "docroot" -> org.apache.spark.SPARK_DOC_ROOT))
+        build(exprs)
+      },
+      "built-in")
 
   /** Column-API handle: cosineNative($"a", $"b") (requires register()). */
   def cosineNative(spark: SparkSession, a: Column, b: Column): Column = {

@@ -121,7 +121,7 @@ case class AsOfJoinExec(
             while (advancing && rBuf.hasNext && cmp(rEnt.eval(rBuf.head), e) == 0) {
               val rtAny = rTs.eval(rBuf.head)
               if (rtAny == null) {
-                // A null event ts can never be an as-of match. Guarded HERE,
+                // A null event ts can never be an as-of match. Checked HERE,
                 // not only in the asofJoinNative wrapper's filter: the
                 // strategy is also injectable via spark.sql.extensions, so
                 // other plans can reach this exec — and an unboxed

@@ -85,4 +85,25 @@ class CosineExprSuite extends SparkTestBase {
     assert("\\*\\(\\d+\\) Project \\[tjk_cosine".r.findFirstIn(plan).isDefined, plan)
     assert(df.count() == e.count()) // self-cosine == 1.0 > 0.5
   }
+
+  test("tjk_* SQL functions reject a wrong argument count at analysis") {
+    NativeFunctions.register(spark)
+    val df = Seq(Seq(1.0f, 0.0f)).toDF("v")
+    Seq(
+      NativeFunctions.cosineName -> 2,
+      NativeFunctions.hyperplaneSigName -> 2,
+      NativeFunctions.windowNUniqueName -> 1,
+      NativeFunctions.minhashSigName -> 2,
+      NativeFunctions.simhashName -> 1).foreach { case (name, arity) =>
+      Seq(arity - 1, arity + 1).foreach { n =>
+        val call = s"$name(${Seq.fill(n)("v").mkString(", ")})"
+        val ex = intercept[org.apache.spark.sql.AnalysisException] {
+          df.selectExpr(call)
+        }
+        assert(ex.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION", s"$call: $ex")
+        assert(ex.getMessage.contains(s"`$name` requires $arity parameters") &&
+          ex.getMessage.contains(s"actual number is $n"), s"$call: ${ex.getMessage}")
+      }
+    }
+  }
 }

@@ -104,9 +104,10 @@ class PlanShapeSuite extends SparkTestBase {
     val skewed = Gen.transcripts(spark, nConvs = 10, seed = 42L,
         medianLen = 8, hotFactor = 40)
       .withColumn("value", length(col("text")).cast("double"))
-    val df = Rolling.rollingAgg(skewed, "conv_id", "ts",
-      Seq(RollingSpec("value", Agg.Sum, Duration.ofHours(1))),
-      SkewPolicy.Guarded(10L))
+    val df = withHotThreshold(10L) {
+      Rolling.rollingAgg(skewed, "conv_id", "ts",
+        Seq(RollingSpec("value", Agg.Sum, Duration.ofHours(1))))
+    }
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("Union"), s"guard did not route (no union):\n$plan")
     assert(exchanges(df) == 2, plan) // window(conv_id) + chunk(conv_id,__chunk)

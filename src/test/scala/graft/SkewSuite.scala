@@ -90,8 +90,9 @@ class SkewSuite extends SparkTestBase {
         round(col("mean_value_3600s"), 9).as("m"),
         col("nunique_tool_3600s"),
         round(col("sum_value_3600s_strict"), 9).as("ss")))
-    val guarded = fp(Rolling.rollingAgg(skewed, "conv_id", "ts", specs,
-      SkewPolicy.Guarded(100L)))
+    val guarded = fp(withHotThreshold(100L) {
+      Rolling.rollingAgg(skewed, "conv_id", "ts", specs)
+    })
     val plain = fp(Rolling.rollingAgg(skewed, "conv_id", "ts", specs,
       SkewPolicy.WindowOnly))
     assert(guarded == plain)
@@ -115,8 +116,9 @@ class SkewSuite extends SparkTestBase {
       RollingSpec("value", Agg.Sum, H1),
       RollingSpec("value", Agg.NUnique, H1))
     assert(Rolling.detectHotKeys(df, "conv_id", 10L).size > Rolling.HotBroadcastMin)
-    val guarded = Rolling.rollingAgg(df, "conv_id", "ts", specs,
-      SkewPolicy.Guarded(10L))
+    val guarded = withHotThreshold(10L) {
+      Rolling.rollingAgg(df, "conv_id", "ts", specs)
+    }
     val plan = guarded.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
       s"hot routing did not broadcast:\n${plan.take(1500)}")
@@ -141,9 +143,10 @@ class SkewSuite extends SparkTestBase {
       (0 until 40).map(i => (if (i < 30) "hot" else null, i,
         new java.sql.Timestamp(1700000000000L + i * 1000L), i.toDouble))
     val df = rows.toDF("conv_id", "turn_idx", "ts", "value")
-    val out = Rolling.rollingAgg(df, "conv_id", "ts",
-        Seq(RollingSpec("value", Agg.Count, Duration.ofHours(1))),
-        SkewPolicy.Guarded(10L))
+    val out = withHotThreshold(10L) {
+      Rolling.rollingAgg(df, "conv_id", "ts",
+        Seq(RollingSpec("value", Agg.Count, Duration.ofHours(1))))
+    }
     assert(out.count() == 40L)
     val nulls = out.where(col("conv_id").isNull)
       .orderBy("turn_idx").collect()
@@ -189,11 +192,11 @@ class SkewSuite extends SparkTestBase {
       timestamp_micros(lit(1700000000000000L) + col("id") * 60000L).as("ts"),
       (col("id") % 1000).cast("double").as("value"))
     val t0 = System.nanoTime()
-    val out = Rolling.rollingAgg(whale, "conv_id", "ts",
+    val out = withHotThreshold(100000L) {
+      Rolling.rollingAgg(whale, "conv_id", "ts",
         Seq(RollingSpec("value", Agg.Sum, d24),
-          RollingSpec("value", Agg.NUnique, d24)),
-        SkewPolicy.Guarded(100000L))
-      .select("turn_idx", "sum_value_86400s", "nunique_value_86400s")
+          RollingSpec("value", Agg.NUnique, d24)))
+    }.select("turn_idx", "sum_value_86400s", "nunique_value_86400s")
     val got = out.where(col("turn_idx").isin(0, 999, 123456, 999999))
       .collect().map(r => r.getInt(0) -> ((r.getDouble(1), r.getLong(2)))).toMap
     val sec = (System.nanoTime() - t0) / 1e9
@@ -273,63 +276,41 @@ class SkewSuite extends SparkTestBase {
     // calls over the SAME input + threshold must share one detection scan.
     Rolling.clearDetectionCache(spark)
     val before = Rolling.detectionJobs.get()
-    Rolling.rollingAgg(skewed, "conv_id", "ts",
-      Seq(RollingSpec("value", Agg.Sum, H1)), SkewPolicy.Guarded(101L)).count()
-    Rolling.rollingAgg(skewed, "conv_id", "ts",
-      Seq(RollingSpec("value", Agg.Count, H1)), SkewPolicy.Guarded(101L)).count()
+    withHotThreshold(101L) {
+      Rolling.rollingAgg(skewed, "conv_id", "ts",
+        Seq(RollingSpec("value", Agg.Sum, H1))).count()
+      Rolling.rollingAgg(skewed, "conv_id", "ts",
+        Seq(RollingSpec("value", Agg.Count, H1))).count()
+    }
     assert(Rolling.detectionJobs.get() - before == 1L,
       s"expected 1 detection job, ran ${Rolling.detectionJobs.get() - before}")
     // Different threshold = different cache key = a fresh (correct) scan.
-    Rolling.rollingAgg(skewed, "conv_id", "ts",
-      Seq(RollingSpec("value", Agg.Sum, H1)), SkewPolicy.Guarded(102L)).count()
+    withHotThreshold(102L) {
+      Rolling.rollingAgg(skewed, "conv_id", "ts",
+        Seq(RollingSpec("value", Agg.Sum, H1))).count()
+    }
     assert(Rolling.detectionJobs.get() - before == 2L)
   }
 
-  test("Precomputed counts route the whale with ZERO detection scans") {
-    val counts = skewed.groupBy("conv_id").count()
-    val before = Rolling.detectionJobs.get()
-    spark.conf.set(Rolling.HotThresholdKey, "100")
-    try {
-      val specs = Seq(RollingSpec("value", Agg.Sum, H1))
-      val out = Rolling.rollingAgg(skewed, "conv_id", "ts", specs,
-        SkewPolicy.Precomputed(counts))
-      // the whale actually routed (hot/cold union shape) …
-      assert(out.queryExecution.executedPlan.toString.contains("Union"),
-        "Precomputed policy did not route any entity")
-      // … with identical results …
-      def fp(df: org.apache.spark.sql.DataFrame) = Lineage.tableFingerprint(
-        df.select(col("conv_id"), col("turn_idx"),
-          round(col("sum_value_3600s"), 9).as("s")))
-      assert(fp(out) ==
-        fp(Rolling.rollingAgg(skewed, "conv_id", "ts", specs, SkewPolicy.WindowOnly)))
-      // … and no detection scan of the input ran.
-      assert(Rolling.detectionJobs.get() == before)
-    } finally spark.conf.unset(Rolling.HotThresholdKey)
-  }
-
-  test("entityManifest auto-wires routing: ZERO detection jobs under default Auto") {
-    // VERDICT r4 #6: a manifest-bearing pipeline must not re-scan the input
-    // to re-derive counts the O10 pass already aggregated. entityManifest
-    // publishes its top-K to the session registry; a later backfill over
-    // the SAME input under the DEFAULT policy routes from it.
-    Rolling.clearDetectionCache(spark)
-    val manifest = Lineage.entityManifest(skewed, "conv_id") // the O10 pass
-    assert(manifest.columns.toSeq == Seq("conv_id", "row_count"))
-    val before = Rolling.detectionJobs.get()
-    spark.conf.set(Rolling.HotThresholdKey, "100")
-    try {
-      val spec = FeatureSpec(rolling = Seq(RollingSpec("value", Agg.Sum, H1)))
-      val out = Pipeline.backfill(skewed, spec) // default SkewPolicy.Auto
-      assert(out.queryExecution.executedPlan.toString.contains("Union"),
-        "registry-fed Auto policy did not route the whale")
-      def fp(df: org.apache.spark.sql.DataFrame) = Lineage.tableFingerprint(
-        df.select(col("conv_id"), col("turn_idx"),
-          round(col("sum_value_3600s"), 9).as("s")))
-      assert(fp(out) == fp(Pipeline.backfill(skewed, spec,
-        skewPolicy = SkewPolicy.WindowOnly)))
+  test("hotThreshold <= 0 disables detection: no detection job, no routing") {
+    val specs = Seq(RollingSpec("value", Agg.Sum, H1))
+    def union(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.toString.contains("Union")
+    // the same input routes at a positive threshold, so the check below
+    // is not vacuous
+    assert(union(withHotThreshold(100L) {
+      Rolling.rollingAgg(skewed, "conv_id", "ts", specs)
+    }), "fixture whale did not route at threshold 100")
+    Seq(0L, -1L).foreach { t =>
+      Rolling.clearDetectionCache(spark)
+      val before = Rolling.detectionJobs.get()
+      val out = withHotThreshold(t) {
+        Rolling.rollingAgg(skewed, "conv_id", "ts", specs)
+      }
       assert(Rolling.detectionJobs.get() == before,
-        "backfill over a manifest-bearing input still ran a detection scan")
-    } finally spark.conf.unset(Rolling.HotThresholdKey)
+        s"threshold $t still ran a detection job")
+      assert(!union(out), s"threshold $t still routed hot keys")
+    }
   }
 
   test("WindowNUnique rejects binary input at analysis (reference-equality hazard)") {
@@ -384,7 +365,7 @@ class SkewSuite extends SparkTestBase {
       Rolling.rollingAgg(df, "conv_id", "ts", specs, p)
         .select(col("conv_id"), col("turn_idx"),
           round(col("sum_value_3600s"), 9).as("s"), col("count_value_3600s")))
-    assert(fp(SkewPolicy.Guarded(10L)) == fp(SkewPolicy.WindowOnly))
+    assert(withHotThreshold(10L)(fp(SkewPolicy.Auto)) == fp(SkewPolicy.WindowOnly))
     // and a DIRECT chunked call on null-ts data fails loudly, never NPEs
     val ex = intercept[org.apache.spark.SparkException] {
       Skew.chunkedRollingAgg(df, "conv_id", "ts", specs,

@@ -93,64 +93,6 @@ class StreamingSuite extends SparkTestBase {
     }
   }
 
-  test("transformWithState rolling == batch (RocksDB store, out-of-order replay)") {
-    // The SAME adversarial replay as the legacy test, through the
-    // maintained arbitrary-state API (VERDICT r4 #7). transformWithState
-    // requires the RocksDB state-store provider — set for this query,
-    // restored after (the legacy path must keep working on the default
-    // store, which is exactly why it remains the q41 entry).
-    implicit val sc = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val turns = Gen.turnsSeq(43L, 5, 30).sortBy(t => (t.ts.getTime, t.conv_id, t.turn_idx))
-      val evs = turns.map(t => Streaming.RollingEvent(
-        t.conv_id, t.turn_idx, t.ts, t.text.length.toDouble))
-      val stream = MemoryStream[Streaming.RollingEvent]
-      val q = Streaming.rollingStreamTws(stream.toDF(),
-          windowMicros = 3600L * 1000000, watermark = "10 minutes")
-        .writeStream.format("memory").queryName("roll_tws")
-        .outputMode("append").start()
-      val (a0, rest) = evs.splitAt(evs.size / 3)
-      val (b0, c0) = rest.splitAt(rest.size / 2)
-      val aMax = a0.map(_.ts.getTime).max
-      val (lateRows, a) = a0.partition(e => e.ts.getTime > aMax - 9 * 60 * 1000L)
-      assert(lateRows.nonEmpty, "fixture must actually exercise late arrival")
-      stream.addData(a); q.processAllAvailable()
-      stream.addData(lateRows ++ b0); q.processAllAvailable()
-      stream.addData(c0); q.processAllAvailable()
-      val maxTs = evs.map(_.ts.getTime).max
-      stream.addData(Seq(Streaming.RollingEvent("zzz_flush", 0,
-        new Timestamp(maxTs + 3600L * 1000), 0.0)))
-      q.processAllAvailable()
-      stream.addData(Seq(Streaming.RollingEvent("zzz_flush", 1,
-        new Timestamp(maxTs + 7200L * 1000), 0.0)))
-      q.processAllAvailable()
-      val streamed = spark.table("roll_tws")
-        .where(col("conv_id") =!= "zzz_flush")
-        .collect().map(r => (r.getString(0), r.getInt(1)) ->
-          ((r.getLong(3), r.getDouble(4)))).toMap
-      q.stop()
-      val batch = Rolling.rollingAgg(
-          turnsDf(turns), "conv_id", "ts",
-          Seq(RollingSpec("value", Agg.Count, java.time.Duration.ofHours(1)),
-            RollingSpec("value", Agg.Sum, java.time.Duration.ofHours(1))))
-        .select("conv_id", "turn_idx", "count_value_3600s", "sum_value_3600s")
-        .collect().map(r => (r.getString(0), r.getInt(1)) ->
-          ((r.getLong(2), r.getDouble(3)))).toMap
-      assert(streamed.keySet == batch.keySet)
-      batch.foreach { case (k, (bc, bs)) =>
-        val (sc2, ss) = streamed(k)
-        assert(sc2 == bc, s"count mismatch at $k")
-        assert(NaiveOracle.allclose(Some(ss), Some(bs)), s"sum mismatch at $k: $ss vs $bs")
-      }
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   test("streaming dedup drops duplicates within the watermark") {
     implicit val sc = spark.sqlContext
     val t0 = new Timestamp(1767225600000L)

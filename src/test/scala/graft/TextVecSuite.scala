@@ -295,7 +295,7 @@ class TextVecSuite extends SparkTestBase {
   test("q35 ASCII guard fails loudly on a non-ASCII corpus") {
     val bad = Seq((1L, "plain ascii"), (2L, "héllo wörld")).toDF("doc_id", "text")
     val ex = intercept[Exception] {
-      TextVecQueries.asciiGuarded(bad).select(length(col("text"))).collect()
+      TextVecQueries.requireAscii(bad).select(length(col("text"))).collect()
     }
     assert(ex.getMessage.contains("ASCII") ||
       Option(ex.getCause).exists(_.getMessage.contains("ASCII")))
