@@ -278,18 +278,6 @@ object CoreQueries {
       .orderBy("conv_id", "turn_idx")
   }
 
-  /** Same semantics through the native Catalyst operator (AsOfJoinPlan →
-    * AsOfJoinExec, SURVEY.md §4.3 ext 2) — oracle-checked against the
-    * identical ASOF SQL as the primary path.
-    */
-  def asofNative(spark: SparkSession, dir: String): DataFrame = {
-    val spine = t(spark, dir).where(pmod(col("turn_idx"), lit(5)) === 0)
-      .select("conv_id", "turn_idx", "ts")
-    AsOf.asofJoinNative(spine, purchases(spark, dir), "conv_id", "ts", "ev_ts", Seq("pv"))
-      .select("conv_id", "turn_idx", "pv")
-      .orderBy("conv_id", "turn_idx")
-  }
-
   // ---------------------------------------------------------------- O7: sessionize
 
   def sessionizeRows(spark: SparkSession, dir: String): DataFrame =
@@ -698,8 +686,8 @@ object CoreQueries {
           "resumed manifests diverged from the originals")
         first
       } finally {
-        // scratch demonstration output — reclaim it (Verify/Bench/Profile
-        // would otherwise each leave an 8-bucket dump under /tmp per call)
+        // scratch demonstration output — reclaim it (Verify/Bench would
+        // otherwise each leave an 8-bucket dump under /tmp per call)
         deleteRec(new java.io.File(outDir))
       }
     import spark.implicits._

@@ -10,26 +10,20 @@ import graft.tjk._
   * The north rule's two-cluster-size criterion (N vs 4N executors,
   * efficiency ≥ 0.8) cannot use a real cluster in this sandbox: we run the
   * SAME job on the SAME pre-generated input at two parallelism levels
-  * (local[8] vs local[32]) and report throughput at both plus
-  * efficiency = (T_8 / T_32) / 4.
+  * (local[1] vs local[4] on a 4-core box, the only N-vs-4N pair it offers)
+  * and report throughput at both plus efficiency = (T_1 / T_4) / 4.
   *
-  * Usage: ScaleBench <cpus> [nConvs] [medianLen]
+  * Usage: ScaleBench [cpus] [nConvs] [medianLen]
+  *  - cpus defaults to the machine's available processors,
   *  - generates deterministic transcripts (seed 42) to /tmp/tjk_bench once,
   *  - times the flagship backfill (rolling {1h,24h} × {count,sum,nunique} +
   *    lag{1,3} + as-of join to a per-conv side table + sessionize(30m) →
   *    session aggregate) cold and warm,
-  *  - prints one JSON line per run.
+  *  - prints one JSON line: cold seconds and the min of TJK_WARMS warm runs.
   */
 object ScaleBench {
 
-  /** 1-arg overload follows the SAME TJK_ASOF-derived default as the bench
-    * harness (union unless TJK_ASOF=native), so the API default and the
-    * benched config cannot silently diverge.
-    */
-  def flagship(turns: DataFrame): DataFrame =
-    flagship(turns, native = sys.env.get("TJK_ASOF").contains("native"))
-
-  def flagship(turns: DataFrame, native: Boolean): DataFrame = {
+  def flagship(turns: DataFrame): DataFrame = {
     val withValue = turns.withColumn("value", length(col("text")).cast("double"))
     val spec = FeatureSpec(
       rolling = Seq(
@@ -54,24 +48,8 @@ object ScaleBench {
     val side = withValue.where(col("tool") === "code")
       .select(col("conv_id"), col("ts").as("side_ts"),
         col("turn_idx").cast("long").as("side_tie"), col("value").as("side_value"))
-    // Two as-of paths, A/B-benchable (TJK_ASOF=union|native|both):
-    //  - native (AsOfJoinExec): the features side is ALREADY hash-partitioned
-    //    by conv_id from the window exchange and the operator preserves it,
-    //    so only the (much smaller) side table shuffles, and the final
-    //    session groupBy reuses the same partitioning — ONE full-width
-    //    exchange for the whole job (pinned by PlanShapeSuite). On a real
-    //    cluster exchanges are network; this is the 100 TB cost structure.
-    //  - union (window-tag): re-shuffles the unioned 100M+ rows and loses
-    //    the partitioning through its struct packing (3 full-width
-    //    exchanges), but every operator is codegen'd; in local mode, where
-    //    an exchange is a memory/disk copy, this can win on CPU.
-    val joined =
-      if (native)
-        AsOf.asofJoinNative(features, side, "conv_id", "ts", "side_ts",
-          payload = Seq("side_value"), tieCol = Some("side_tie"))
-      else
-        AsOf.asofJoin(features, side, "conv_id", "ts", "side_ts",
-          payload = Seq("side_value"), tieCol = Some("side_tie"))
+    val joined = AsOf.asofJoin(features, side, "conv_id", "ts", "side_ts",
+      payload = Seq("side_value"), tieCol = Some("side_tie"))
     // Terminal aggregation so .count() executes every operator (§3.3).
     joined.groupBy("conv_id", "session_id").agg(
       count(lit(1)).as("n_turns"),
@@ -83,7 +61,8 @@ object ScaleBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = args.headOption.getOrElse("32").toInt
+    val cpus = args.headOption.map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val nConvs = args.lift(1).map(_.toLong).getOrElse(1000000L)
     val medianLen = args.lift(2).map(_.toInt).getOrElse(20)
     val dataDir = s"/tmp/tjk_bench/turns_${nConvs}_$medianLen"
@@ -113,34 +92,24 @@ object ScaleBench {
     val turns = spark.read.parquet(dataDir)
     val total = turns.count()
 
-    def run(label: String, native: Boolean): Double = {
+    def run(label: String): Double = {
       val t0 = System.nanoTime()
-      val n = flagship(turns, native).count()
+      val n = flagship(turns).count()
       val sec = (System.nanoTime() - t0) / 1e9
       System.err.println(f"[scalebench] $label: $n sessions in $sec%.1f s")
       sec
     }
-    val variants = sys.env.getOrElse("TJK_ASOF", "union") match {
-      case "both" => Seq("union" -> false, "native" -> true)
-      case "native" => Seq("native" -> true)
-      case _ => Seq("union" -> false)
-    }
     val warms = sys.env.get("TJK_WARMS").map(_.toInt).getOrElse(5)
-    val colds = variants.map { case (name, nat) => name -> run(s"cold-$name", nat) }.toMap
-    // Interleave the variants' warm runs so both see the same interference
-    // window, and take min-of-N per variant: this sandbox shows 2-3x
-    // run-to-run swings from external (hypervisor-level) noise — the minimum
-    // is the only statistic that reflects the job rather than the neighbors.
-    val times = (1 to warms).flatMap { i =>
-      variants.map { case (name, nat) => name -> run(s"warm$i-$name", nat) }
-    }.groupBy(_._1).view.mapValues(_.map(_._2).min).toMap
-    variants.foreach { case (name, _) =>
-      println(
-        s"""{"bench":"flagship_backfill","variant":"$name","cpus":$cpus,""" +
-        s""""turns":$total,"cold_sec":${colds(name)},"warm_sec":${times(name)},""" +
-        s""""cold_turns_per_sec":${(total / colds(name)).toLong},""" +
-        s""""warm_turns_per_sec":${(total / times(name)).toLong}}""")
-    }
+    val cold = run("cold")
+    // min-of-N: this sandbox shows 2-3x run-to-run swings from external
+    // (hypervisor-level) noise — the minimum is the only statistic that
+    // reflects the job rather than the neighbors.
+    val warm = (1 to warms).map(i => run(s"warm$i")).min
+    println(
+      s"""{"bench":"flagship_backfill","cpus":$cpus,""" +
+      s""""turns":$total,"cold_sec":$cold,"warm_sec":$warm,""" +
+      s""""cold_turns_per_sec":${(total / cold).toLong},""" +
+      s""""warm_turns_per_sec":${(total / warm).toLong}}""")
     spark.stop()
   }
 }

@@ -122,74 +122,6 @@ object AsOf {
     }(Encoders.row(outSchema))
   }
 
-  /** Native Catalyst path (SURVEY.md §4.3 extension 2): plans through the
-    * custom [[graft.tjk.plans.AsOfJoinPlan]] logical node →
-    * [[graft.tjk.plans.AsOfJoinExec]] streaming sort-merge operator.
-    * Same semantics and signature as [[asofJoin]]; one exchange per side,
-    * O(1) merge state. The strategy is injected into the session
-    * idempotently, so this works on any session (incl. the driver-owned
-    * Verify/Bench sessions); production can instead set
-    * `spark.sql.extensions=graft.tjk.plans.TjkExtensions`.
-    */
-  def asofJoinNative(
-      spine: DataFrame,
-      events: DataFrame,
-      entity: String,
-      spineTs: String,
-      eventTs: String,
-      payload: Seq[String],
-      tieCol: Option[String] = None,
-      tolerance: Option[Duration] = None,
-      strict: Boolean = false,
-      matchedTsCol: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.tjkbridge.Bridge
-    val collisions = payload.toSet.intersect(spine.columns.toSet)
-    require(collisions.isEmpty, s"payload collides with spine columns: $collisions")
-    requireMatchedTsColFree(matchedTsCol, spine, payload)
-    // Reserved internal attribute names: a spine __ltm would be silently
-    // replaced by withColumn below; a payload __re/__rtm/__rtie would shadow
-    // the right side's join attributes.
-    require(!spine.columns.contains("__ltm"),
-      "spine column name __ltm is reserved by asofJoinNative")
-    val reservedPay = payload.toSet.intersect(Set("__re", "__rtm", "__rtie"))
-    require(reservedPay.isEmpty,
-      s"payload column names reserved by asofJoinNative: $reservedPay")
-    val spark = spine.sparkSession
-    Bridge.injectStrategy(spark, plans.AsOfJoinStrategy)
-
-    val lp = spine.withColumn("__ltm", tsMicros(col(spineTs)))
-    // Alias every right column (fresh exprIds) so the binary node cannot
-    // carry conflicting attribute ids even for self-as-of.
-    val rp = events
-      .where(col(entity).isNotNull && col(eventTs).isNotNull)
-      .select(
-        col(entity).as("__re") +:
-          tsMicros(col(eventTs)).as("__rtm") +:
-          tieCol.map(c => col(c).cast("long")).getOrElse(lit(0L)).as("__rtie") +:
-          payload.map(p => col(p).as(p)): _*)
-
-    val lPlan = Bridge.analyzedPlan(lp)
-    val rPlan = Bridge.analyzedPlan(rp)
-    def attr(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        name: String) =
-      plan.output.find(_.name == name).getOrElse(
-        sys.error(s"attribute $name missing from ${plan.output.map(_.name)}"))
-    val payAttrs = payload.map(attr(rPlan, _)) ++
-      (if (matchedTsCol.isDefined) Seq(attr(rPlan, "__rtm")) else Nil)
-
-    val node = plans.AsOfJoinPlan(
-      lPlan, rPlan,
-      attr(lPlan, entity), attr(rPlan, "__re"),
-      attr(lPlan, "__ltm"), attr(rPlan, "__rtm"),
-      attr(rPlan, "__rtie"), payAttrs,
-      strict, tolerance.map(d => d.toMillis * 1000L))
-
-    val out = Bridge.ofRows(spark, node)
-    val finalCols = spine.columns.toSeq.map(col) ++ payload.map(col) ++
-      matchedTsCol.map(n => timestamp_micros(col("__rtm")).as(n)).toSeq
-    out.select(finalCols: _*)
-  }
-
   /** Build the tagged, union-compatible sides. Tag ordering encodes the
     * strictness: non-strict ⇒ events sort before spine at equal ts (an event
     * at exactly asof_ts IS visible); strict ⇒ spine first (it is NOT).
@@ -210,8 +142,7 @@ object AsOf {
     // that name would create a duplicate struct field and surface later as
     // an opaque AMBIGUOUS_REFERENCE_TO_FIELDS from finish()'s getField —
     // while the index-based merge path would silently ACCEPT it, letting
-    // the two "identical results" paths diverge. Reject at the boundary,
-    // like asofJoinNative does for its reserved names.
+    // the two "identical results" paths diverge. Reject at the boundary.
     require(!payload.contains("__mts"),
       "payload column name __mts is reserved by asofJoin")
     val evTag = if (strict) 1 else 0

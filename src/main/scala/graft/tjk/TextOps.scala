@@ -342,11 +342,9 @@ object TextOps {
 
   /** MinHash LSH band rows (doc_id, band, h) from a signature column: band
     * hash = md5 over the band's signature slice, '|'-joined (array form of
-    * the original concat_ws over named columns — same bytes). Shared with
-    * the Profile stage-timer so the profiled banding can never drift from
-    * the production banding.
+    * the original concat_ws over named columns — same bytes).
     */
-  private[graft] def minhashBandRows(sig: DataFrame): DataFrame = {
+  private def minhashBandRows(sig: DataFrame): DataFrame = {
     val r = MinHashK / Bands
     sig.select(col("doc_id"), explode(expr(
         s"transform(sequence(0, ${Bands - 1}), " +

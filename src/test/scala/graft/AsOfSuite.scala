@@ -45,9 +45,6 @@ class AsOfSuite extends SparkTestBase {
   private val merge = (s: DataFrame, e: DataFrame, en: String, st: String,
       et: String, p: Seq[String], tie: Option[String], tol: Option[Duration],
       strict: Boolean) => AsOf.asofJoinMerge(s, e, en, st, et, p, tie, tol, strict)
-  private val native = (s: DataFrame, e: DataFrame, en: String, st: String,
-      et: String, p: Seq[String], tie: Option[String], tol: Option[Duration],
-      strict: Boolean) => AsOf.asofJoinNative(s, e, en, st, et, p, tie, tol, strict)
 
   private def naive(strict: Boolean, tol: Option[Duration]): Map[Int, Option[Double]] = {
     val sp = spine.map { case (e, _, t) => (e, t.getTime * 1000L) }
@@ -57,7 +54,7 @@ class AsOfSuite extends SparkTestBase {
   }
 
   for ((name, f) <- Seq("window-primary" -> primary,
-      "sort-merge-fallback" -> merge, "native-catalyst" -> native)) {
+      "sort-merge-fallback" -> merge)) {
     test(s"$name: backward, ties by greatest tie, exact matches included") {
       val got = run(f, strict = false, tol = None)
       assert(got == Map(0 -> None, 1 -> Some(2.0), 2 -> Some(2.0),
@@ -81,6 +78,35 @@ class AsOfSuite extends SparkTestBase {
     }
   }
 
+  test("null spine ts, null event ts and null entities: every spine row once, unmatched ⇒ null") {
+    val ev = Seq[(String, Timestamp, Long, Double)](
+      ("a", ts(0), 1L, 1.0),
+      ("a", null, 2L, 2.0),    // null event ts: never a match
+      (null, ts(0), 3L, 3.0),  // null event entity: never a match
+      ("b", ts(100), 4L, 4.0)).toDF("conv_id", "ev_ts", "tie", "pv")
+    val sp = Seq[(String, Int, Timestamp)](
+      ("a", 0, ts(10)),        // matches the one valid "a" event
+      ("a", 1, null),          // null spine ts: nothing precedes it
+      ("a", 2, ts(-10)),       // before every valid "a" event
+      (null, 3, ts(10)),       // null spine entity: no entity to match
+      (null, 4, null),
+      ("b", 5, null),
+      ("b", 6, ts(200))).toDF("conv_id", "turn_idx", "ts")
+    val want = Map(0 -> Some(1.0), 1 -> None, 2 -> None, 3 -> None,
+      4 -> None, 5 -> None, 6 -> Some(4.0))
+    for (strict <- Seq(false, true); tol <- Seq(None, Some(Duration.ofHours(1)))) {
+      val got = Seq(primary, merge).map { f =>
+        val rows = f(sp, ev, "conv_id", "ts", "ev_ts", Seq("pv"), Some("tie"), tol, strict)
+          .select("turn_idx", "pv").collect()
+        val ids = rows.map(_.getInt(0))
+        assert(ids.sorted.toSeq == (0 to 6), s"spine rows lost or duplicated: ${ids.sorted.toSeq}")
+        rows.map(r => r.getInt(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
+      }
+      assert(got.head == want, s"strict=$strict tol=$tol")
+      assert(got(1) == got.head, s"primary vs merge strict=$strict tol=$tol")
+    }
+  }
+
   for (seed <- Seq(42L, 43L)) {
     test(s"primary == fallback == naive on generated data (seed=$seed)") {
       val turns = Gen.turnsSeq(seed, 6, 50)
@@ -99,11 +125,6 @@ class AsOfSuite extends SparkTestBase {
           .map(r => (r.getString(0), r.getInt(1)) ->
             (if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
         assert(a == b, s"primary vs fallback strict=$strict tol=$tol")
-        val c = AsOf.asofJoinNative(sp, ev, "conv_id", "ts", "ev_ts", Seq("pv"), Some("tie"), tol, strict)
-          .select("conv_id", "turn_idx", "pv").collect()
-          .map(r => (r.getString(0), r.getInt(1)) ->
-            (if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
-        assert(a == c, s"primary vs native strict=$strict tol=$tol")
         val nsp = turns.map(t => (t.conv_id, NaiveOracle.micros(t.ts)))
         val nev = evSeq.map(t => (t.conv_id, NaiveOracle.micros(t.ts), t.turn_idx.toLong, t.text.length.toDouble))
         val n = turns.map(t => (t.conv_id, t.turn_idx))

@@ -71,7 +71,7 @@ class CosineExprSuite extends SparkTestBase {
     assert(topk.find(_._1 == 2L).get._2 == 0.0)
     // exact pair path keeps the convention too (below threshold ⇒ excluded,
     // same as the LSH verify would conclude)
-    val pairs = VectorOps.cosineNearDupPairsFast(
+    val pairs = VectorReference.cosineNearDupPairsFast(
       Seq((1L, unit), (2L, zero)).toDF("vec_id", "embedding"), threshold = 0.1)
     assert(pairs.count() == 0)
   }

@@ -49,24 +49,13 @@ class PlanShapeSuite extends SparkTestBase {
     assert(exchanges(df) == 1)
   }
 
-  test("native as-of operator plans as AsOfJoinExec, one shuffle per side") {
-    val spine = turns.select("conv_id", "turn_idx", "ts")
-    val ev = turns.where(col("tool").isNotNull)
-      .select(col("conv_id"), col("ts").as("ev_ts"), col("value").as("pv"))
-    val df = AsOf.asofJoinNative(spine, ev, "conv_id", "ts", "ev_ts", Seq("pv"))
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("AsOfJoin "), s"native operator missing:\n$plan")
-    assert(exchanges(df) == 2) // one per side; no union'd third exchange
-  }
-
-  test("flagship backfill + native as-of + session agg: ONE full-width shuffle") {
-    // The whole pipeline: windows partition by conv_id (1 exchange), the
-    // native as-of preserves that partitioning (side table adds 1 small
-    // exchange), and the final (conv_id, session_id) groupBy is satisfied by
-    // HashPartitioning(conv_id) — NO third exchange. This is the flagship's
-    // cost structure at 100 TB.
-    val df = ScaleBench.flagship(turnsDf(Gen.turnsSeq(42L, 4, 20)), native = true)
-    assert(exchanges(df) == 2, df.queryExecution.executedPlan.toString)
+  test("flagship backfill + as-of + session agg: THREE shuffles") {
+    // The whole pipeline: the windows partition by conv_id (1 exchange), the
+    // union-tag as-of re-shuffles spine ∪ side on the union's entity column
+    // (1), and the final (conv_id, session_id) groupBy re-shuffles (1): the
+    // planner does not identify that union column with conv_id.
+    val df = ScaleBench.flagship(turnsDf(Gen.turnsSeq(42L, 4, 20)))
+    assert(exchanges(df) == 3, df.queryExecution.executedPlan.toString)
   }
 
   test("dimension joins broadcast (no shuffle of the fact side)") {

@@ -31,7 +31,7 @@ class SimilarityLawsSuite extends SparkTestBase {
       val vecs = randomVecs(seed, n = 120, dim = 16)
       def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-      val exact = pairs(VectorOps.cosineNearDupPairs(vecs, 0.5))
+      val exact = pairs(VectorReference.cosineNearDupPairs(vecs, 0.5))
       val lsh = pairs(VectorOps.cosineNearDupPairsLsh(vecs, 0.5, dim = 16))
       lsh.foreach { case (k, c) =>
         assert(exact.get(k).contains(c), s"seed $seed: LSH invented pair $k -> $c")

@@ -192,7 +192,7 @@ class TextVecSuite extends SparkTestBase {
   test("IVF top-k achieves >= 0.9 recall@5 on clustered data probing 2/16 cells") {
     val q = clustered.where(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val bf = VectorOps.bruteForceTopK(q,
+    val bf = VectorReference.bruteForceTopK(q,
         clustered.select(col("vec_id").as("vid"), col("embedding").as("ve")), 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val ivf = VectorOps.ivfTopK(clustered, col("vec_id") < 10, 5,
@@ -211,7 +211,7 @@ class TextVecSuite extends SparkTestBase {
     val e = Tables.read(spark, "/root/testdata/sf0.001", "embeddings")
     val q = e.where(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    val bf = VectorOps.bruteForceTopK(q,
+    val bf = VectorReference.bruteForceTopK(q,
         e.select(col("vec_id").as("vid"), col("embedding").as("ve")), 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val ivf = VectorOps.ivfTopK(e, col("vec_id") < 10, 5, nCells = 16, nProbe = 4)
@@ -220,7 +220,7 @@ class TextVecSuite extends SparkTestBase {
     assert(recall >= 0.5, s"IVF recall@5 = $recall")
     // every IVF hit must carry the exact cosine of the brute-force path
     assert(ivf.subsetOf(
-      VectorOps.bruteForceTopK(q,
+      VectorReference.bruteForceTopK(q,
         e.select(col("vec_id").as("vid"), col("embedding").as("ve")), 500)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet))
   }
@@ -229,7 +229,7 @@ class TextVecSuite extends SparkTestBase {
     val e = Tables.read(spark, "/root/testdata/sf0.01", "embeddings")
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val exact = pairs(VectorOps.cosineNearDupPairsFast(e, 0.4))
+    val exact = pairs(VectorReference.cosineNearDupPairsFast(e, 0.4))
     val lsh = pairs(VectorOps.cosineNearDupPairsLsh(e, 0.4))
     // precision exactly 1: every LSH pair is a true pair with the true cosine
     lsh.foreach { case (k, c) =>
@@ -281,15 +281,15 @@ class TextVecSuite extends SparkTestBase {
     val e = Tables.read(spark, "/root/testdata/sf0.001", "embeddings")
     def pairSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    assert(pairSet(VectorOps.cosineNearDupPairsFast(e, 0.35)) ==
-      pairSet(VectorOps.cosineNearDupPairs(e, 0.35)))
+    assert(pairSet(VectorReference.cosineNearDupPairsFast(e, 0.35)) ==
+      pairSet(VectorReference.cosineNearDupPairs(e, 0.35)))
     val q = e.where(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val c = e.select(col("vec_id").as("vid"), col("embedding").as("ve"))
     def topkSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
     assert(topkSet(VectorOps.bruteForceTopKFast(q, c, 5)) ==
-      topkSet(VectorOps.bruteForceTopK(q, c, 5)))
+      topkSet(VectorReference.bruteForceTopK(q, c, 5)))
   }
 
   test("q35 ASCII guard fails loudly on a non-ASCII corpus") {
