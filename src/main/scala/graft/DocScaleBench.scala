@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.tjk._
 
 /** Document-pipeline scaling bench — the axes-B counterpart of
@@ -16,30 +15,24 @@ import graft.tjk._
   * repetition — i.e. exactly the catalog code paths, not a bench-only
   * pipeline that could drift from what ships.
   *
-  * Usage: DocScaleBench <cpus> [nDocs]; env TJK_WARMS (default 3),
-  * TJK_SHUFFLE_PARTS (default 2×cpus). One JSON line per run on stdout.
+  * Usage: DocScaleBench [cpus] [nDocs]; cpus defaults to the machine's
+  * available processors. Shuffle partitions are 2×cpus; one JSON line per
+  * run on stdout: the cold time and the min of [[Warms]] warm runs.
   */
 object DocScaleBench {
 
+  private val Warms = 3
+
   def main(args: Array[String]): Unit = {
-    val cpus = args.headOption.getOrElse("32").toInt
+    val cpus = args.headOption.map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val nDocs = args.lift(1).map(_.toLong).getOrElse(1000000L)
     val dataDir = s"/tmp/tjk_bench/docs_$nDocs"
-    val parts = sys.env.get("TJK_SHUFFLE_PARTS").map(_.toInt).getOrElse(2 * cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("tjk-docscalebench")
-      .config("spark.sql.shuffle.partitions", parts)
-      // the generated corpus is a handful of parquet files; default 128 MB
-      // splits would cap scan parallelism at ~4 tasks for the CPU-heavy
-      // text projections — split finer so the scan feeds every core
-      .config("spark.sql.files.maxPartitionBytes", s"${32 * 1024 * 1024}")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        sys.env.getOrElse("TJK_LOCAL_DIR", "/tmp/tjk_spark_local"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Dev.session(cpus, 2 * cpus, "tjk-docscalebench")
+    // the generated corpus is a handful of parquet files; default 128 MB
+    // splits would cap scan parallelism at ~4 tasks for the CPU-heavy
+    // text projections — split finer so the scan feeds every core
+    spark.conf.set("spark.sql.files.maxPartitionBytes", s"${32 * 1024 * 1024}")
 
     if (!new java.io.File(s"$dataDir/documents.parquet", "_SUCCESS").exists()) {
       System.err.println(s"[docscalebench] generating $dataDir ...")
@@ -52,23 +45,16 @@ object DocScaleBench {
       "q55_decontam", "q56_repetition")
     def run(label: String): Double = {
       val t0 = System.nanoTime()
-      queries.foreach { q =>
-        val q0 = System.nanoTime()
-        // noop sink, not count(): count() would let Catalyst prune the
-        // per-row projections under test (the Bench timing-v2 rule)
-        SparkEntry.queries(q)(spark, dataDir)
-          .write.format("noop").mode("overwrite").save()
-        spark.sharedState.cacheManager.clearCache()
-        System.err.println(
-          f"[docscalebench]   $label $q ${(System.nanoTime() - q0) / 1e9}%.1f s")
-      }
+      // noop sink, not count(): count() would let Catalyst prune the
+      // per-row projections under test (the Bench timing-v2 rule)
+      Dev.each(spark, dataDir, queries, s"docscalebench $label")(
+        (_, df) => df.write.format("noop").mode("overwrite").save())
       val sec = (System.nanoTime() - t0) / 1e9
       System.err.println(f"[docscalebench] $label: 5 queries in $sec%.1f s")
       sec
     }
-    val warms = sys.env.get("TJK_WARMS").map(_.toInt).getOrElse(3)
     val cold = run("cold")
-    val warm = (1 to warms).map(i => run(s"warm$i")).min
+    val warm = (1 to Warms).map(i => run(s"warm$i")).min
     println(
       s"""{"bench":"doc_pipeline","cpus":$cpus,"docs":$total,""" +
       s""""cold_sec":$cold,"warm_sec":$warm,""" +

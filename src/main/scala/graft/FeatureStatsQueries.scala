@@ -84,26 +84,9 @@ object FeatureStatsQueries {
           base, NumFeature("len_text", length(col("text")), 0)))
         .unionByName(FeatureStats.profileMissing(base, "tool"))
         .orderBy("feature")
-      localized(spark, report).orderBy("feature")
+      localized(report).orderBy("feature")
     } finally base.unpersist()
   }
-
-  /** Collect a tiny report into a local-relation DataFrame so its cached
-    * inputs can be unpersisted before returning (the driver contract hands
-    * back a DataFrame whose evaluation must not depend on a cache this
-    * method is about to release). Shared by the report queries here and by
-    * TextVecQueries.annIvf.
-    */
-  private[graft] def localized(spark: SparkSession, df: DataFrame): DataFrame =
-    localRelation(spark, df.collect(), df.schema)
-
-  /** For callers that already hold the collected rows (e.g. a law computed
-    * over them) — avoids a second evaluation of the source plan.
-    */
-  private[graft] def localRelation(
-      spark: SparkSession, rows: Array[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   val featureProfileSql: String =
     s"""WITH ${Tables.transcriptsSqlCte},
@@ -162,7 +145,7 @@ object FeatureStatsQueries {
         .unionByName(FeatureStats.psiTagged(split, "value", isTrain, BinW, NBins)
           .select(lit("psi_value").as("metric"), col("psi").as("stat")))
         .orderBy("metric")
-      localized(spark, report).orderBy("metric")
+      localized(report).orderBy("metric")
     } finally split.unpersist()
   }
 
@@ -261,7 +244,7 @@ object FeatureStatsQueries {
         .unionByName(FeatureStats.psiTagged(split, "pv", isTrain, BinW, NBins)
           .select(lit("psi_asof_pv").as("metric"), col("psi").as("stat")))
         .orderBy("metric")
-      localized(spark, report).orderBy("metric")
+      localized(report).orderBy("metric")
     } finally split.unpersist()
   }
 
@@ -288,8 +271,8 @@ object FeatureStatsQueries {
     try {
       val rep = FeatureStats.outlierBoundsApprox(
         data, col("f"), "value_per_turn", accuracy = acc)
-      val rows = rep.collect()
-      val r = rows(0)
+      val local = localized(rep)
+      val r = local.head()
       val n = r.getAs[Long]("n")
       if (n > 0) { // empty input: nothing for the sketch to be wrong about
         val q1 = r.getAs[Double]("q1")
@@ -307,7 +290,7 @@ object FeatureStatsQueries {
         check(k.getLong(0), k.getLong(1), 0.25, "q1", q1)
         check(k.getLong(2), k.getLong(3), 0.75, "q3", q3)
       }
-      localRelation(spark, rows, rep.schema)
+      local
     } finally data.unpersist()
   }
 

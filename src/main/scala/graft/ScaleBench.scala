@@ -1,7 +1,7 @@
 package graft
 
 import java.time.Duration
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.tjk._
 
@@ -19,9 +19,12 @@ import graft.tjk._
   *  - times the flagship backfill (rolling {1h,24h} × {count,sum,nunique} +
   *    lag{1,3} + as-of join to a per-conv side table + sessionize(30m) →
   *    session aggregate) cold and warm,
-  *  - prints one JSON line: cold seconds and the min of TJK_WARMS warm runs.
+  *  - prints one JSON line: cold seconds and the min of [[Warms]] warm runs
+  *    (shuffle partitions 2×cpus, AQE with partition coalescing on).
   */
 object ScaleBench {
+
+  private val Warms = 5
 
   def flagship(turns: DataFrame): DataFrame = {
     val withValue = turns.withColumn("value", length(col("text")).cast("double"))
@@ -67,22 +70,7 @@ object ScaleBench {
     val medianLen = args.lift(2).map(_.toInt).getOrElse(20)
     val dataDir = s"/tmp/tjk_bench/turns_${nConvs}_$medianLen"
 
-    // Tunables for the scaling experiments (defaults = the reported config).
-    val parts = sys.env.get("TJK_SHUFFLE_PARTS").map(_.toInt).getOrElse(2 * cpus)
-    val coalesce = sys.env.getOrElse("TJK_AQE_COALESCE", "true")
-    val aqe = sys.env.getOrElse("TJK_AQE", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("tjk-scalebench")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", coalesce)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir",
-        sys.env.getOrElse("TJK_LOCAL_DIR", "/tmp/tjk_spark_local"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Dev.session(cpus, 2 * cpus, "tjk-scalebench")
 
     if (!new java.io.File(dataDir, "_SUCCESS").exists()) {
       System.err.println(s"[scalebench] generating $dataDir ...")
@@ -99,12 +87,11 @@ object ScaleBench {
       System.err.println(f"[scalebench] $label: $n sessions in $sec%.1f s")
       sec
     }
-    val warms = sys.env.get("TJK_WARMS").map(_.toInt).getOrElse(5)
     val cold = run("cold")
     // min-of-N: this sandbox shows 2-3x run-to-run swings from external
     // (hypervisor-level) noise — the minimum is the only statistic that
     // reflects the job rather than the neighbors.
-    val warm = (1 to warms).map(i => run(s"warm$i")).min
+    val warm = (1 to Warms).map(i => run(s"warm$i")).min
     println(
       s"""{"bench":"flagship_backfill","cpus":$cpus,""" +
       s""""turns":$total,"cold_sec":$cold,"warm_sec":$warm,""" +

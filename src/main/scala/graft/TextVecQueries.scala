@@ -126,7 +126,7 @@ object TextVecQueries {
           count(lit(1)).as("n_docs"),
           sum(col("n_tokens")).as("sum_tokens"),
           sum(col("group_size")).as("n_source_docs"))
-      FeatureStatsQueries.localized(d.sparkSession, rep)
+      localized(rep)
         .orderBy("split", "lang_pred")
     } finally scope.release()
   }
@@ -180,8 +180,7 @@ object TextVecQueries {
         .where(col("text").isNotNull)
         .select("doc_id", "lang_pred", "n_tokens")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      FeatureStatsQueries.localized(d.sparkSession,
-          Mix.mixReport(scored, MixWeights))
+      localized(Mix.mixReport(scored, MixWeights))
         .orderBy("lang_pred")
     } finally scope.release()
   }
@@ -538,8 +537,8 @@ object TextVecQueries {
     // are the accuracy/cost dial, the plan shape is unchanged.
     val ivf = VectorOps.ivfTopK(e, col("vec_id") < 10, k = 5, nCells = 64, nProbe = 48)
       .orderBy("qid", "rank")
-    val rows = ivf.collect()
-    val got = rows.map(r => (r.getLong(0), r.getLong(1))).toSet
+    val local = localized(ivf)
+    val got = local.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val brute = VectorOps.bruteForceTopKFast(
         e.where(col("vec_id") < 10)
           .select(col("vec_id").as("qid"), col("embedding").as("qe")),
@@ -552,7 +551,7 @@ object TextVecQueries {
       if (brute.isEmpty) 1.0 else brute.intersect(got).size.toDouble / brute.size
     require(recall >= 0.9,
       f"q23 law: IVF recall@5 = $recall%.3f < 0.9 vs exact brute force")
-    FeatureStatsQueries.localRelation(spark, rows, ivf.schema).orderBy("qid", "rank")
+    local.orderBy("qid", "rank")
   }
 
   // ------------------------------------------------------------ multimodal

@@ -46,13 +46,6 @@ object FeatureStats {
         "NumFeature), use outlierBoundsApprox for a continuous domain, or " +
         "raise maxDomain only if you accept that sort.")
 
-  /** Collect a tiny report and return it as a local relation so the frames
-    * persisted while building it can be unpersisted before returning.
-    */
-  private def localized(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(df.collect(): _*), df.schema)
-
   /** One numeric feature to profile: `expr` must yield a value with at most
     * `decimals` decimal places (2 for currency-like, 0 for integer-valued) —
     * that is what makes the integer-scaled moments EXACT.
@@ -121,30 +114,19 @@ object FeatureStats {
       .cast("int")
 
   /** Population Stability Index between populations `a` (expected) and `b`
-    * (actual) over fixed-width bins of `valueCol`, with Laplace smoothing
-    * `eps` on the COUNTS (so empty bins are defined on both sides):
-    * PSI = Σ_bins (p_b − p_a) · ln(p_b / p_a). One grouped-count shuffle
-    * per side; the Σ runs over ≤ nBins rows.
+    * (actual) over fixed-width bins of `valueCol`: [[psiTagged]] over the
+    * union of the two value columns, `a`'s rows tagged.
     */
   def psi(
       a: DataFrame, b: DataFrame, valueCol: String,
-      binWidth: Double, nBins: Int, eps: Double = 0.5): DataFrame = {
-    def binned(df: DataFrame, side: String) = df
-      .where(col(valueCol).isNotNull)
-      .groupBy(widthBin(col(valueCol), binWidth, nBins).as("bin"))
-      .agg(count(lit(1)).as(s"n_$side"))
-    val bins = a.sparkSession.range(nBins.toLong)
-      .select(col("id").cast("int").as("bin"))
-    psiFromJoined(
-      bins
-        .join(binned(a, "a"), Seq("bin"), "left")
-        .join(binned(b, "b"), Seq("bin"), "left")
-        .na.fill(0L, Seq("n_a", "n_b")),
-      nBins, eps)
-  }
+      binWidth: Double, nBins: Int, eps: Double = 0.5): DataFrame =
+    psiTagged(tagged(a, b, valueCol), valueCol, col(SideTag), binWidth, nBins, eps)
 
-  /** Single-pass [[psi]] over one tagged frame — same rationale and value
-    * identity as [[ksTagged]]: one binned count shuffle, one bins join.
+  /** PSI between the rows of `df` where `isA` holds (expected) and the rest
+    * (actual), over fixed-width bins of `valueCol`, with Laplace smoothing
+    * `eps` on the COUNTS (so empty bins are defined on both sides):
+    * PSI = Σ_bins (p_b − p_a) · ln(p_b / p_a). One binned count shuffle
+    * counts both sides; the Σ runs over ≤ nBins rows.
     */
   private[graft] def psiTagged(
       df: DataFrame, valueCol: String, isA: Column,
@@ -156,14 +138,7 @@ object FeatureStats {
         sum(when(isA, 0L).otherwise(1L)).as("n_b"))
     val bins = df.sparkSession.range(nBins.toLong)
       .select(col("id").cast("int").as("bin"))
-    psiFromJoined(
-      bins.join(binned, Seq("bin"), "left").na.fill(0L, Seq("n_a", "n_b")),
-      nBins, eps)
-  }
-
-  private def psiFromJoined(
-      joined: DataFrame, nBins: Int, eps: Double): DataFrame =
-    joined
+    bins.join(binned, Seq("bin"), "left").na.fill(0L, Seq("n_a", "n_b"))
       .withColumn("ta", sum(col("n_a")).over(Window.partitionBy()))
       .withColumn("tb", sum(col("n_b")).over(Window.partitionBy()))
       .select(((col("n_b") + eps) / (col("tb") + eps * nBins) -
@@ -171,52 +146,48 @@ object FeatureStats {
         log(((col("n_b") + eps) / (col("tb") + eps * nBins)) /
           ((col("n_a") + eps) / (col("ta") + eps * nBins))).as("lr"))
       .agg(round(sum(col("dp") * col("lr")), 6).as("psi"))
+  }
 
-  /** Exact two-sample Kolmogorov–Smirnov statistic over a bounded-domain
-    * numeric column: max over observed values of |F_a − F_b|. Grouped
-    * counts per value first (cardinality ≤ the value domain), cumulative
-    * window over that SMALL aggregate only.
+  /** Exact two-sample Kolmogorov–Smirnov statistic between `a` and `b` over
+    * a bounded-domain numeric column: [[ksTagged]] over the union of the
+    * two value columns, `a`'s rows tagged.
     */
   def ks(
       a: DataFrame, b: DataFrame, valueCol: String,
-      maxDomain: Long = MaxExactDomain): DataFrame = {
-    def counts(df: DataFrame, side: String) = df
-      .where(col(valueCol).isNotNull)
-      .groupBy(col(valueCol).cast("double").as("v"))
-      .agg(count(lit(1)).as(s"n_$side"))
-    ksFromMerged(
-      counts(a, "a").join(counts(b, "b"), Seq("v"), "full")
-        .na.fill(0L, Seq("n_a", "n_b")),
-      valueCol, maxDomain)
-  }
+      maxDomain: Long = MaxExactDomain): DataFrame =
+    ksTagged(tagged(a, b, valueCol), valueCol, col(SideTag), maxDomain)
 
-  /** Single-pass [[ks]] over ONE frame whose rows are split by a boolean
-    * tag: both sides' per-value counts come from a single grouped
-    * aggregation (guide §2.3 "aggregate before you shuffle") instead of two
-    * grouped shuffles re-merged by a full join. Values identical: the full
-    * join + zero-fill of the pair form IS the conditional-count pair of
-    * this form for every value present on either side.
+  private val SideTag = "_is_a"
+
+  /** `a`'s `valueCol` tagged [[SideTag]] = true, unioned with `b`'s tagged
+    * false — the one-frame input of the tagged kernels.
+    */
+  private def tagged(a: DataFrame, b: DataFrame, valueCol: String): DataFrame =
+    a.select(col(valueCol), lit(true).as(SideTag))
+      .unionByName(b.select(col(valueCol), lit(false).as(SideTag)))
+
+  /** Exact two-sample KS statistic between the rows of `df` where `isA`
+    * holds and the rest: max over observed values of |F_a − F_b|. Both
+    * sides' per-value counts (cardinality ≤ the value domain) come from a
+    * single grouped aggregation (guide §2.3 "aggregate before you
+    * shuffle"), and the cumulative window runs over that SMALL aggregate
+    * only. Values identical to the oracle's two per-side counts re-merged
+    * by a full join: its zero-filled pair IS this form's conditional-count
+    * pair for every value present on either side.
+    *
+    * EAGER: persist the per-value aggregate, count it (the cardinality
+    * guard — same grouped shuffle the window pass needs, run once), and
+    * collect the 1-row result so the persist can be released before
+    * returning. An unbounded continuous feature fails loudly instead of
+    * stalling the single-task sort.
     */
   private[graft] def ksTagged(
       df: DataFrame, valueCol: String, isA: Column,
-      maxDomain: Long = MaxExactDomain): DataFrame =
-    ksFromMerged(
-      df.where(col(valueCol).isNotNull)
-        .groupBy(col(valueCol).cast("double").as("v"))
-        .agg(sum(when(isA, 1L).otherwise(0L)).as("n_a"),
-          sum(when(isA, 0L).otherwise(1L)).as("n_b")),
-      valueCol, maxDomain)
-
-  /** The shared KS tail over a (v, n_a, n_b) per-value frame. EAGER: persist
-    * the per-value aggregate, count it (the cardinality guard — same grouped
-    * shuffle the window pass needs, run once), and collect the 1-row result
-    * so the persist can be released before returning. An unbounded
-    * continuous feature fails loudly instead of stalling the single-task
-    * sort.
-    */
-  private def ksFromMerged(
-      mergedIn: DataFrame, valueCol: String, maxDomain: Long): DataFrame = {
-    val merged = mergedIn
+      maxDomain: Long = MaxExactDomain): DataFrame = {
+    val merged = df.where(col(valueCol).isNotNull)
+      .groupBy(col(valueCol).cast("double").as("v"))
+      .agg(sum(when(isA, 1L).otherwise(0L)).as("n_a"),
+        sum(when(isA, 0L).otherwise(1L)).as("n_b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       requireBoundedDomain(merged.count(), maxDomain, "ks", valueCol)

@@ -63,10 +63,8 @@ final class SnapshotIO(root: String) extends TableIO {
   /** All committed snapshot ids, oldest first — the hint file is the commit
     * log (`v2` header, then one id per line, atomically replaced as a
     * whole); snapshot dirs on disk but absent from it are orphans of
-    * aborted commits and are never visible through any read path. A legacy
-    * header-less single-value hint (the pre-log format, where the value v
-    * meant "commits 1..v") is still readable — without the header, a
-    * post-orphan first commit id would be indistinguishable from it.
+    * aborted commits and are never visible through any read path. A hint
+    * file without the header is not a log this class wrote and fails loudly.
     */
   def snapshots(name: String): Seq[Long] = {
     val f = hintFile(name)
@@ -74,10 +72,9 @@ final class SnapshotIO(root: String) extends TableIO {
     else {
       val lines = java.nio.file.Files.readString(f.toPath).split("\n")
         .map(_.trim).filter(_.nonEmpty).toSeq
-      if (lines.headOption.contains("v2")) lines.tail.map(_.toLong)
-      // header-less multi-line = the interim id-list format (no header yet)
-      else if (lines.size > 1) lines.map(_.toLong)
-      else (1L to lines.head.toLong) // legacy single-value format: commits 1..v
+      if (!lines.headOption.contains("v2"))
+        throw new IllegalStateException(s"$f has no v2 header: not a SnapshotIO commit log")
+      lines.tail.map(_.toLong)
     }
   }
 

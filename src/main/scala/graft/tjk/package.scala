@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 package object tjk {
@@ -36,4 +36,14 @@ package object tjk {
       Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(deleteRec)
     f.delete()
   }
+
+  /** Collects a tiny report into a local-relation DataFrame, so the frames
+    * persisted while building it can be released before it is returned
+    * (the caller hands back a DataFrame whose evaluation must not depend on
+    * a cache it is about to release). Collecting the result again runs no
+    * Spark job.
+    */
+  def localized(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(df.collect(): _*), df.schema)
 }

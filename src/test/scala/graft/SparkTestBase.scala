@@ -6,13 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One shared local session for all suites (JVM-forked by sbt). */
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("tjk-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Dev.session(4, 4, "tjk-tests")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -91,22 +91,6 @@ class TableIOSuite extends SparkTestBase {
     assert(fromJson == fromParquet)
   }
 
-  test("SnapshotIO reads the legacy single-value hint format (commits 1..v)") {
-    val root = tmp()
-    val io = new SnapshotIO(root)
-    io.write(rows(3), "t")
-    io.write(rows(5), "t")
-    // rewrite the hint as the pre-log format: a single current-id line
-    java.nio.file.Files.writeString(
-      new java.io.File(s"$root/t/version-hint.text").toPath, "2")
-    assert(io.snapshots("t") == Seq(1L, 2L))
-    assert(io.read(spark, "t").count() == 5)
-    assert(io.readAt(spark, "t", 1L).count() == 3)
-    io.write(rows(7), "t") // next commit upgrades the log to v2 in place
-    assert(io.snapshots("t") == Seq(1L, 2L, 3L))
-    assert(io.read(spark, "t").count() == 7)
-  }
-
   test("SnapshotIO: an aborted commit is invisible and never blocks later commits") {
     val root = tmp()
     val io = new SnapshotIO(root)
@@ -122,5 +106,15 @@ class TableIOSuite extends SparkTestBase {
     assert(io.snapshots("t") == Seq(1L, 3L))
     assert(io.read(spark, "t").count() == 4)
     intercept[IllegalArgumentException] { io.readAt(spark, "t", 2L) }
+  }
+
+  test("SnapshotIO: a hint file without the v2 header fails loudly, naming it") {
+    val root = tmp()
+    val io = new SnapshotIO(root)
+    io.write(rows(3), "t")
+    val hint = new java.io.File(s"$root/t/version-hint.text")
+    java.nio.file.Files.writeString(hint.toPath, "1")
+    val e = intercept[IllegalStateException](io.snapshots("t"))
+    assert(e.getMessage.contains(hint.getPath))
   }
 }
