@@ -70,15 +70,13 @@ object AsOf {
       payload: Seq[String],
       tieCol: Option[String] = None,
       tolerance: Option[Duration] = None,
-      strict: Boolean = false,
-      numPartitions: Option[Int] = None): DataFrame = {
+      strict: Boolean = false): DataFrame = {
     val (sp, ev, spTag) = tagged(spine, events, entity, spineTs, eventTs, payload, tieCol, strict)
     val unioned = sp.unionByName(ev)
-    val parts = numPartitions.getOrElse(unioned.sparkSession.sessionState.conf.numShufflePartitions)
     // Co-partition by entity, co-sort on (entity, ts, tag, tie) — the layout
     // mandated by BASELINE.json:6 for the merge fallback.
     val sorted = unioned
-      .repartition(parts, col("__e"))
+      .repartition(unioned.sparkSession.sessionState.conf.numShufflePartitions, col("__e"))
       .sortWithinPartitions(col("__e"), col("__tm"), col("__tag"), col("__tie"))
 
     val spineSchema = spine.schema

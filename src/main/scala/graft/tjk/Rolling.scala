@@ -83,51 +83,18 @@ object Rolling {
       // routes cold even for a hot entity: it has no trailing frame to
       // chunk (the chunked operator rejects it loudly), and on the Window
       // path a null-order row's range frame sees only its null-ts peers, so
-      // separating the two groups is result-invariant (suite-pinned).
-      //
-      // Routing mechanism scales with |hot| (VERDICT r4 #5): a small set
-      // compiles to an InSet literal (cheapest probe, tiny plan); past
-      // HotBroadcastMin keys a literal list baked into the plan is real
-      // analysis/codegen pressure (detection can hit the 10k cap on
-      // hot-heavy inputs), so the keys ride a broadcast
-      // left-join flag instead — plan size O(1) in |hot|, same semantics
-      // (SkewSuite equivalence pin at the cap).
-      val (routed, isHot) =
-        if (hot.size <= HotBroadcastMin)
-          (df, coalesce(col(entity).isin(hot: _*), lit(false)) &&
-            col(tsCol).isNotNull)
-        else {
-          val spark = df.sparkSession
-          val keySchema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField(
-              entity, df.schema(entity).dataType)))
-          val keys = spark.createDataFrame(
-            java.util.Arrays.asList(
-              hot.map(org.apache.spark.sql.Row(_)): _*), keySchema)
-          // re-select in the ORIGINAL column order: a using-join moves the
-          // key column to the front, which would make the hot-routed output
-          // ordering differ from the isin branch (callers see "input
-          // columns + one per spec" either way)
-          val flagged = df.join(
-              broadcast(keys.withColumn("__graft_hot", lit(true))),
-              Seq(entity), "left")
-            .select(df.columns.map(col) :+ col("__graft_hot"): _*)
-          (flagged,
-            coalesce(col("__graft_hot"), lit(false)) && col(tsCol).isNotNull)
-        }
+      // separating the two groups is result-invariant (suite-pinned). The
+      // isin literal serves every routed set up to the MaxHotKeys cap
+      // (Catalyst plans it as an InSet hash probe; SkewSuite pins the cap).
+      val isHot = coalesce(col(entity).isin(hot: _*), lit(false)) &&
+        col(tsCol).isNotNull
       val chunkSpan = specs.map(_.windowMicros).max
-      val cold = windowRolling(
-        routed.where(!isHot).drop("__graft_hot"), entity, tsCol, specs)
+      val cold = windowRolling(df.where(!isHot), entity, tsCol, specs)
       val hotDf = Skew.chunkedRollingAgg(
-        routed.where(isHot).drop("__graft_hot"), entity, tsCol, specs, chunkSpan)
+        df.where(isHot), entity, tsCol, specs, chunkSpan)
       cold.unionByName(hotDf)
     }
   }
-
-  /** Above this many hot keys, routing switches from an `isin` literal to a
-    * broadcast join flag — see [[rollingAgg]].
-    */
-  private[graft] val HotBroadcastMin = 100
 
   private def windowRolling(
       df: DataFrame,

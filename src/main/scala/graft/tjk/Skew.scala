@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.mutable
+import graft.tjk.expressions.WindowNUnique.normalize
 
 /** O8 — skew handling for hot entities (SURVEY.md §2.1 O8, §4.2).
   *
@@ -88,8 +89,7 @@ object Skew {
       entity: String,
       tsCol: String,
       specs: Seq[RollingSpec],
-      chunkSpanMicros: Long,
-      numPartitions: Option[Int] = None): DataFrame = {
+      chunkSpanMicros: Long): DataFrame = {
     require(specs.nonEmpty, "no specs")
     val maxW = specs.map(_.windowMicros).max
     require(chunkSpanMicros >= maxW,
@@ -124,11 +124,9 @@ object Skew {
       .withColumn("__chunk", col("__cx.c"))
       .withColumn("__owner", col("__cx.o"))
       .drop("__c0", "__cx")
-    val unioned = base
-    val parts = numPartitions.getOrElse(
-      df.sparkSession.sessionState.conf.numShufflePartitions)
-    val sorted = unioned
-      .repartition(parts, col(entity), col("__chunk"))
+    val sorted = base
+      .repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
+        col(entity), col("__chunk"))
       .sortWithinPartitions(col(entity), col("__chunk"), col("__tm"))
 
     val inSchema = df.schema
@@ -249,21 +247,6 @@ object Skew {
       case other => throw new IllegalArgumentException(s"non-numeric: $other")
     }
 
-    // NUnique key normalization, mirroring WindowNUnique.normalize: Spark
-    // SQL treats NaN = NaN as true, but Scala HashMap keys compare boxed
-    // floats with primitive semantics (NaN != NaN) — unnormalized, every
-    // NaN would count distinct AND its eviction decrement would miss. Both
-    // O3 paths must stay result-identical on the same input.
-    private def nuKey(v: Any): Any = v match {
-      case d: java.lang.Double =>
-        if (d.isNaN) graft.tjk.expressions.WindowNUnique.NaNMarker
-        else if (d.doubleValue() == 0.0) java.lang.Double.valueOf(0.0) else d
-      case f: java.lang.Float =>
-        if (f.isNaN) graft.tjk.expressions.WindowNUnique.NaNMarker
-        else if (f.floatValue() == 0.0f) java.lang.Float.valueOf(0.0f) else f
-      case other => other
-    }
-
     def add(ts: Long, v: Any): Unit = {
       q.append((ts, v))
       if (v != null) {
@@ -272,7 +255,7 @@ object Skew {
           case Agg.Sum | Agg.Mean => kahanAdd(toD(v))
           case Agg.Min | Agg.Max  => ordered.merge(toD(v), 1, (a, b) => a + b)
           case Agg.NUnique =>
-            counts.updateWith(nuKey(v)) { c => Some(c.getOrElse(0) + 1) }
+            counts.updateWith(normalize(v)) { c => Some(c.getOrElse(0) + 1) }
           case Agg.Count =>
         }
       }
@@ -291,7 +274,7 @@ object Skew {
               val c = ordered.get(d)
               if (c <= 1) ordered.remove(d) else ordered.put(d, c - 1)
             case Agg.NUnique =>
-              counts.updateWith(nuKey(v)) { c =>
+              counts.updateWith(normalize(v)) { c =>
                 if (c.contains(1)) None else c.map(_ - 1)
               }
             case Agg.Count =>

@@ -6,10 +6,11 @@ import org.apache.spark.sql.functions._
 
 /** Similarity search over an embedding column (`array<float>`).
   *
-  * All arithmetic is done with codegen'd higher-order functions
-  * (`zip_with` + `aggregate`) in DOUBLE, summed in index order — which makes
-  * the result reproducible across engines (the DuckDB oracle sums the same
-  * promoted doubles). No UDFs.
+  * All arithmetic promotes each float to DOUBLE and sums in index order —
+  * in the native expressions ([[expressions.CosineSimilarity]],
+  * [[expressions.HyperplaneSignature]]) and the primitive top-k loop alike —
+  * which makes the result reproducible across engines (the DuckDB oracle
+  * sums the same promoted doubles). No UDFs.
   *
   *  - [[bruteForceTopKFast]]: exact top-k neighbors — the correctness
   *    baseline. Scale shape: broadcast the (small) query set against the
@@ -25,24 +26,6 @@ object VectorOps {
     * DuckDB oracle SQL (TextVecQueries) so both engines band identically. */
   val LshPlanes = 64
   val LshBands = 16
-
-  /** Σ aᵢ·bᵢ in double, sequential index order. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0),
-      (acc, v) => acc + v)
-
-  /** Zero-norm convention (shared by EVERY cosine path in the library, see
-    * expressions.CosineSimilarity): similarity involving an all-zero vector
-    * is 0.0. The `when` guard also keeps Spark 4's default ANSI mode from
-    * throwing DIVIDE_BY_ZERO (the division only evaluates on the non-zero
-    * branch).
-    */
-  def cosine(a: Column, b: Column): Column = {
-    val denom = sqrt(dot(a, a)) * sqrt(dot(b, b))
-    when(denom === 0.0, lit(0.0)).otherwise(dot(a, b) / denom)
-  }
 
   // ------------------------------------------------- sign-LSH near-dup (scale path)
 

@@ -14,22 +14,22 @@ import org.apache.spark.sql.{AnalysisException, Column, SparkSession}
   * The composable form — `aggregate(zip_with(a,b,*), 0d, +)` — is evaluated
   * interpreted, one boxed lambda call per element (~200µs per 64-dim pair
   * measured on this image); this expression fuses dot + both norms into one
-  * primitive loop inside WholeStageCodegen (~0.1µs). Arithmetic is identical
-  * (per-element float→double promotion, sequential index-order sums,
-  * `dot/(sqrt(na)*sqrt(nb))`), so results are bit-equal to the reference
-  * form and the DuckDB oracle.
+  * primitive loop. ONE kernel, [[nullSafeEval]], serves both the
+  * interpreted path and whole-stage codegen: the generated code calls it
+  * through a reference object, so there is no second copy of the
+  * arithmetic to keep in step. Per-element float→double promotion,
+  * sequential index-order sums and `dot/(sqrt(na)*sqrt(nb))` make results
+  * bit-equal to the DuckDB oracle and to the test-scope HOF form
+  * (`VectorReference.cosine`), which is this kernel's bit-for-bit
+  * reference in `CosineExprSuite`.
   *
   * Null semantics: null array → null; any null element → null; mismatched
   * lengths → error (dimension bug, fail loudly).
   *
-  * Zero-norm semantics (stated — every cosine path in the library follows
-  * the SAME convention): an all-zero vector has no direction, so its
-  * similarity to anything is defined as 0.0. Without the guard the three
-  * implementations would disagree three ways on the same input: this
-  * expression would emit NaN (which Spark sorts ABOVE every real value —
-  * a zero vector would rank as everyone's #1 neighbor), the HOF form
-  * would throw DIVIDE_BY_ZERO under Spark 4's default ANSI mode, and the
-  * primitive test path would silently drop the pair.
+  * Zero-norm semantics: an all-zero vector has no direction, so its
+  * similarity to anything is 0.0 — not NaN, which Spark sorts ABOVE every
+  * real value and would rank a zero vector as everyone's #1 neighbor. The
+  * test-scope HOF and primitive reference forms follow the same rule.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -69,34 +69,18 @@ case class CosineSimilarity(left: Expression, right: Expression)
     if (denom == 0.0) 0.0 else dot / denom
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
+  // The generated code calls nullSafeEval itself: one kernel for the
+  // interpreted and the whole-stage paths, never a Java-string copy.
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("cosine", this)
+    val r = ctx.freshName("r")
+    nullSafeCodeGen(ctx, ev, (a, b) =>
       s"""
-         |final int $n = $a.numElements();
-         |if ($b.numElements() != $n) {
-         |  throw new IllegalArgumentException(
-         |    "tjk_cosine: dimension mismatch " + $n + " vs " + $b.numElements());
-         |}
-         |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |  final double $xv = (double) $a.getFloat($i);
-         |  final double $yv = (double) $b.getFloat($i);
-         |  $dot += $xv * $yv; $na += $xv * $xv; $nb += $yv * $yv;
-         |}
-         |if (!${ev.isNull}) {
-         |  final double ${dot}_den = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
-         |  ${ev.value} = ${dot}_den == 0.0 ? 0.0 : $dot / ${dot}_den;
-         |}
-       """.stripMargin
-    })
+         |final Object $r = $self.nullSafeEval($a, $b);
+         |if ($r == null) { ${ev.isNull} = true; }
+         |else { ${ev.value} = ((java.lang.Double) $r).doubleValue(); }
+       """.stripMargin)
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =

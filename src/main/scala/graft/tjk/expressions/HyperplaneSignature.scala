@@ -17,13 +17,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * (`transform(planes, w -> aggregate(zip_with(e, w, *), 0d, +))`) evaluates
   * interpreted with one boxed lambda call per element per plane — 64 planes ×
   * 64 dims = 4096 boxed ops per ROW on the hot path. This expression fuses
-  * all plane dots into one primitive loop nest inside WholeStageCodegen.
+  * all plane dots into one primitive loop nest, [[compute]], which the
+  * interpreted path and the whole-stage generated code both call.
   * Arithmetic is per-element float→double promotion and sequential
   * index-order sums — the same convention the DuckDB oracle replicates.
   *
   * `planes` must be a foldable literal of `array<array<float>>` (the
   * deterministic Rademacher matrix from [[VectorOps.hyperplanes]]); it is
-  * materialized once at construction/codegen, never per row.
+  * materialized once per expression instance, never per row.
   *
   * Null semantics: null array → null; any null element → null; dimension
   * mismatch vs the plane matrix → error (dimension bug, fail loudly).
@@ -56,7 +57,11 @@ case class HyperplaneSignature(left: Expression, right: Expression)
     Array.tabulate(ad.numElements())(p => ad.getArray(p).toFloatArray())
   }
 
-  private def compute(arr: ArrayData, planes: Array[Array[Float]]): UTF8String = {
+  /** The one kernel: the interpreted [[eval]] and the generated code both
+    * call it. Null element → null; dimension mismatch → error.
+    */
+  def compute(arr: ArrayData): UTF8String = {
+    val planes = mat
     val dim = planes(0).length
     if (arr.numElements() != dim)
       throw new IllegalArgumentException(
@@ -80,46 +85,18 @@ case class HyperplaneSignature(left: Expression, right: Expression)
 
   override def eval(input: InternalRow): Any = {
     val a = left.eval(input)
-    if (a == null) null else compute(a.asInstanceOf[ArrayData], mat)
+    if (a == null) null else compute(a.asInstanceOf[ArrayData])
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val planesRef = ctx.addReferenceObj("planes", mat, "float[][]")
-    val childGen = left.genCode(ctx)
-    val arr = childGen.value
-    val p = ctx.freshName("p")
-    val i = ctx.freshName("i")
-    val d = ctx.freshName("d")
-    val w = ctx.freshName("w")
-    val dim = ctx.freshName("dim")
-    val out = ctx.freshName("out")
-    val bad = ctx.freshName("bad")
+    val self = ctx.addReferenceObj("hyperplaneSig", this)
+    val c = left.genCode(ctx)
     ev.copy(code =
       code"""
-           |${childGen.code}
-           |boolean ${ev.isNull} = ${childGen.isNull};
-           |UTF8String ${ev.value} = null;
-           |if (!${ev.isNull}) {
-           |  final int $dim = $planesRef[0].length;
-           |  if ($arr.numElements() != $dim) {
-           |    throw new IllegalArgumentException(
-           |      "tjk_hyperplane_sig: dimension mismatch " + $arr.numElements() + " vs " + $dim);
-           |  }
-           |  final byte[] $out = new byte[$planesRef.length];
-           |  boolean $bad = false;
-           |  for (int $p = 0; $p < $planesRef.length && !$bad; $p++) {
-           |    final float[] $w = $planesRef[$p];
-           |    double $d = 0.0;
-           |    for (int $i = 0; $i < $dim; $i++) {
-           |      if ($arr.isNullAt($i)) { $bad = true; break; }
-           |      $d += ((double) $arr.getFloat($i)) * ((double) $w[$i]);
-           |    }
-           |    if (!$bad) { $out[$p] = $d >= 0 ? (byte) '1' : (byte) '0'; }
-           |  }
-           |  if ($bad) { ${ev.isNull} = true; }
-           |  else { ${ev.value} = UTF8String.fromBytes($out); }
-           |}
+           |${c.code}
+           |UTF8String ${ev.value} = ${c.isNull} ? null : $self.compute(${c.value});
+           |boolean ${ev.isNull} = ${ev.value} == null;
          """.stripMargin)
   }
 

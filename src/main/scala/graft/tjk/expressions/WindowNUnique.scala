@@ -47,8 +47,9 @@ case class WindowNUnique(
     * (BinaryType) compares by REFERENCE, and nested arrays/structs carry
     * the same hazard — every occurrence would count as distinct. Those
     * types therefore fail at ANALYSIS instead of returning wrong counts
-    * (ADVICE r3 item 2); [[update]] separately normalizes -0.0/NaN so
-    * float semantics match `count(DISTINCT ...)`.
+    * (ADVICE r3 item 2); [[update]] separately normalizes -0.0/NaN
+    * (`WindowNUnique.normalize`) so float semantics match
+    * `count(DISTINCT ...)`.
     */
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case _: NumericType | StringType | BooleanType | DateType |
@@ -61,27 +62,9 @@ case class WindowNUnique(
   override def createAggregationBuffer(): mutable.HashSet[Any] =
     mutable.HashSet.empty[Any]
 
-  // count(DISTINCT) treats -0.0 == 0.0 and NaN = NaN as true (Spark SQL's
-  // ordering semantics; Catalyst normalizes floats before grouping). The
-  // Scala HashSet compares boxed doubles with PRIMITIVE semantics, where
-  // NaN != NaN — every NaN insert would count as a new distinct value — so
-  // NaN maps to a singleton sentinel (can't collide with data: the child
-  // column is float-typed) and zeros to canonical +0.0.
-  private def normalize(v: Any): Any = v match {
-    case d: java.lang.Double =>
-      if (d.isNaN) WindowNUnique.NaNMarker
-      else if (d.doubleValue() == 0.0) java.lang.Double.valueOf(0.0)
-      else d
-    case f: java.lang.Float =>
-      if (f.isNaN) WindowNUnique.NaNMarker
-      else if (f.floatValue() == 0.0f) java.lang.Float.valueOf(0.0f)
-      else f
-    case other => other
-  }
-
   override def update(buf: mutable.HashSet[Any], input: InternalRow): mutable.HashSet[Any] = {
     val v = child.eval(input)
-    if (v != null) buf += normalize(InternalRow.copyValue(v))
+    if (v != null) buf += WindowNUnique.normalize(InternalRow.copyValue(v))
     buf
   }
 
@@ -123,8 +106,30 @@ case class WindowNUnique(
 }
 
 object WindowNUnique {
-  /** All-NaN-payloads equivalence class for the distinct buffer (shared
-    * with the chunked path's SlidingState so both O3 paths agree on NaN).
-    */
+  /** All-NaN-payloads equivalence class for the distinct buffer. */
   private[tjk] case object NaNMarker
+
+  /** The distinct-key normalization of BOTH O3 paths: this aggregate's
+    * buffer and the chunked path's `Skew.SlidingState` multiset, so the two
+    * stay result-identical on the same input.
+    *
+    * count(DISTINCT) treats -0.0 == 0.0 and NaN = NaN as true (Spark SQL's
+    * ordering semantics; Catalyst normalizes floats before grouping). Scala
+    * hash collections compare boxed doubles with PRIMITIVE semantics, where
+    * NaN != NaN — every NaN insert would count as a new distinct value (and
+    * a sliding eviction would miss its key) — so NaN maps to a singleton
+    * sentinel (can't collide with data: the child column is float-typed)
+    * and zeros to canonical +0.0.
+    */
+  private[tjk] def normalize(v: Any): Any = v match {
+    case d: java.lang.Double =>
+      if (d.isNaN) NaNMarker
+      else if (d.doubleValue() == 0.0) java.lang.Double.valueOf(0.0)
+      else d
+    case f: java.lang.Float =>
+      if (f.isNaN) NaNMarker
+      else if (f.floatValue() == 0.0f) java.lang.Float.valueOf(0.0f)
+      else f
+    case other => other
+  }
 }

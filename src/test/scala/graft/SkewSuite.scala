@@ -98,36 +98,34 @@ class SkewSuite extends SparkTestBase {
     assert(guarded == plain)
   }
 
-  test("broadcast hot routing (>HotBroadcastMin keys) == WindowOnly, no isin literal") {
+  test("hot routing at the MaxHotKeys cap == WindowOnly") {
     val spark2 = spark
     import spark2.implicits._
-    // 120 hot entities (12 rows each, threshold 10) — past HotBroadcastMin,
-    // so routing must take the broadcast-flag path instead of baking a
-    // 120-element isin literal into the plan; plus a cold tail and a
-    // null-entity row (the routing-semantics edge the isin path pins).
+    // MaxHotKeys + 1 entities of 3 rows each at threshold 2: every entity is
+    // a candidate, so detection saturates and routes exactly MaxHotKeys of
+    // them through the isin literal; the one left over stays on the Window
+    // path, as does a null-entity row (the routing-semantics edge).
+    val n = Rolling.MaxHotKeys + 1
     val rows =
-      (for { e <- 0 until 120; i <- 0 until 12 }
-        yield (s"h$e", new java.sql.Timestamp(i * 60000L), (e + i).toDouble)) ++
-      (for { e <- 0 until 30; i <- 0 until 3 }
-        yield (s"c$e", new java.sql.Timestamp(i * 60000L), i.toDouble)) :+
+      (for { e <- 0 until n; i <- 0 until 3 }
+        yield (s"h$e", new java.sql.Timestamp(i * 60000L), (e + i).toDouble)) :+
       ((null.asInstanceOf[String], new java.sql.Timestamp(0L), 1.0))
     val df = rows.toDF("conv_id", "ts", "value")
     val specs = Seq(
       RollingSpec("value", Agg.Sum, H1),
       RollingSpec("value", Agg.NUnique, H1))
-    assert(Rolling.detectHotKeys(df, "conv_id", 10L).size > Rolling.HotBroadcastMin)
-    val guarded = withHotThreshold(10L) {
+    assert(Rolling.detectHotKeys(df, "conv_id", 2L).size == Rolling.MaxHotKeys)
+    val guarded = withHotThreshold(2L) {
       Rolling.rollingAgg(df, "conv_id", "ts", specs)
     }
-    val plan = guarded.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"),
-      s"hot routing did not broadcast:\n${plan.take(1500)}")
-    assert(!plan.contains("h99"),
-      "hot-key literals leaked into the plan — isin path used past the cap")
     def fp(d: org.apache.spark.sql.DataFrame) = Lineage.tableFingerprint(
       d.select(col("conv_id"), col("ts"),
         round(col("sum_value_3600s"), 9).as("s"),
         col("nunique_value_3600s")))
+    assert(guarded.queryExecution.analyzed.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Union]),
+      "no key was routed to the chunked path")
+    assert(guarded.count() == rows.size)
     assert(fp(guarded) ==
       fp(Rolling.rollingAgg(df, "conv_id", "ts", specs, SkewPolicy.WindowOnly)))
   }

@@ -152,6 +152,19 @@ class TextVecSuite extends SparkTestBase {
     }
   }
 
+  test("tjk_simhash: empty ungrouped input is null; a one-row group is its own hash") {
+    val simhash = graft.tjk.expressions.NativeFunctions.simhashNative(spark, col("h"))
+    val hs = Seq[(Long, java.lang.Long)]((1L, 5L), (2L, -7L), (3L, null))
+      .toDF("g", "h").repartition(2)
+    val empty = hs.where(col("g") < 0L).agg(simhash).collect()
+    assert(empty.length == 1 && empty(0).isNullAt(0), empty.mkString)
+    // one row: bit i is +1 where h has it, −1 elsewhere, so the fold is h;
+    // a null h still counts as a row, every bit −1 ⇒ 0
+    val oneRow = hs.groupBy("g").agg(simhash).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(oneRow == Map(1L -> 5L, 2L -> -7L, 3L -> 0L))
+  }
+
   test("simhash (both token hashes): planted dups found; signature deterministic") {
     for (h <- Seq(TextOps.TokenHash.Xx64, TextOps.TokenHash.Md5Hex)) {
       val pairs = TextOps.simhashPairs(planted, maxHamming = 6, hash = h).collect()

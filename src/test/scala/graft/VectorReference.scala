@@ -1,15 +1,34 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.tjk.VectorOps.{cosine, dotPrim, normPrim, round6}
+import graft.tjk.VectorOps.{dotPrim, normPrim, round6}
 
 /** Exact similarity-search reference forms that the tests pin the
   * production paths in [[graft.tjk.VectorOps]] against. Same output
   * schemas and rounding as the paths they check; none is meant to scale.
   */
 object VectorReference {
+
+  /** Σ aᵢ·bᵢ in double, sequential index order (higher-order-function form). */
+  def dot(a: Column, b: Column): Column =
+    aggregate(
+      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0),
+      (acc, v) => acc + v)
+
+  /** The composable cosine, `dot(a,b)/(sqrt(dot(a,a))·sqrt(dot(b,b)))`: the
+    * bit-for-bit reference for the native kernel
+    * [[graft.tjk.expressions.CosineSimilarity]], with the same zero-norm
+    * rule (0.0). The `when` guard also keeps Spark 4's default ANSI mode
+    * from throwing DIVIDE_BY_ZERO (the division only evaluates on the
+    * non-zero branch).
+    */
+  def cosine(a: Column, b: Column): Column = {
+    val denom = sqrt(dot(a, a)) * sqrt(dot(b, b))
+    when(denom === 0.0, lit(0.0)).otherwise(dot(a, b) / denom)
+  }
 
   /** Exact top-k by cosine for each query vector. Output:
     * (qid, vid, cos, rank); rank deterministic via (rounded cos desc, vid).
