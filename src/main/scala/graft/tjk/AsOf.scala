@@ -43,9 +43,7 @@ object AsOf {
       payload: Seq[String],
       tieCol: Option[String] = None,
       tolerance: Option[Duration] = None,
-      strict: Boolean = false,
-      matchedTsCol: Option[String] = None): DataFrame = {
-    requireMatchedTsColFree(matchedTsCol, spine, payload)
+      strict: Boolean = false): DataFrame = {
     val (sp, ev, spTag) = tagged(spine, events, entity, spineTs, eventTs, payload, tieCol, strict)
     val unioned = sp.unionByName(ev)
     val w = Window.partitionBy(col("__e"))
@@ -55,7 +53,7 @@ object AsOf {
       .withColumn("__match", last(col("__pay"), ignoreNulls = true).over(w))
       .where(col("__tag") === spTag)
     val withTol = applyTolerance(matched, tolerance)
-    finish(withTol, payload, matchedTsCol)
+    finish(withTol, payload)
   }
 
   /** Fallback: sort-merge over co-sorted partitions, streaming two-pointer in
@@ -168,19 +166,6 @@ object AsOf {
     (sp, ev, spTag)
   }
 
-  /** matchedTsCol must not shadow an existing output column — unguarded it
-    * would produce a DataFrame with two same-named columns that fails with
-    * AMBIGUOUS_REFERENCE only at the first downstream use, far from here.
-    */
-  private def requireMatchedTsColFree(
-      matchedTsCol: Option[String],
-      spine: DataFrame,
-      payload: Seq[String]): Unit =
-    matchedTsCol.foreach { n =>
-      require(!spine.columns.contains(n) && !payload.contains(n),
-        s"matchedTsCol '$n' collides with a spine or payload column")
-    }
-
   private def applyTolerance(matched: DataFrame, tolerance: Option[Duration]): DataFrame =
     tolerance match {
       case Some(d) =>
@@ -190,13 +175,7 @@ object AsOf {
       case None => matched
     }
 
-  private def finish(
-      matched: DataFrame,
-      payload: Seq[String],
-      matchedTsCol: Option[String]): DataFrame = {
-    val payCols = payload.map(p => col("__match").getField(p).as(p))
-    val mtsCol = matchedTsCol.map(n =>
-      timestamp_micros(col("__match.__mts")).as(n)).toSeq
-    matched.select(col("__row.*") +: (payCols ++ mtsCol): _*)
-  }
+  private def finish(matched: DataFrame, payload: Seq[String]): DataFrame =
+    matched.select(col("__row.*") +:
+      payload.map(p => col("__match").getField(p).as(p)): _*)
 }

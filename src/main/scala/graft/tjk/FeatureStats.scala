@@ -37,6 +37,12 @@ object FeatureStats {
     */
   val MaxExactDomain: Long = 2000000L
 
+  /** Laplace smoothing added to every bin COUNT by [[psi]] and [[iv]]. */
+  val Smoothing = 0.5
+
+  /** Tukey fence multiplier of [[outlierReport]] and [[outlierBoundsApprox]]. */
+  val TukeyK = 1.5
+
   private def requireBoundedDomain(
       nDistinct: Long, maxDomain: Long, op: String, col: String): Unit =
     require(nDistinct <= maxDomain,
@@ -119,18 +125,19 @@ object FeatureStats {
     */
   def psi(
       a: DataFrame, b: DataFrame, valueCol: String,
-      binWidth: Double, nBins: Int, eps: Double = 0.5): DataFrame =
-    psiTagged(tagged(a, b, valueCol), valueCol, col(SideTag), binWidth, nBins, eps)
+      binWidth: Double, nBins: Int): DataFrame =
+    psiTagged(tagged(a, b, valueCol), valueCol, col(SideTag), binWidth, nBins)
 
   /** PSI between the rows of `df` where `isA` holds (expected) and the rest
     * (actual), over fixed-width bins of `valueCol`, with Laplace smoothing
-    * `eps` on the COUNTS (so empty bins are defined on both sides):
+    * [[Smoothing]] on the COUNTS (so empty bins are defined on both sides):
     * PSI = Σ_bins (p_b − p_a) · ln(p_b / p_a). One binned count shuffle
     * counts both sides; the Σ runs over ≤ nBins rows.
     */
   private[graft] def psiTagged(
       df: DataFrame, valueCol: String, isA: Column,
-      binWidth: Double, nBins: Int, eps: Double = 0.5): DataFrame = {
+      binWidth: Double, nBins: Int): DataFrame = {
+    val eps = Smoothing
     val binned = df
       .where(col(valueCol).isNotNull)
       .groupBy(widthBin(col(valueCol), binWidth, nBins).as("bin"))
@@ -211,7 +218,7 @@ object FeatureStats {
     * "outlier handling"). Tukey fences from EXACT type-1 quartiles:
     * q1/q3 = the smallest value whose cumulative count reaches ceil(p·n)
     * (deterministic and oracle-replicable, never approx_percentile),
-    * lo/hi = q1 − k·IQR / q3 + k·IQR.
+    * lo/hi = q1 − k·IQR / q3 + k·IQR with k = [[TukeyK]].
     *
     * Scale shape: one grouped integer-count shuffle over the data
     * (cardinality ≤ the value domain), quartiles via a cumulative window
@@ -223,7 +230,7 @@ object FeatureStats {
     * report is bit-identical cross-engine and across partitionings.
     */
   def outlierReport(
-      df: DataFrame, f: NumFeature, kIqr: Double = 1.5,
+      df: DataFrame, f: NumFeature,
       maxDomain: Long = MaxExactDomain): DataFrame = {
     val vi = round(f.expr.cast("double") * f.scale).cast("long")
     val data = df.select(vi.as("vi")).where(col("vi").isNotNull)
@@ -246,8 +253,8 @@ object FeatureStats {
           min(when(col("cum") >= ceil(col("n") * 0.25), col("vi"))).as("q1c"),
           min(when(col("cum") >= ceil(col("n") * 0.75), col("vi"))).as("q3c"))
         .select(col("n"), col("q1c"), col("q3c"),
-          (col("q1c") - lit(kIqr) * (col("q3c") - col("q1c"))).as("loc"),
-          (col("q3c") + lit(kIqr) * (col("q3c") - col("q1c"))).as("hic")))
+          (col("q1c") - lit(TukeyK) * (col("q3c") - col("q1c"))).as("loc"),
+          (col("q3c") + lit(TukeyK) * (col("q3c") - col("q1c"))).as("hic")))
     } finally counts.unpersist()
     data.crossJoin(broadcast(bounds))
       .groupBy("n", "q1c", "q3c", "loc", "hic")
@@ -281,7 +288,7 @@ object FeatureStats {
     */
   def outlierBoundsApprox(
       df: DataFrame, c: Column, name: String,
-      kIqr: Double = 1.5, accuracy: Int = 10000): DataFrame =
+      accuracy: Int = 10000): DataFrame =
     df.where(c.isNotNull)
       .agg(
         count(lit(1)).as("n"),
@@ -292,9 +299,9 @@ object FeatureStats {
         round(col("q").getItem(0), 6).as("q1"),
         round(col("q").getItem(1), 6).as("q3"),
         round(col("q").getItem(0) -
-          lit(kIqr) * (col("q").getItem(1) - col("q").getItem(0)), 6).as("lo"),
+          lit(TukeyK) * (col("q").getItem(1) - col("q").getItem(0)), 6).as("lo"),
         round(col("q").getItem(1) +
-          lit(kIqr) * (col("q").getItem(1) - col("q").getItem(0)), 6).as("hi"))
+          lit(TukeyK) * (col("q").getItem(1) - col("q").getItem(0)), 6).as("hi"))
 
   /** Moment-based (k·σ) bounds from the exact integer moments — the cheap
     * single-aggregation alternative when quartiles aren't needed. Same
@@ -321,30 +328,16 @@ object FeatureStats {
 
   /** Information Value of a binned numeric feature against a binary label,
     * Laplace-smoothed: IV = Σ_bins (g_i − b_i) · ln(g_i / b_i) with
-    * g_i/b_i the smoothed shares of positive/negative rows in bin i.
+    * g_i/b_i the smoothed shares of positive/negative rows in bin i — the
+    * [[psiTagged]] sum with the negatives as side `a` and the positives as
+    * side `b`.
     */
   def iv(
       df: DataFrame, valueCol: String, labelCol: Column,
-      binWidth: Double, nBins: Int, eps: Double = 0.5): DataFrame = {
-    val counts = df
-      // a NULL label is unknown, not negative: unfiltered, when(labelCol,…)
-      // .otherwise falls through on null and every unlabeled row would
-      // silently inflate n_neg, skewing WoE/IV with no warning
-      .where(col(valueCol).isNotNull && labelCol.isNotNull)
-      .groupBy(widthBin(col(valueCol), binWidth, nBins).as("bin"))
-      .agg(
-        sum(when(labelCol, 1L).otherwise(0L)).as("n_pos"),
-        sum(when(labelCol, 0L).otherwise(1L)).as("n_neg"))
-    val bins = df.sparkSession.range(nBins.toLong)
-      .select(col("id").cast("int").as("bin"))
-    bins.join(counts, Seq("bin"), "left")
-      .na.fill(0L, Seq("n_pos", "n_neg"))
-      .withColumn("tp", sum(col("n_pos")).over(Window.partitionBy()))
-      .withColumn("tn", sum(col("n_neg")).over(Window.partitionBy()))
-      .select(((col("n_pos") + eps) / (col("tp") + eps * nBins) -
-          (col("n_neg") + eps) / (col("tn") + eps * nBins)).as("dg"),
-        log(((col("n_pos") + eps) / (col("tp") + eps * nBins)) /
-          ((col("n_neg") + eps) / (col("tn") + eps * nBins))).as("woe"))
-      .agg(round(sum(col("dg") * col("woe")), 6).as("iv"))
-  }
+      binWidth: Double, nBins: Int): DataFrame =
+    // a NULL label is unknown, not negative: unfiltered, `!labelCol` is
+    // NULL and every unlabeled row would silently count as a positive,
+    // skewing WoE/IV with no warning
+    psiTagged(df.where(labelCol.isNotNull), valueCol, !labelCol, binWidth, nBins)
+      .withColumnRenamed("psi", "iv")
 }

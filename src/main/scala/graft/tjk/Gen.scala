@@ -128,13 +128,10 @@ object Gen {
         length(col("text")).cast("long").as("n_chars"))
   }
 
-  /** Driver-side tiny generator for tests: same shape, seeded RNG. */
-  def turnsSeq(
-      seed: Long,
-      nConvs: Int,
-      maxLen: Int,
-      tieFrac: Double = 0.05,
-      breakFrac: Double = 0.10): Seq[Turn] = {
+  /** Driver-side tiny generator for tests: same shape, seeded RNG. 5% of
+    * gaps are 0 s (timestamp ties), 10% exceed the 30-min session gap.
+    */
+  def turnsSeq(seed: Long, nConvs: Int, maxLen: Int): Seq[Turn] = {
     val rng = new scala.util.Random(seed)
     (0 until nConvs).flatMap { i =>
       val convId = f"c$i%08d"
@@ -144,8 +141,8 @@ object Gen {
         if (t > 0) {
           val u = rng.nextDouble()
           val gapSec =
-            if (u < tieFrac) 0L
-            else if (u > 1.0 - breakFrac) 1801L + rng.nextInt(7200)
+            if (u < 0.05) 0L
+            else if (u > 1.0 - 0.10) 1801L + rng.nextInt(7200)
             else 5L + rng.nextInt(895)
           tsMicros += gapSec * 1000000L
         }

@@ -30,25 +30,22 @@ object Lineage {
     * content_hash). One extra narrow aggregation over the stage output; at
     * scale this is a map-side-combinable agg, not a second full shuffle.
     */
-  def manifest(df: DataFrame, stage: String, hashCols: Seq[String] = Nil): DataFrame = {
-    val cols = if (hashCols.nonEmpty) hashCols else df.columns.toSeq
+  def manifest(df: DataFrame, stage: String): DataFrame =
     df
-      .withColumn("__h", xxhash64(cols.map(col): _*))
+      .withColumn("__h", xxhash64(df.columns.toSeq.map(col): _*))
       .groupBy(spark_partition_id().as("partition_id"))
       .agg(
         count(lit(1)).as("row_count"),
         bit_xor(col("__h")).as("content_hash"))
       .select(lit(stage).as("stage"), col("partition_id"),
         col("row_count"), col("content_hash"))
-  }
 
   /** Table-level (partition-layout-independent) fingerprint. */
-  def tableFingerprint(df: DataFrame, hashCols: Seq[String] = Nil): (Long, Long) = {
-    val cols = if (hashCols.nonEmpty) hashCols else df.columns.toSeq
+  def tableFingerprint(df: DataFrame): (Long, Long) = {
     val r = df
       .agg(
         count(lit(1)).as("row_count"),
-        bit_xor(xxhash64(cols.map(col): _*)).as("content_hash"))
+        bit_xor(xxhash64(df.columns.toSeq.map(col): _*)).as("content_hash"))
       .collect()(0)
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
   }
@@ -66,31 +63,25 @@ object Resume {
 
   case class BucketResult(bucket: Int, skipped: Boolean, rowCount: Long, contentHash: Long)
 
-  /** Bucket-granular checkpoint/resume, ONE input pass per WAVE (default:
-    * one wave = one pass total).
+  /** Bucket-granular checkpoint/resume, ONE input pass per run.
     *
     * Buckets whose data dir + manifest verify are skipped off the manifest
-    * alone (no job). The missing buckets are computed in `waves` jobs —
-    * `job(input restricted to the wave's buckets)` written with
+    * alone (no job). The missing buckets are computed in ONE job —
+    * `job(input restricted to the missing buckets)` written with
     * `partitionBy(bucket)` — NOT one filtered scan per bucket: at 100 TB on
     * plain Parquet, B sequential `where(bucket = b)` jobs are B full passes
     * over the input (only Iceberg-style bucket-partition pruning would save
-    * them), while this shape reads the input `waves` times regardless of B
-    * (bytes-read pinned in ResumeSuite for waves=1). Per-bucket manifests
-    * are fingerprinted from the WRITTEN files (one pass over the output, the
+    * them), while this shape reads the input once regardless of B
+    * (bytes-read pinned in ResumeSuite). Per-bucket manifests are
+    * fingerprinted from the WRITTEN files (one pass over the output, the
     * same read-back-what-was-committed trust model as before), and each
-    * bucket still commits individually — data rename first, manifest last.
-    *
-    * `waves` is the input-passes vs restart-granularity dial: a crash loses
-    * at most the CURRENT wave's work (completed waves are committed), so
-    * waves=1 minimizes input scans and waves→B approaches the old
-    * per-bucket incremental commit at per-bucket scan cost. Note that the
-    * "reads the input once" claim is about THIS method's scans; a `job`
-    * whose own plan runs extra input passes (e.g. `rollingAgg`'s default
-    * skew detection on large inputs) adds its own — pass
+    * bucket still commits individually — data rename first, manifest last —
+    * so a crash during the commit loses only the uncommitted buckets. Note
+    * that the "reads the input once" claim is about THIS method's scans; a
+    * `job` whose own plan runs extra input passes (e.g. `rollingAgg`'s
+    * default skew detection on large inputs) adds its own — pass
     * `SkewPolicy.WindowOnly` inside the job to keep a strict one-scan
-    * budget; under Auto the session detection cache at least collapses the
-    * per-wave repeats to one job per distinct slice plan.
+    * budget.
     *
     * Contract (was implicit, now load-bearing): `job` must be
     * bucket-decomposable — `job(A ∪ B) == job(A) ∪ job(B)` for slices of
@@ -106,10 +97,9 @@ object Resume {
       entity: String,
       outDir: String,
       buckets: Int,
-      bucketCol: Option[org.apache.spark.sql.Column] = None,
-      waves: Int = 1)(
+      bucketCol: Option[org.apache.spark.sql.Column] = None)(
       job: DataFrame => DataFrame): Seq[BucketResult] = {
-    require(waves >= 1, s"waves must be >= 1, got $waves")
+    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     val root = new java.io.File(outDir)
     root.mkdirs()
     // Default bucket function: xxhash64(entity) mod buckets. Callers may
@@ -118,9 +108,9 @@ object Resume {
     // bucket value (md5(NULL) is NULL, so null entities under custom
     // expressions produce one) is routed to bucket 0 deterministically:
     // without this, null-bucket rows land in __HIVE_DEFAULT_PARTITION__
-    // where the fingerprint read-back NPEs on full waves and the isin slice
-    // silently DROPS them on partial waves — two different failure modes
-    // for the same data (ADVICE r3 item 1).
+    // where the fingerprint read-back NPEs on full runs and the isin slice
+    // silently DROPS them on partial recomputes — two different failure
+    // modes for the same data (ADVICE r3 item 1).
     val bucketOf = coalesce(
       bucketCol.getOrElse(
         pmod(xxhash64(col(entity)), lit(buckets.toLong))).cast("long"),
@@ -139,15 +129,11 @@ object Resume {
           .toOption.map(b -> _)
       else None
     }.toMap
-    val allMissing = (0 until buckets).filterNot(done.contains)
-    val waveGroups = // contiguous split into ≤ waves non-empty groups
-      if (allMissing.isEmpty) Seq.empty
-      else {
-        val w = math.min(waves, allMissing.size)
-        allMissing.grouped((allMissing.size + w - 1) / w).toSeq
-      }
+    val missing = (0 until buckets).filterNot(done.contains)
 
-    def computeWave(missing: Seq[Int]): Map[Int, (Long, Long)] = {
+    val computed: Map[Int, (Long, Long)] =
+      if (missing.isEmpty) Map.empty
+      else {
         // Clear half-committed leftovers of the missing buckets, then run
         // the ONE job over exactly those buckets' input rows.
         missing.foreach { b =>
@@ -193,9 +179,6 @@ object Resume {
         deleteRec(tmp)
         committed
       }
-
-    val computed: Map[Int, (Long, Long)] =
-      waveGroups.flatMap(computeWave).toMap
 
     (0 until buckets).map { b =>
       done.get(b) match {

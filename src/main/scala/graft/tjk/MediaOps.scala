@@ -23,9 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object MediaOps {
 
-  /** Typed metadata carried alongside the blob. */
-  case class MediaMeta(format: String, width: Int, height: Int, n_frames: Int)
-  case class MediaRow(doc_id: Long, blob: Array[Byte], meta: MediaMeta)
   case class MediaFeatures(
       doc_id: Long, n_bytes: Long, header_hex: String,
       mean_byte: Double, frame_hashes: Seq[Long])

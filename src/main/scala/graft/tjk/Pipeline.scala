@@ -19,16 +19,19 @@ case class FeatureSpec(
 
 object Pipeline {
 
-  /** `skewPolicy` threads to every rolling call. Under the default Auto one
-    * detection job runs, and the session detection cache collapses repeated
-    * calls over the same input to that ONE job.
+  private val entity = "conv_id"
+  private val tsCol = "ts"
+  private val tieCol = "turn_idx"
+
+  /** Over the transcript schema of BASELINE.json: entity `conv_id`, event
+    * time `ts`, tie-break `turn_idx`. `skewPolicy` threads to every rolling
+    * call. Under the default Auto one detection job runs, and the session
+    * detection cache collapses repeated calls over the same input to that
+    * ONE job.
     */
   def backfill(
       turns: DataFrame,
       spec: FeatureSpec,
-      entity: String = "conv_id",
-      tsCol: String = "ts",
-      tieCol: String = "turn_idx",
       skewPolicy: SkewPolicy = SkewPolicy.Auto): DataFrame = {
     var df = turns
     if (spec.rolling.nonEmpty)

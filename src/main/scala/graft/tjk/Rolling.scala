@@ -261,25 +261,22 @@ object Rolling {
 
   /** Approximate windowed nunique — the bounded-memory FAST path for O3:
     * HyperLogLog++ over the same trailing range frame, O(1) sketch state per
-    * frame evaluation. Use for monitoring/coarse features where ±rsd is
-    * acceptable; the exact default is [[Agg.NUnique]] via [[rollingAgg]]
-    * (WindowNUnique in-window, chunked incremental multiset for hot keys).
+    * frame evaluation. Use for monitoring/coarse features where ±5% relative
+    * error is acceptable; the exact default is [[Agg.NUnique]] via
+    * [[rollingAgg]] (WindowNUnique in-window, chunked incremental multiset
+    * for hot keys).
     */
   def approxRollingNunique(
       df: DataFrame,
       entity: String,
       tsCol: String,
       valueCol: String,
-      window: java.time.Duration,
-      rsd: Double = 0.05,
-      strict: Boolean = false): DataFrame = {
+      window: java.time.Duration): DataFrame = {
     val micros = window.toMillis * 1000L
     val frame = Window.partitionBy(col(entity)).orderBy(tsMicros(col(tsCol)))
-      .rangeBetween(-micros, if (strict) -1L else 0L)
-    df.withColumn(
-      s"approx_nunique_${valueCol}_${window.toSeconds}s" +
-        (if (strict) "_strict" else ""),
-      approx_count_distinct(col(valueCol), rsd).over(frame))
+      .rangeBetween(-micros, 0L)
+    df.withColumn(s"approx_nunique_${valueCol}_${window.toSeconds}s",
+      approx_count_distinct(col(valueCol), 0.05).over(frame))
   }
 
   private[tjk] def aggColumn(

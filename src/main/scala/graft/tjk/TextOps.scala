@@ -140,11 +140,10 @@ object TextOps {
     */
   def exactDedup(
       docs: DataFrame,
-      idCol: String = "doc_id",
       scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    val fp = scope.track(docs.select(col(idCol), md5(col("text")).as("fp"))
+    val fp = scope.track(docs.select(col("doc_id"), md5(col("text")).as("fp"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    dedupByFingerprint(fp, idCol).select(col(idCol), col("fp"),
+    dedupByFingerprint(fp).select(col("doc_id"), col("fp"),
       col("canonical_id"), col("group_size"))
   }
 
@@ -154,9 +153,9 @@ object TextOps {
     * persisted) a fingerprint projection as part of a wider pass reuse it
     * here instead of paying [[exactDedup]]'s second corpus scan.
     */
-  def dedupByFingerprint(fp: DataFrame, idCol: String = "doc_id"): DataFrame = {
+  def dedupByFingerprint(fp: DataFrame): DataFrame = {
     val groups = fp.groupBy("fp").agg(
-      min(col(idCol)).as("canonical_id"),
+      min(col("doc_id")).as("canonical_id"),
       count(lit(1)).as("group_size"))
     fp.join(groups, "fp")
   }
@@ -164,10 +163,10 @@ object TextOps {
   // ------------------------------------------------------------ shingles
 
   /** Distinct word k-shingles per doc; docs shorter than k words drop out. */
-  def shingles(docs: DataFrame, k: Int = Shingle, idCol: String = "doc_id"): DataFrame =
+  def shingles(docs: DataFrame, k: Int = Shingle): DataFrame =
     withTokens(spread(docs))
       .where(size(col("ws")) >= k)
-      .select(col(idCol), explode(expr(
+      .select(col("doc_id"), explode(expr(
         s"array_distinct(transform(sequence(0, size(ws) - $k), i -> concat_ws(' ', slice(ws, i + 1, $k))))"
       )).as("g"))
 
@@ -184,8 +183,8 @@ object TextOps {
     * Integer counts first, ONE float division rounded at 6dp (the
     * cross-engine discipline that keeps ratio columns bit-exact).
     */
-  def repetitionStats(
-      docs: DataFrame, k: Int = Shingle, idCol: String = "doc_id"): DataFrame = {
+  def repetitionStats(docs: DataFrame): DataFrame = {
+    val k = Shingle
     // gram identity = the k-token TUPLE, not a concatenated string: tokens
     // come from splitting on ' ' so they cannot contain the separator, and
     // struct equality reads the existing token bytes in place — no per-gram
@@ -194,7 +193,7 @@ object TextOps {
     val fields = (0 until k).map(j => s"'t$j', ws[i + $j]").mkString(", ")
     withTokens(spread(docs))
       .where(col("text").isNotNull && size(col("ws")) >= k)
-      .select(col(idCol),
+      .select(col("doc_id"),
         (size(col("ws")) - (k - 1)).cast("long").as("n_grams"),
         expr(s"size(array_distinct(transform(sequence(0, size(ws) - $k), " +
           s"i -> named_struct($fields))))")
@@ -251,7 +250,6 @@ object TextOps {
   def ngramJaccardPairs(
       docs: DataFrame,
       threshold: Double,
-      k: Int = Shingle,
       maxShingleDf: Int = HotShingleDf,
       scope: CacheScope = CacheScope.unmanaged): DataFrame = {
     // The shingle fan-out feeds several consumers (df-cap, candidate self-
@@ -261,7 +259,7 @@ object TextOps {
     // blocks stay LRU-evictable (MEMORY_AND_DISK storage is reclaimed under
     // executor memory pressure); a caller wanting eager release passes a
     // [[CacheScope]] and releases after consuming the result.
-    val sh = scope.track(shingles(docs, k)
+    val sh = scope.track(shingles(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // hot is tiny by construction but its PLAN is a full-corpus groupBy
     // over the shingle fan-out — unpersisted it would re-run for each of
@@ -323,7 +321,7 @@ object TextOps {
     * bottleneck. Values are unchanged: `md5(j || ':' || g)` per (j, shingle),
     * `min` per (doc, j), assembled in j order.
     */
-  def minhashSignatures(docs: DataFrame, k: Int = Shingle): DataFrame =
+  def minhashSignatures(docs: DataFrame): DataFrame =
     // ONE typed aggregate per doc ([[expressions.MinHashSig]]) replaces the
     // explode(MinHashK) + builtin-md5 + two-level groupBy pipeline: element
     // j of `sig` is byte-for-byte min(md5(concat("<j>:", g))) over the
@@ -335,7 +333,7 @@ object TextOps {
     // exchange that reassembled per-doc arrays from (doc_id, j) mins are
     // all gone: one exchange on doc_id, one k×16-byte buffer per doc
     // through it.
-    shingles(docs, k)
+    shingles(docs)
       .groupBy("doc_id")
       .agg(expressions.NativeFunctions
         .minhashSigNative(docs.sparkSession, col("g"), MinHashK).as("sig"))
@@ -390,10 +388,7 @@ object TextOps {
   }
 
   /** 64-bit SimHash over word tokens. */
-  def simhash(
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      hash: TokenHash = TokenHash.Xx64): DataFrame = {
+  def simhash(docs: DataFrame, hash: TokenHash = TokenHash.Xx64): DataFrame = {
     // One 64-bit hash per token (the oracle-replicable formula), then ONE
     // typed aggregate per doc ([[expressions.SimHashAgg]]): the former
     // explode(sequence(0,63)) pushed tokens×64 rows through a hash
@@ -402,7 +397,7 @@ object TextOps {
     // 64 primitive counters per doc instead (value-identity argument in its
     // doc; pinned against the literal explode form for both token hashes
     // in TextVecSuite).
-    val tokens = withTokens(spread(docs)).select(col(idCol), explode(col("ws")).as("w"))
+    val tokens = withTokens(spread(docs)).select(col("doc_id"), explode(col("ws")).as("w"))
     val withH = hash match {
       case TokenHash.Xx64 =>
         tokens.withColumn("h", xxhash64(col("w")))
@@ -418,7 +413,7 @@ object TextOps {
             "shiftleft(CAST(conv(substring(hx, 1, 8), 16, 10) AS BIGINT), 32)" +
               " | CAST(conv(substring(hx, 9, 8), 16, 10) AS BIGINT)"))
     }
-    withH.groupBy(idCol)
+    withH.groupBy("doc_id")
       .agg(expressions.NativeFunctions
         .simhashNative(docs.sparkSession, col("h")).as("simhash"))
   }

@@ -37,8 +37,6 @@ object Agg {
   case object Max extends Agg { val name = "max" }
   case object NUnique extends Agg { val name = "nunique" }
   val all: Seq[Agg] = Seq(Count, Sum, Mean, Min, Max, NUnique)
-  def byName(n: String): Agg = all.find(_.name == n).getOrElse(
-    throw new IllegalArgumentException(s"unknown agg: $n"))
 }
 
 /** Skew policy for [[Rolling.rollingAgg]] (SURVEY.md §4.2: AQE splits

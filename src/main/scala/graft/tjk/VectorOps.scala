@@ -22,10 +22,14 @@ import org.apache.spark.sql.functions._
   */
 object VectorOps {
 
-  /** Sign-LSH defaults: 64 hyperplanes in 16 bands of 4 bits. Shared with the
+  /** Sign-LSH shape: 64 hyperplanes in 16 bands of 4 bits. Shared with the
     * DuckDB oracle SQL (TextVecQueries) so both engines band identically. */
   val LshPlanes = 64
   val LshBands = 16
+
+  /** [[kmeansCentroids]]: Lloyd rounds, and the training-sample cap. */
+  val KmeansIters = 3
+  val KmeansSampleMax = 65536
 
   // ------------------------------------------------- sign-LSH near-dup (scale path)
 
@@ -49,16 +53,16 @@ object VectorOps {
     * the 100 TB path, mirroring the [[TextOps.minhashLshPairs]] band-join
     * shape; no driver collect, no all-pairs join anywhere:
     *
-    *  1. per-vector sign signature (nPlanes bits) via the codegen'd
+    *  1. per-vector sign signature ([[LshPlanes]] bits) via the codegen'd
     *     [[expressions.HyperplaneSignature]] — one narrow scan;
-    *  2. signature split into `bands` md5-hashed bands; candidate pairs =
+    *  2. signature split into [[LshBands]] md5-hashed bands; candidate pairs =
     *     vectors sharing a (band, hash) bucket — shuffle is on the band hash,
     *     so work is proportional to bucket sizes, not n²;
     *  3. candidates verified with the exact codegen'd cosine (join back to
     *     the corpus by id — candidates stay id-only through the shuffle).
     *
     * Approximate by construction: a qualifying pair that shares no band is
-    * missed (P[miss] = (1−pʳ)^B with p = 1 − θ/π). With the 64/16 defaults,
+    * missed (P[miss] = (1−pʳ)^B with p = 1 − θ/π). With 64 planes in 16 bands,
     * recall ≈ 0.94 at cosine 0.4 and > 0.999 at the 0.9+ thresholds real
     * near-dup dedup runs at; precision is exactly 1 (every emitted pair
     * carries its true cosine). Recall vs the exact path is pinned in
@@ -69,12 +73,9 @@ object VectorOps {
       vecs: DataFrame,
       threshold: Double,
       dim: Int = 64,
-      nPlanes: Int = LshPlanes,
-      bands: Int = LshBands,
       scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    require(nPlanes % bands == 0, s"bands $bands must divide nPlanes $nPlanes")
     val spark = vecs.sparkSession
-    val r = nPlanes / bands
+    val r = LshPlanes / LshBands
     // cache the signatures: the band self-join consumes this subplan twice
     // (x and y sides), and without the cache each side re-scans the corpus
     // and re-evaluates the signature — same branch-point discipline as
@@ -88,10 +89,10 @@ object VectorOps {
     // parallelizes the pair-expansion stage without touching its values.
     val sig = scope.track(TextOps.spread(vecs).select(col("vec_id"),
       expressions.NativeFunctions.hyperplaneSigNative(
-        spark, col("embedding"), hyperplanes(nPlanes, dim)).as("bitstr"))
+        spark, col("embedding"), hyperplanes(LshPlanes, dim)).as("bitstr"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val bandRows = sig.select(col("vec_id"), explode(expr(
-        s"transform(sequence(0, ${bands - 1}), " +
+        s"transform(sequence(0, ${LshBands - 1}), " +
           s"b -> struct(b AS band, md5(substring(bitstr, b * $r + 1, $r)) AS h))"
       )).as("bh"))
       .select(col("vec_id"), col("bh.band").as("band"), col("bh.h").as("h"))
@@ -184,21 +185,17 @@ object VectorOps {
   /** Deterministic spherical k-means centroids for IVF cell assignment.
     *
     * Init: the nCells training vectors with the smallest xxhash64(vec_id) —
-    * pseudo-random but reproducible, no RNG state. Then `iters` Lloyd
-    * rounds: assign each training vector to its nearest centroid by cosine
+    * pseudo-random but reproducible, no RNG state. Then [[KmeansIters]]
+    * Lloyd rounds: assign each training vector to its nearest centroid by cosine
     * (broadcast join, codegen'd cosine), recompute each centroid as the
     * element-wise mean of its members (empty cells keep their previous
-    * centroid). The training set is capped at `sampleMax` vectors via a
+    * centroid). The training set is capped at [[KmeansSampleMax]] vectors via a
     * smallest-hash sample (TakeOrdered — per-partition top-k, no full sort),
     * so fit cost and the O(nCells·dim) driver-side centroid state are
     * bounded at ANY corpus size; the full corpus is assigned exactly once,
     * distributed, by the caller.
     */
-  def kmeansCentroids(
-      vecs: DataFrame,
-      nCells: Int,
-      iters: Int = 3,
-      sampleMax: Int = 65536): DataFrame = {
+  def kmeansCentroids(vecs: DataFrame, nCells: Int): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
@@ -207,12 +204,12 @@ object VectorOps {
     val train = vecs
       .select(col("vec_id"), col("embedding"))
       .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-      .limit(sampleMax)
+      .limit(KmeansSampleMax)
       .cache()
     var cents: Array[(Int, Array[Float])] = train.limit(nCells)
       .select("embedding").as[Array[Float]].collect()
       .zipWithIndex.map { case (e, i) => (i, e) }
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to KmeansIters) {
       val cdf = broadcast(
         spark.createDataFrame(cents.toSeq).toDF("cid", "ce"))
       val w = Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cid"))
@@ -226,7 +223,7 @@ object VectorOps {
       // the last ulp (enough to flip a near-equidistant assignment across
       // runs). Long sums are associative ⇒ bit-identical on every run/layout;
       // 2^-20 quantization (~1e-6) is far below any meaningful centroid
-      // resolution. |v| ≲ 6 ⇒ per-row ≤ 2^23, ×sampleMax ≪ 2^63 (no ANSI
+      // resolution. |v| ≲ 6 ⇒ per-row ≤ 2^23, ×KmeansSampleMax ≪ 2^63 (no ANSI
       // overflow).
       val Q = 1048576L // 2^20
       val means = assigned
@@ -255,14 +252,13 @@ object VectorOps {
       queryIds: Column, // predicate over vec_id selecting queries
       k: Int,
       nCells: Int,
-      nProbe: Int,
-      kmeansIters: Int = 3): DataFrame = {
+      nProbe: Int): DataFrame = {
     // Native codegen'd cosine (expressions.CosineSimilarity): the hot loop of
     // the cell assignment runs inside WholeStageCodegen instead of the
     // interpreted zip_with/aggregate path (~2000x per-pair).
     val cosN = (a: Column, b: Column) =>
       expressions.NativeFunctions.cosineNative(vecs.sparkSession, a, b)
-    val cents = broadcast(kmeansCentroids(vecs, nCells, kmeansIters))
+    val cents = broadcast(kmeansCentroids(vecs, nCells))
     def nearestCells(df: DataFrame, idC: String, vecC: String, keep: Int) = {
       val joined = df.join(cents)
         .withColumn("ccos", round(cosN(col(vecC), col("ce")), 6))

@@ -33,9 +33,6 @@ class ResumeSuite extends SparkTestBase {
       spark.read.parquet((0 until buckets).map(b => s"$outDir/bucket=$b"): _*))
 
     // Simulate a crash that lost bucket 1 (data + manifest).
-    def deleteRec(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(deleteRec); f.delete()
-    }
     deleteRec(new java.io.File(s"$outDir/bucket=1"))
     new java.io.File(s"$outDir/manifest_1.json").delete()
     val mtimes = (0 until buckets).filter(_ != 1)
@@ -109,32 +106,17 @@ class ResumeSuite extends SparkTestBase {
     assert(secondBytes == 0L,
       s"fully-resumed run still read $secondBytes bytes")
 
-    def deleteRec(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(deleteRec); f.delete()
-    }
     deleteRec(new java.io.File(outDir)); deleteRec(new java.io.File(inDir))
   }
 
-  test("waves split the missing buckets into committed groups with identical results") {
-    // waves = the input-passes vs restart-granularity dial: same manifests
-    // and same committed output as the one-pass run, bucket for bucket.
-    val input = turnsDf(Gen.turnsSeq(44L, 16, 25))
-    val one = Files.createTempDirectory("tjk_resume_w1").toString
-    val four = Files.createTempDirectory("tjk_resume_w4").toString
-    val r1 = Resume.runBucketed(spark, input, "conv_id", one, 8)(job)
-    val r4 = Resume.runBucketed(spark, input, "conv_id", four, 8, waves = 4)(job)
-    assert(r4.forall(!_.skipped))
-    assert(r1.map(r => (r.bucket, r.rowCount, r.contentHash)) ==
-      r4.map(r => (r.bucket, r.rowCount, r.contentHash)))
-    val fp1 = Lineage.tableFingerprint(
-      spark.read.parquet((0 until 8).map(b => s"$one/bucket=$b"): _*))
-    val fp4 = Lineage.tableFingerprint(
-      spark.read.parquet((0 until 8).map(b => s"$four/bucket=$b"): _*))
-    assert(fp1 == fp4)
-    def deleteRec(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(deleteRec); f.delete()
+  test("zero buckets fail loudly instead of silently dropping every row") {
+    val input = turnsDf(Gen.turnsSeq(44L, 4, 10))
+    val outDir = Files.createTempDirectory("tjk_resume_zero").toString
+    val ex = intercept[IllegalArgumentException] {
+      Resume.runBucketed(spark, input, "conv_id", outDir, 0)(job)
     }
-    deleteRec(new java.io.File(one)); deleteRec(new java.io.File(four))
+    assert(ex.getMessage.contains("buckets must be >= 1, got 0"), ex.getMessage)
+    deleteRec(new java.io.File(outDir))
   }
 
   test("a corrupt manifest routes its bucket to recompute instead of wedging resume") {
@@ -149,9 +131,6 @@ class ResumeSuite extends SparkTestBase {
     assert(!second.find(_.bucket == 2).get.skipped)
     assert(second.map(r => (r.bucket, r.rowCount, r.contentHash)).toSet ==
       first.map(r => (r.bucket, r.rowCount, r.contentHash)).toSet)
-    def deleteRec(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(deleteRec); f.delete()
-    }
     deleteRec(new java.io.File(outDir))
   }
 
@@ -179,9 +158,6 @@ class ResumeSuite extends SparkTestBase {
 
     // Crash bucket 0 (the null home) and resume with a PARTIAL wave: the
     // recomputed slice must still include the null rows.
-    def deleteRec(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(deleteRec); f.delete()
-    }
     deleteRec(new java.io.File(s"$outDir/bucket=0"))
     new java.io.File(s"$outDir/manifest_0.json").delete()
     val second = Resume.runBucketed(spark, input, "conv_id", outDir, 4,

@@ -442,9 +442,6 @@ class TextVecSuite extends SparkTestBase {
         "looks like the corpus was scored twice")
     assert(spark.sharedState.cacheManager.isEmpty,
       "curate must release its scoped persist before returning")
-    def deleteRec(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(deleteRec); f.delete()
-    }
     deleteRec(new java.io.File(dir))
   }
 
@@ -561,9 +558,6 @@ class TextVecSuite extends SparkTestBase {
     val out = TextVecQueries.decontam(spark, dir).collect()
     assert(out.map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_shared_grams")))
       .toSeq == Seq((trainId, 3L)))
-    def deleteRec(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(deleteRec); f.delete()
-    }
     deleteRec(new java.io.File(dir))
   }
 
