@@ -452,7 +452,9 @@ object CoreQueries {
   /** The overlap-chunked rolling window (Skew.chunkedRollingAgg) — the skew
     * mechanism for hot entities — against the SAME window SQL shape as q01:
     * chunking is result-invariant, so the plain window oracle is the
-    * strongest possible check of the chunk/context/owner machinery.
+    * strongest possible check of the chunk/context/owner machinery. The span
+    * is the router's (`Rolling.MaxChunkWindows` × 24 h), so rows
+    * outside the 24 h context band take the owner-only branch.
     */
   def chunkedRolling(spark: SparkSession, dir: String): DataFrame =
     Skew.chunkedRollingAgg(t(spark, dir), "conv_id", "ts", Seq(
@@ -460,7 +462,7 @@ object CoreQueries {
         RollingSpec("value", Agg.Sum, H1),
         RollingSpec("value", Agg.Min, D1),
         RollingSpec("value", Agg.Max, D1)),
-      chunkSpanMicros = D1.toMillis * 1000L)
+      chunkSpanMicros = Rolling.MaxChunkWindows * D1.toMillis * 1000L)
       .select(col("conv_id"), col("turn_idx"),
         col("count_value_3600s"),
         round(col("sum_value_3600s"), 6).as("sum_value_3600s"),
@@ -482,13 +484,14 @@ object CoreQueries {
 
   /** O3 exact windowed nunique through the bounded-memory chunked path
     * (incremental multiset state, O(distinct-in-frame) per task instead of
-    * collect_set's per-row frame heap) — same oracle as q04.
+    * collect_set's per-row frame heap) — same oracle as q04. Same span as
+    * q26, so both the band and the owner-only branch run.
     */
   def chunkedNunique(spark: SparkSession, dir: String): DataFrame =
     Skew.chunkedRollingAgg(t(spark, dir), "conv_id", "ts", Seq(
         RollingSpec("role", Agg.NUnique, H1),
         RollingSpec("tool", Agg.NUnique, D1)),
-      chunkSpanMicros = D1.toMillis * 1000L)
+      chunkSpanMicros = Rolling.MaxChunkWindows * D1.toMillis * 1000L)
       .select(col("conv_id"), col("turn_idx"),
         col("nunique_role_3600s"), col("nunique_tool_86400s"))
       .orderBy("conv_id", "turn_idx")

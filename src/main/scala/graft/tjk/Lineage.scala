@@ -155,15 +155,27 @@ object Resume {
         // partition-less parquet dir has no schema to infer).
         val anyWritten = Option(tmp.listFiles()).getOrElse(Array.empty)
           .exists(_.getName.startsWith("__bucket="))
-        val fps: Map[Int, (Long, Long)] =
-          if (!anyWritten) Map.empty
+        val fpRows =
+          if (!anyWritten) Array.empty[org.apache.spark.sql.Row]
           else spark.read.parquet(tmp.getPath)
             .groupBy(col("__bucket").cast("long").as("__b"))
             .agg(count(lit(1)).as("__cnt"),
               bit_xor(xxhash64(dataCols.map(col): _*)).as("__hash"))
             .collect()
-            .map(r => r.getLong(0).toInt ->
-              ((r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2)))).toMap
+        // A bucket value outside [0, buckets) has no bucket to commit to:
+        // its rows would be deleted with _tmp_run and left out of every
+        // manifest. Fail before any rename instead of dropping them.
+        val stray = fpRows.filter { r => r.getLong(0) < 0L || r.getLong(0) >= buckets }
+        if (stray.nonEmpty) {
+          deleteRec(tmp)
+          throw new IllegalArgumentException(
+            s"bucketCol produced values outside [0, $buckets): " +
+              stray.map(_.getLong(0)).sorted.mkString(", ") +
+              s" (${stray.map(_.getLong(1)).sum} rows); nothing was committed")
+        }
+        val fps: Map[Int, (Long, Long)] = fpRows
+          .map(r => r.getLong(0).toInt ->
+            ((r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2)))).toMap
         // Commit per bucket: data rename first, manifest last. A bucket with
         // no rows gets an empty committed dir + a (0, 0) manifest, so the
         // full bucket domain is always accounted for.

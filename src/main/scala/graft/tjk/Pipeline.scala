@@ -27,7 +27,9 @@ object Pipeline {
     * time `ts`, tie-break `turn_idx`. `skewPolicy` threads to every rolling
     * call. Under the default Auto one detection job runs, and the session
     * detection cache collapses repeated calls over the same input to that
-    * ONE job.
+    * ONE job. Lags, ffill and sessionize all order by (ts, turn_idx): a lag
+    * never reads a row with a later ts (even when ts runs backwards against
+    * turn_idx), and the three share one sort.
     */
   def backfill(
       turns: DataFrame,
@@ -37,7 +39,7 @@ object Pipeline {
     if (spec.rolling.nonEmpty)
       df = Rolling.rollingAgg(df, entity, tsCol, spec.rolling, skewPolicy)
     if (spec.rows.nonEmpty) df = Rolling.rowsAgg(df, entity, tsCol, tieCol, spec.rows)
-    if (spec.lags.nonEmpty) df = Offsets.lags(df, entity, Seq(tieCol, tsCol), spec.lags)
+    if (spec.lags.nonEmpty) df = Offsets.lags(df, entity, Seq(tsCol, tieCol), spec.lags)
     if (spec.ffillCols.nonEmpty) df = Offsets.ffill(df, entity, Seq(tsCol, tieCol), spec.ffillCols)
     spec.sessionGap.foreach { g => df = Sessionize.sessionize(df, entity, tsCol, tieCol, g) }
     df

@@ -52,6 +52,13 @@ object Rolling {
     */
   val MaxHotKeys = 10000
 
+  /** The router's chunk span, in max windows: each chunk duplicates its last
+    * max window (the context band) into the next, so a span of one max
+    * window would shuffle and slide every hot row twice; at 8 the band is
+    * 1/8 of a chunk.
+    */
+  val MaxChunkWindows = 8L
+
   /** Trailing time-window aggregates; adds one column per spec.
     *
     * Under the default [[SkewPolicy.Auto]] this runs a small detection job
@@ -60,8 +67,9 @@ object Rolling {
     * §4.2). No hot keys — the overwhelmingly common case — returns the
     * plain single-Window-node plan unchanged (ONE exchange, pinned in
     * PlanShapeSuite). With hot keys, cold entities keep that plan and hot
-    * entities go through the chunked path; results are identical
-    * (SkewSuite property), only the task layout changes.
+    * entities go through the chunked path in chunks of [[MaxChunkWindows]]
+    * max windows; results are identical (SkewSuite property), only the task
+    * layout changes.
     */
   def rollingAgg(
       df: DataFrame,
@@ -88,7 +96,10 @@ object Rolling {
       // (Catalyst plans it as an InSet hash probe; SkewSuite pins the cap).
       val isHot = coalesce(col(entity).isin(hot: _*), lit(false)) &&
         col(tsCol).isNotNull
-      val chunkSpan = specs.map(_.windowMicros).max
+      // One max window when 8 of them overflow: any span ≥ maxW is exact.
+      val maxW = specs.map(_.windowMicros).max
+      val chunkSpan =
+        if (maxW > Long.MaxValue / MaxChunkWindows) maxW else MaxChunkWindows * maxW
       val cold = windowRolling(df.where(!isHot), entity, tsCol, specs)
       val hotDf = Skew.chunkedRollingAgg(
         df.where(isHot), entity, tsCol, specs, chunkSpan)

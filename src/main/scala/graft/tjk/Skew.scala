@@ -19,10 +19,13 @@ import graft.tjk.expressions.WindowNUnique.normalize
   *  - [[chunkedRollingAgg]]: rolling windows over a hot entity. A Catalyst
   *    Window node processes each partition-key group on ONE task — AQE skew
   *    splitting does not apply (it is join-only). We chunk each entity's
-  *    timeline into spans ≥ the max window width, duplicate each chunk's last
-  *    `maxW` of rows into the next chunk as non-owner context, repartition by
-  *    (entity, chunk), and compute the trailing frames with an exact sliding
-  *    structure in mapPartitions, emitting owner rows only. Count/nunique/
+  *    timeline into spans ≥ the max window width `maxW`, duplicate each
+  *    chunk's last `maxW` of rows (the context band) into the next chunk as
+  *    non-owner context, repartition by (entity, chunk), and compute the
+  *    trailing frames with an exact sliding structure in mapPartitions,
+  *    emitting owner rows only. The band is `maxW` of a `span`, so a span of
+  *    one `maxW` duplicates EVERY row; [[Rolling.rollingAgg]] passes
+  *    `Rolling.MaxChunkWindows` max windows, so 1/8 of them. Count/nunique/
   *    min/max results are byte-identical to [[Rolling.rollingAgg]]
   *    (property-tested); sum/mean agree to floating-point summation-order
   *    equivalence — byte-identical whenever per-frame adds are exact (ints,
@@ -80,9 +83,12 @@ object Skew {
     * and output schema as [[Rolling.rollingAgg]], but a hot entity's rows are
     * spread over ceil(timespan / chunkSpan) tasks instead of one.
     *
-    * chunkSpanMicros must be ≥ max window width so each row's trailing frame
-    * lives entirely in its own chunk plus the previous chunk's tail (which is
-    * duplicated forward as context).
+    * chunkSpanMicros must be ≥ max window width `maxW` so each row's
+    * trailing frame lives entirely in its own chunk plus the previous
+    * chunk's last `maxW` (the context band, duplicated forward). Rows in the
+    * band are shuffled and slid twice, so the duplicated share is
+    * maxW / chunkSpanMicros: all rows at a span of one `maxW`, 1/8 at the
+    * router's span (`Rolling.MaxChunkWindows` max windows).
     */
   def chunkedRollingAgg(
       df: DataFrame,

@@ -62,6 +62,28 @@ class LeakageSuite extends SparkTestBase {
     }
   }
 
+  test("delete-the-future: backfill lags never read a later ts when ts runs backwards") {
+    // turn_idx and ts disagree: turn 1 happened BEFORE turn 0. A lag over
+    // (turn_idx, ts) would hand turn 1 the value of turn 0, a row from its
+    // future; over (ts, turn_idx) it sees only earlier-ts rows.
+    val spark2 = spark
+    import spark2.implicits._
+    val t0 = 1700000000000L
+    val rows = Seq((0, 600), (1, 0), (2, 900), (3, 300), (4, 1200))
+      .map { case (i, sec) => ("c0", i, new java.sql.Timestamp(t0 + sec * 1000L), (10 + i).toDouble) }
+    val spec = FeatureSpec(lags = Seq(("value", 1), ("value", 2)),
+      sessionGap = Some(Duration.ofMinutes(30)))
+    def features(rs: Seq[(String, Int, java.sql.Timestamp, Double)]) =
+      Pipeline.backfill(rs.toDF("conv_id", "turn_idx", "ts", "value"), spec)
+        .select("turn_idx", "lag_value_1", "lag_value_2").collect()
+        .map(r => r.getInt(0) -> Seq(r.get(1), r.get(2))).toMap
+    val full = features(rows)
+    rows.foreach { case (_, i, ts, _) =>
+      val prefix = rows.filter(_._3.getTime <= ts.getTime)
+      assert(features(prefix)(i) == full(i), s"leak at turn $i")
+    }
+  }
+
   test("text passes through the full backfill byte-for-byte (BASELINE.json:15)") {
     val turns = Gen.turnsSeq(47L, 5, 30)
     val spec = FeatureSpec(

@@ -41,6 +41,20 @@ class PlanShapeSuite extends SparkTestBase {
     assert(exchanges(Pipeline.backfill(turns, spec)) == 1)
   }
 
+  test("backfill lags share sessionize's (ts, turn_idx) sort — no (turn_idx, ts) sort") {
+    val spec = FeatureSpec(
+      rolling = Seq(RollingSpec("value", Agg.Sum, Duration.ofHours(1))),
+      lags = Seq(("value", 1), ("value", 3)),
+      sessionGap = Some(Duration.ofMinutes(30)))
+    val plan = Pipeline.backfill(turns, spec).queryExecution.executedPlan.toString
+    def sorts(keys: String*) =
+      keys.map(k => s"$k#\\d+ ASC NULLS FIRST").mkString("Sort \\[", ", ", "\\]").r
+        .findAllIn(plan).length
+    assert(sorts("conv_id", "ts", "turn_idx") >= 1, plan)
+    assert(sorts("conv_id", "turn_idx", "ts") == 0,
+      s"lag planned its own (conv_id, turn_idx, ts) sort:\n$plan")
+  }
+
   test("as-of join costs ONE shuffle (union-tag single window pass)") {
     val spine = turns.select("conv_id", "turn_idx", "ts")
     val ev = turns.where(col("tool").isNotNull)

@@ -119,6 +119,28 @@ class ResumeSuite extends SparkTestBase {
     deleteRec(new java.io.File(outDir))
   }
 
+  test("bucket values outside [0, buckets) fail before any commit, not drop rows") {
+    val spark2 = spark
+    import spark2.implicits._
+    val input = (0 until 40).map(i => (f"c$i%02d", i)).toDF("conv_id", "turn_idx")
+    val bucketOf = pmod(xxhash64(col("conv_id")), lit(8L))
+    val stray = input.where(bucketOf >= 4L)
+    val strayRows = stray.count()
+    val strayVals = stray.select(bucketOf).distinct().collect().map(_.getLong(0)).sorted
+    assert(strayRows > 0L, "fixture has no out-of-range bucket value")
+    val outDir = Files.createTempDirectory("tjk_resume_stray").toString
+    val ex = intercept[IllegalArgumentException] {
+      Resume.runBucketed(spark, input, "conv_id", outDir, 4,
+        bucketCol = Some(bucketOf))(df => df)
+    }
+    assert(ex.getMessage.contains(strayVals.mkString(", ")) &&
+      ex.getMessage.contains(s"($strayRows rows)"), ex.getMessage)
+    // nothing committed, nothing left behind
+    assert(new java.io.File(outDir).list().isEmpty,
+      new java.io.File(outDir).list().mkString(", "))
+    deleteRec(new java.io.File(outDir))
+  }
+
   test("a corrupt manifest routes its bucket to recompute instead of wedging resume") {
     val input = turnsDf(Gen.turnsSeq(46L, 12, 20))
     val outDir = Files.createTempDirectory("tjk_resume_corrupt").toString

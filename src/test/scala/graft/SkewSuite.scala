@@ -394,6 +394,95 @@ class SkewSuite extends SparkTestBase {
     assert(win == chk)
   }
 
+  /** A whale `w` of `n` turns `stepMicros` apart, plus 50 cold 3-turn
+    * conversations; integer values, so every frame sum is exact.
+    */
+  private def whaleOf(n: Long, stepMicros: Long) = {
+    val t0 = 1700000000000000L
+    spark.range(n).select(lit("w").as("conv_id"), col("id").cast("int").as("turn_idx"),
+        timestamp_micros(lit(t0) + col("id") * stepMicros).as("ts"),
+        (col("id") % 17).cast("string").as("tool"), (col("id") % 101).cast("double").as("value"))
+      .unionByName(spark.range(150L).select(
+        concat(lit("c"), (col("id") % 50).cast("string")).as("conv_id"),
+        (col("id") / 50).cast("int").as("turn_idx"),
+        timestamp_micros(lit(t0) + col("id") * 7000000L).as("ts"),
+        (col("id") % 3).cast("string").as("tool"), (col("id") % 11).cast("double").as("value")))
+  }
+
+  private val spanSpecs = Seq(
+    RollingSpec("value", Agg.Count, H1),
+    RollingSpec("value", Agg.Sum, H1),
+    RollingSpec("value", Agg.Min, Duration.ofMinutes(10)),
+    RollingSpec("value", Agg.Max, H1, strict = true),
+    RollingSpec("tool", Agg.NUnique, H1),
+    RollingSpec("value", Agg.Sum, Duration.ofMinutes(10), strict = true))
+
+  private def spanFp(df: org.apache.spark.sql.DataFrame) = Lineage.tableFingerprint(
+    df.select((Seq("conv_id", "turn_idx") ++ spanSpecs.map(_.outName)).map(col): _*))
+
+  test("long-timeline whale: the chunk shuffle carries ≤ 1.25× the hot rows") {
+    // 20,000 turns 2 min apart ≈ 667 h in 8 h chunks (MaxChunkWindows × the
+    // 1 h max window): only each chunk's last hour is duplicated, 1/8 of the
+    // rows. A span of one max window would duplicate every hot row (2×).
+    val n = 20000L
+    val df = whaleOf(n, 120000000L)
+    Rolling.clearDetectionCache(spark)
+    val out = withHotThreshold(1000L)(Rolling.rollingAgg(df, "conv_id", "ts", spanSpecs))
+    out.collect()
+    object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val chunkRecords = Aqe.collect(out.queryExecution.executedPlan) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+          if e.outputPartitioning.toString.contains("__chunk") =>
+        e.metrics("shuffleRecordsWritten").value
+    }
+    assert(chunkRecords.size == 1, s"chunk exchanges: $chunkRecords")
+    assert(chunkRecords.head >= n && chunkRecords.head <= n * 5 / 4,
+      s"chunk shuffle wrote ${chunkRecords.head} records for $n hot rows")
+    assert(spanFp(out) ==
+      spanFp(Rolling.rollingAgg(df, "conv_id", "ts", spanSpecs, SkewPolicy.WindowOnly)))
+  }
+
+  test("short-timeline whale and an overflow-wide window: results == WindowOnly") {
+    // 5,000 turns 10 s apart ≈ 14 h: two 8 h chunks, the band in both.
+    val df = whaleOf(5000L, 10000000L)
+    Rolling.clearDetectionCache(spark)
+    val guarded = withHotThreshold(1000L)(Rolling.rollingAgg(df, "conv_id", "ts", spanSpecs))
+    assert(guarded.queryExecution.analyzed.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.MapPartitions]),
+      "whale was not routed to the chunked path")
+    assert(spanFp(guarded) ==
+      spanFp(Rolling.rollingAgg(df, "conv_id", "ts", spanSpecs, SkewPolicy.WindowOnly)))
+    // 8 windows of ~73,000 years overflow a Long of micros: the router falls
+    // back to a one-window span instead of a wrapped (negative) one.
+    val wide = Seq(
+      RollingSpec("value", Agg.Sum, Duration.ofMillis(Long.MaxValue / 4000L)),
+      RollingSpec("value", Agg.Count, H1))
+    def wideFp(d: org.apache.spark.sql.DataFrame) = Lineage.tableFingerprint(
+      d.select((Seq("conv_id", "turn_idx") ++ wide.map(_.outName)).map(col): _*))
+    assert(wideFp(withHotThreshold(1000L)(Rolling.rollingAgg(df, "conv_id", "ts", wide))) ==
+      wideFp(Rolling.rollingAgg(df, "conv_id", "ts", wide, SkewPolicy.WindowOnly)))
+  }
+
+  test("band edge: rows at pmod == span − maxW feed the next chunk's frames (span 8·maxW)") {
+    // A row at exactly span − maxW into its chunk is the lower frame bound
+    // of the next chunk's first row, for strict and non-strict frames.
+    val w = H1.toMillis * 1000L
+    val span = Rolling.MaxChunkWindows * w
+    val b = (1700000000000000L / span) * span
+    val micros = (0L until 4L).flatMap { k =>
+      val c = b + k * span
+      Seq(c, c + 1, c + span - w - 1, c + span - w, c + span - w, c + span - w + 1,
+        c + span - 600000000L, c + span - 1, c + span, c + span + 1, c + span + w - 1)
+    }
+    val df = spark.createDataFrame(micros.zipWithIndex.map { case (m, i) =>
+        (m, i, (i % 7).toDouble, (i % 3).toString) })
+      .toDF("m", "turn_idx", "value", "tool")
+      .select(lit("e").as("conv_id"), col("turn_idx"),
+        timestamp_micros(col("m")).as("ts"), col("value"), col("tool"))
+    assert(spanFp(Skew.chunkedRollingAgg(df, "conv_id", "ts", spanSpecs, span)) ==
+      spanFp(Rolling.rollingAgg(df, "conv_id", "ts", spanSpecs, SkewPolicy.WindowOnly)))
+  }
+
   test("generator produces the intended hot tail (skew exists to be handled)") {
     val counts = skewed.groupBy("conv_id").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
