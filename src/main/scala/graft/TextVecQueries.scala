@@ -110,12 +110,11 @@ object TextVecQueries {
       d: DataFrame, minQuality: Double, minTokens: Long): DataFrame = {
     val scope = new CacheScope
     try {
-      val kept = scope.track(TextOps.textStats(d)
+      val kept = scope.persist(TextOps.textStats(d)
         .where(col("text").isNotNull &&
           col("quality_score") >= minQuality && col("n_tokens") >= minTokens)
         .select(col("doc_id"), col("fp"),
-          col("n_tokens"), col("lang_pred"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          col("n_tokens"), col("lang_pred")))
       val canon = TextOps.dedupByFingerprint(kept)
         .where(col("doc_id") === col("canonical_id"))
       val rep = Split.entityHoldout(
@@ -176,10 +175,9 @@ object TextVecQueries {
   private[graft] def mixed(d: DataFrame): DataFrame = {
     val scope = new CacheScope
     try {
-      val scored = scope.track(TextOps.textStats(d)
+      val scored = scope.persist(TextOps.textStats(d)
         .where(col("text").isNotNull)
-        .select("doc_id", "lang_pred", "n_tokens")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select("doc_id", "lang_pred", "n_tokens"))
       localized(Mix.mixReport(scored, MixWeights))
         .orderBy("lang_pred")
     } finally scope.release()

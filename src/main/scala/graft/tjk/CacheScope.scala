@@ -1,6 +1,7 @@
 package graft.tjk
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 /** Caller-facing release hook for intermediates an operator persists on the
   * caller's behalf (exact-dedup fingerprints, shingle fan-outs, MinHash /
@@ -28,8 +29,11 @@ import org.apache.spark.sql.DataFrame
 final class CacheScope {
   private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
-  private[graft] def track(df: DataFrame): DataFrame = synchronized {
-    frames += df; df
+  /** Persist `df` at MEMORY_AND_DISK (the level `Dataset.cache()` uses) and
+    * track it for [[release]].
+    */
+  private[graft] def persist(df: DataFrame): DataFrame = synchronized {
+    frames += df.persist(StorageLevel.MEMORY_AND_DISK); df
   }
 
   /** Unpersist every tracked frame and forget it. Idempotent. */

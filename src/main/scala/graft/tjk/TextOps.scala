@@ -25,6 +25,9 @@ import org.apache.spark.sql.functions._
   *    a 16-bit band with Hamming distance ≤ k. Token hash is pluggable:
   *    xxhash64 (production fast path) or md5-hex (DuckDB-replicable oracle
   *    path — same swap convention as MinHash).
+  *
+  * These and [[VectorOps.cosineNearDupPairsLsh]] share one candidate
+  * self-join, [[bucketPairs]], and one payload join-back, [[withBoth]].
   */
 object TextOps {
 
@@ -141,8 +144,7 @@ object TextOps {
   def exactDedup(
       docs: DataFrame,
       scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    val fp = scope.track(docs.select(col("doc_id"), md5(col("text")).as("fp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val fp = scope.persist(docs.select(col("doc_id"), md5(col("text")).as("fp")))
     dedupByFingerprint(fp).select(col("doc_id"), col("fp"),
       col("canonical_id"), col("group_size"))
   }
@@ -216,13 +218,9 @@ object TextOps {
     * group-by, so candidate generation and the rare part of the
     * intersection cost ONE aggregation.
     */
-  private def rarePairCounts(sh: DataFrame, hot: DataFrame): DataFrame = {
-    val rare = sh.join(hot, Seq("g"), "left_anti")
-    rare.select(col("doc_id").as("id_a"), col("g"))
-      .join(rare.select(col("doc_id").as("id_b"), col("g")), Seq("g"))
-      .where(col("id_a") < col("id_b"))
+  private def rarePairCounts(sh: DataFrame, hot: DataFrame): DataFrame =
+    bucketPairs(sh.join(hot, Seq("g"), "left_anti"), "doc_id", Seq("g"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter_rare"))
-  }
 
   /** Candidate pairs sharing ≥1 non-hot shingle (df ≤ maxShingleDf).
     * Package-visible so the hot-shingle bound is directly testable.
@@ -259,14 +257,12 @@ object TextOps {
     // blocks stay LRU-evictable (MEMORY_AND_DISK storage is reclaimed under
     // executor memory pressure); a caller wanting eager release passes a
     // [[CacheScope]] and releases after consuming the result.
-    val sh = scope.track(shingles(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val sh = scope.persist(shingles(docs))
     // hot is tiny by construction but its PLAN is a full-corpus groupBy
     // over the shingle fan-out — unpersisted it would re-run for each of
     // its three consumers (the isEmpty probe, the anti-join, the hot-part
     // join): three full shuffles for a set that fits in memory.
-    val hot = scope.track(hotShingles(sh, maxShingleDf)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val hot = scope.persist(hotShingles(sh, maxShingleDf))
     // One tiny probe job: on a corpus with NO hot shingle (df ≤ cap
     // everywhere — most corpora most of the time), the anti-join and the
     // whole hot-part machinery are identities over empty sets; skip their
@@ -282,8 +278,7 @@ object TextOps {
         // interRare feeds BOTH the hot-part probe join and the final
         // rare+hot merge; unpersisted, the whole rare self-join pipeline
         // would run twice. Pair-count-sized, LRU-evictable like sh/hot.
-        val interRare = scope.track(rarePairCounts(sh, hot)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        val interRare = scope.persist(rarePairCounts(sh, hot))
         val hotSh = sh.join(hot, Seq("g"))
         val interHot = interRare.select("id_a", "id_b")
           .join(hotSh.select(col("doc_id").as("id_a"), col("g")), Seq("id_a"))
@@ -294,17 +289,14 @@ object TextOps {
           .withColumn("inter",
             col("inter_rare") + coalesce(col("inter_hot"), lit(0L)))
       }
-    // Consumed by BOTH join sides (na and nb): persisted, the count
+    // Consumed by BOTH join sides (n_a and n_b): persisted, the count
     // aggregation walks the gram stream ONCE instead of once per side —
     // a full pass over the shingle cache removed (measured: two identical
     // 0.7 s / 4.5 s-CPU stages at bench scale). Doc-count-sized.
-    val cnt = scope.track(sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    inter
-      .join(cnt.select(col("doc_id").as("id_a"), col("n").as("na")), "id_a")
-      .join(cnt.select(col("doc_id").as("id_b"), col("n").as("nb")), "id_b")
+    val cnt = scope.persist(sh.groupBy("doc_id").agg(count(lit(1)).as("n")))
+    withBoth(inter, cnt, "doc_id", "n")
       .withColumn("jaccard", round(col("inter").cast("double") /
-        (col("na") + col("nb") - col("inter")).cast("double"), 6))
+        (col("n_a") + col("n_b") - col("inter")).cast("double"), 6))
       .where(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
@@ -338,34 +330,21 @@ object TextOps {
       .agg(expressions.NativeFunctions
         .minhashSigNative(docs.sparkSession, col("g"), MinHashK).as("sig"))
 
-  /** MinHash LSH band rows (doc_id, band, h) from a signature column: band
-    * hash = md5 over the band's signature slice, '|'-joined (array form of
-    * the original concat_ws over named columns — same bytes).
+  /** LSH candidate pairs with estimated similarity ≥ threshold. Band hash =
+    * md5 over the band's signature slice, '|'-joined.
     */
-  private def minhashBandRows(sig: DataFrame): DataFrame = {
-    val r = MinHashK / Bands
-    sig.select(col("doc_id"), explode(expr(
-        s"transform(sequence(0, ${Bands - 1}), " +
-          s"b -> struct(b AS band, md5(array_join(slice(sig, b * $r + 1, $r), '|')) AS h))"
-      )).as("bh"))
-      .select(col("doc_id"), col("bh.band").as("band"), col("bh.h").as("h"))
-  }
-
-  /** LSH candidate pairs with estimated similarity ≥ threshold. */
   def minhashLshPairs(
       docs: DataFrame,
       threshold: Double,
       scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    val sig = scope.track(minhashSignatures(docs).cache())
-    val bands = minhashBandRows(sig)
-    val cand = bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.h") === col("y.h") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
-      .distinct()
-    val sa = sig.select(col("doc_id").as("id_a"), col("sig").as("sig_a"))
-    val sb = sig.select(col("doc_id").as("id_b"), col("sig").as("sig_b"))
-    cand.join(sa, "id_a").join(sb, "id_b")
+    val r = MinHashK / Bands
+    val sig = scope.persist(minhashSignatures(docs))
+    val bands = sig.select(col("doc_id"), inline(expr(
+      s"transform(sequence(0, ${Bands - 1}), " +
+        s"b -> struct(b AS band, md5(array_join(slice(sig, b * $r + 1, $r), '|')) AS h))")))
+    val cand = bucketPairs(bands, "doc_id", Seq("band", "h"))
+      .select("id_a", "id_b").distinct()
+    withBoth(cand, sig, "doc_id", "sig")
       .withColumn("est_sim", round(
         expr("size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v))")
           .cast("double") / MinHashK, 6))
@@ -424,17 +403,36 @@ object TextOps {
       maxHamming: Int,
       hash: TokenHash = TokenHash.Xx64,
       scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    val sh = scope.track(simhash(docs, hash = hash).cache())
-    val bands = sh.select(col("doc_id"), col("simhash"), explode(array(
+    val sh = scope.persist(simhash(docs, hash = hash))
+    val bands = sh.select(col("doc_id"), col("simhash"), inline(array(
       (0 until 4).map(b => struct(lit(b).as("band"),
-        expr(s"(simhash >> ${b * 16}) & 65535").as("h"))): _*)).as("bh"))
-      .select(col("doc_id"), col("simhash"), col("bh.band").as("band"), col("bh.h").as("h"))
-    bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.h") === col("y.h") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"),
-        expr("bit_count(x.simhash ^ y.simhash)").as("hamming"))
+        expr(s"(simhash >> ${b * 16}) & 65535").as("h"))): _*)))
+    // the Hamming filter reads only bucketPairs' payload, so Catalyst pushes
+    // it into the band join; after a dedup and join-back it sees ~20× the rows
+    bucketPairs(bands, "doc_id", Seq("band", "h"))
+      .select(col("id_a"), col("id_b"),
+        expr("bit_count(simhash_a ^ simhash_b)").as("hamming"))
       .distinct()
       .where(col("hamming") <= maxHamming)
   }
+
+  /** Candidate self-join of the near-dup family: `rows` paired on the
+    * `bucket` columns, once per shared bucket, with `id_a < id_b`; each
+    * payload column `c` comes out as `c_a` / `c_b`. Work is Σ bucket size².
+    */
+  private[graft] def bucketPairs(
+      rows: DataFrame, id: String, bucket: Seq[String]): DataFrame = {
+    def side(s: String) = rows.select(col(id).as(s"id_$s") +:
+      rows.columns.filter(_ != id).map {
+        case c if bucket.contains(c) => col(c)
+        case c => col(c).as(s"${c}_$s")
+      }.toSeq: _*)
+    side("a").join(side("b"), bucket).where(col("id_a") < col("id_b"))
+  }
+
+  /** `pairs(id_a, id_b, …)` with `side`'s column `c` joined to both ids. */
+  private[graft] def withBoth(
+      pairs: DataFrame, side: DataFrame, id: String, c: String): DataFrame =
+    Seq("a", "b").foldLeft(pairs)((p, s) =>
+      p.join(side.select(col(id).as(s"id_$s"), col(c).as(s"${c}_$s")), s"id_$s"))
 }

@@ -50,8 +50,8 @@ object VectorOps {
   }
 
   /** Near-duplicate pairs (cosine ≥ threshold) via random-hyperplane LSH —
-    * the 100 TB path, mirroring the [[TextOps.minhashLshPairs]] band-join
-    * shape; no driver collect, no all-pairs join anywhere:
+    * the 100 TB path, with candidates through [[TextOps.bucketPairs]]; no
+    * driver collect, no all-pairs join anywhere:
     *
     *  1. per-vector sign signature ([[LshPlanes]] bits) via the codegen'd
     *     [[expressions.HyperplaneSignature]] — one narrow scan;
@@ -77,7 +77,7 @@ object VectorOps {
     val spark = vecs.sparkSession
     val r = LshPlanes / LshBands
     // cache the signatures: the band self-join consumes this subplan twice
-    // (x and y sides), and without the cache each side re-scans the corpus
+    // (a and b sides), and without the cache each side re-scans the corpus
     // and re-evaluates the signature — same branch-point discipline as
     // minhashLshPairs (LRU-evictable, spills at scale, releasable via scope).
     // The source runs through TextOps.spread (stats-gated, large inputs pass
@@ -87,25 +87,17 @@ object VectorOps {
     // single partition on a single task (measured: 1.2 s on one core,
     // 1.28M bucket pairs, 31 cores idle). Spreading the signature source
     // parallelizes the pair-expansion stage without touching its values.
-    val sig = scope.track(TextOps.spread(vecs).select(col("vec_id"),
+    val sig = scope.persist(TextOps.spread(vecs).select(col("vec_id"),
       expressions.NativeFunctions.hyperplaneSigNative(
-        spark, col("embedding"), hyperplanes(LshPlanes, dim)).as("bitstr"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val bandRows = sig.select(col("vec_id"), explode(expr(
-        s"transform(sequence(0, ${LshBands - 1}), " +
-          s"b -> struct(b AS band, md5(substring(bitstr, b * $r + 1, $r)) AS h))"
-      )).as("bh"))
-      .select(col("vec_id"), col("bh.band").as("band"), col("bh.h").as("h"))
-    val cand = bandRows.as("x").join(bandRows.as("y"),
-        col("x.band") === col("y.band") && col("x.h") === col("y.h") &&
-          col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"))
-      .distinct()
-    val va = vecs.select(col("vec_id").as("id_a"), col("embedding").as("ea"))
-    val vb = vecs.select(col("vec_id").as("id_b"), col("embedding").as("eb"))
+        spark, col("embedding"), hyperplanes(LshPlanes, dim)).as("bitstr")))
+    val bandRows = sig.select(col("vec_id"), inline(expr(
+      s"transform(sequence(0, ${LshBands - 1}), " +
+        s"b -> struct(b AS band, md5(substring(bitstr, b * $r + 1, $r)) AS h))")))
+    val cand = TextOps.bucketPairs(bandRows, "vec_id", Seq("band", "h"))
+      .select("id_a", "id_b").distinct()
     val cosN = expressions.NativeFunctions.cosineNative(
-      spark, col("ea"), col("eb"))
-    cand.join(va, "id_a").join(vb, "id_b")
+      spark, col("embedding_a"), col("embedding_b"))
+    TextOps.withBoth(cand, vecs, "vec_id", "embedding")
       .withColumn("cos", round(cosN, 6))
       .where(col("cos") >= threshold)
       .select("id_a", "id_b", "cos")
@@ -206,41 +198,42 @@ object VectorOps {
       .orderBy(xxhash64(col("vec_id")), col("vec_id"))
       .limit(KmeansSampleMax)
       .cache()
-    var cents: Array[(Int, Array[Float])] = train.limit(nCells)
-      .select("embedding").as[Array[Float]].collect()
-      .zipWithIndex.map { case (e, i) => (i, e) }
-    for (_ <- 1 to KmeansIters) {
-      val cdf = broadcast(
-        spark.createDataFrame(cents.toSeq).toDF("cid", "ce"))
-      val w = Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cid"))
-      val assigned = train.join(cdf)
-        .withColumn("ccos", cosN(col("embedding"), col("ce")))
-        .withColumn("rk", row_number().over(w))
-        .where(col("rk") === 1)
-      // Mean via QUANTIZED integer sums, not avg(double): double addition is
-      // non-associative and shuffle-fetch arrival order is nondeterministic,
-      // so avg() would make the "deterministic centroids" contract false at
-      // the last ulp (enough to flip a near-equidistant assignment across
-      // runs). Long sums are associative ⇒ bit-identical on every run/layout;
-      // 2^-20 quantization (~1e-6) is far below any meaningful centroid
-      // resolution. |v| ≲ 6 ⇒ per-row ≤ 2^23, ×KmeansSampleMax ≪ 2^63 (no ANSI
-      // overflow).
-      val Q = 1048576L // 2^20
-      val means = assigned
-        .select(col("cid"), posexplode(col("embedding")).as(Seq("pos", "v")))
-        .groupBy("cid", "pos").agg(
-          sum(round(col("v") * Q).cast("long")).as("qs"),
-          count(lit(1)).as("n"))
-        .collect()
-        .groupBy(_.getInt(0))
-        .map { case (cid, rows) =>
-          cid -> rows.sortBy(_.getInt(1))
-            .map(r => (r.getLong(2).toDouble / r.getLong(3) / Q).toFloat)
-        }
-      cents = cents.map { case (cid, old) => (cid, means.getOrElse(cid, old)) }
-    }
-    train.unpersist()
-    spark.createDataFrame(cents.toSeq).toDF("cid", "ce")
+    try {
+      var cents: Array[(Int, Array[Float])] = train.limit(nCells)
+        .select("embedding").as[Array[Float]].collect()
+        .zipWithIndex.map { case (e, i) => (i, e) }
+      for (_ <- 1 to KmeansIters) {
+        val cdf = broadcast(
+          spark.createDataFrame(cents.toSeq).toDF("cid", "ce"))
+        val w = Window.partitionBy("vec_id").orderBy(col("ccos").desc, col("cid"))
+        val assigned = train.join(cdf)
+          .withColumn("ccos", cosN(col("embedding"), col("ce")))
+          .withColumn("rk", row_number().over(w))
+          .where(col("rk") === 1)
+        // Mean via QUANTIZED integer sums, not avg(double): double addition is
+        // non-associative and shuffle-fetch arrival order is nondeterministic,
+        // so avg() would make the "deterministic centroids" contract false at
+        // the last ulp (enough to flip a near-equidistant assignment across
+        // runs). Long sums are associative ⇒ bit-identical on every run/layout;
+        // 2^-20 quantization (~1e-6) is far below any meaningful centroid
+        // resolution. |v| ≲ 6 ⇒ per-row ≤ 2^23, ×KmeansSampleMax ≪ 2^63 (no ANSI
+        // overflow).
+        val Q = 1048576L // 2^20
+        val means = assigned
+          .select(col("cid"), posexplode(col("embedding")).as(Seq("pos", "v")))
+          .groupBy("cid", "pos").agg(
+            sum(round(col("v") * Q).cast("long")).as("qs"),
+            count(lit(1)).as("n"))
+          .collect()
+          .groupBy(_.getInt(0))
+          .map { case (cid, rows) =>
+            cid -> rows.sortBy(_.getInt(1))
+              .map(r => (r.getLong(2).toDouble / r.getLong(3) / Q).toFloat)
+          }
+        cents = cents.map { case (cid, old) => (cid, means.getOrElse(cid, old)) }
+      }
+      spark.createDataFrame(cents.toSeq).toDF("cid", "ce")
+    } finally train.unpersist()
   }
 
   /** IVF: corpus assigned to its nearest [[kmeansCentroids]] cell (one

@@ -127,6 +127,16 @@ class PlanShapeSuite extends SparkTestBase {
       s"chunk shuffle key wrong: $exch")
   }
 
+  test("simhash Hamming verify runs inside the band join's condition") {
+    // Verified after a dedup instead, the band join would emit every
+    // band-sharing pair, not only those within the Hamming bound.
+    val docs = Tables.read(spark, "/root/testdata/sf0.001", "documents")
+    val plan = TextOps.simhashPairs(docs, maxHamming = 6)
+      .queryExecution.executedPlan.toString
+    val joins = plan.linesIterator.filter(_.contains("Join")).toList
+    assert(joins.nonEmpty && joins.forall(_.contains("bit_count")), plan)
+  }
+
   test("outlier report: bounds broadcast to the clamp pass, raw rows never range-sorted") {
     // The q48 scale shape: grouped integer counts (one hash shuffle),
     // quartiles via a window over the TINY aggregate, then the 1-row bounds

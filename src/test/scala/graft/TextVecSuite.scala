@@ -260,6 +260,38 @@ class TextVecSuite extends SparkTestBase {
       s"unexpected plan leaves: $leaves")
   }
 
+  test("bucketPairs: one row per shared bucket, id_a < id_b, payload as c_a / c_b") {
+    // bucket 1 holds ids 1, 2, 3; bucket 2 holds ids 1, 2 again; id 4 is alone
+    val rows = Seq((1L, 1, 10L), (2L, 1, 20L), (3L, 1, 30L),
+        (1L, 2, 10L), (2L, 2, 20L), (4L, 3, 40L))
+      .toDF("doc_id", "bucket", "p")
+    val out = TextOps.bucketPairs(rows, "doc_id", Seq("bucket"))
+    assert(Set("id_a", "id_b", "p_a", "p_b").subsetOf(out.columns.toSet),
+      out.columns.mkString(", "))
+    val got = out.select("bucket", "id_a", "id_b", "p_a", "p_b").collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+    assert(got.count(_._1 == 1) == 3)
+    assert(got.forall { case (_, a, b, _, _) => a < b }, "self-pair or id_a ≥ id_b")
+    assert(got.count { case (_, a, b, _, _) => a == 1L && b == 2L } == 2,
+      "a pair sharing two buckets must appear twice before dedup")
+    assert(got.forall { case (_, a, b, pa, pb) => pa == a * 10 && pb == b * 10 })
+    assert(got.length == 4)
+  }
+
+  test("kmeansCentroids releases its cached sample when a Lloyd round fails") {
+    spark.sharedState.cacheManager.clearCache()
+    // mixed dimension 3 / 4: the cosine of a training vector against a
+    // centroid of the other dimension throws inside the first round
+    val vecs = (0 until 40).map(i => (i.toLong, Array.fill(3 + i % 2)(1.0f + i)))
+      .toDF("vec_id", "embedding")
+    val err = intercept[org.apache.spark.SparkException](
+      VectorOps.kmeansCentroids(vecs, nCells = 4))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("dimension mismatch")), err)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the training sample stayed cached after the failure")
+  }
+
   test("hyperplane signature: deterministic, matches an interpreted recompute") {
     val e = Tables.read(spark, "/root/testdata/sf0.001", "embeddings")
     val planes = VectorOps.hyperplanes(64, 64)
