@@ -68,16 +68,12 @@ object FeatureStatsQueries {
   /** q44 — per-feature profile: exact-integer moments for the 2-decimal
     * `value` and the integer `len_text`, missingness for `tool`.
     */
-  def featureProfile(spark: SparkSession, dir: String): DataFrame = {
-    // the three profile branches are independent aggregations under a
-    // union — persist the view once instead of scanning+re-windowing it 3x,
-    // and UNPERSIST once the 3-row report is materialized (ADVICE r3
-    // item 4: a leaked cache lives until spark.stop in a shared session,
-    // pressuring the LRU store under later queries)
-    val base = Tables.transcripts(spark, dir)
-      .select("value", "text", "tool") // only what the 3 branches read
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+  def featureProfile(spark: SparkSession, dir: String): DataFrame =
+    CacheScope.using { scope =>
+      // the three profile branches are independent aggregations under a
+      // union — persist the view once instead of scanning+re-windowing it 3x
+      val base = scope.persist(Tables.transcripts(spark, dir)
+        .select("value", "text", "tool")) // only what the 3 branches read
       val report = FeatureStats
         .profileNumeric(base, NumFeature("value", col("value"), 2))
         .unionByName(FeatureStats.profileNumeric(
@@ -85,8 +81,7 @@ object FeatureStatsQueries {
         .unionByName(FeatureStats.profileMissing(base, "tool"))
         .orderBy("feature")
       localized(report).orderBy("feature")
-    } finally base.unpersist()
-  }
+    }
 
   val featureProfileSql: String =
     s"""WITH ${Tables.transcriptsSqlCte},
@@ -125,14 +120,14 @@ object FeatureStatsQueries {
     * the is-purchase label. Fixed-width bins (deterministic + replicable,
     * unlike approximate quantiles), Laplace smoothing on counts.
     */
-  def driftReport(spark: SparkSession, dir: String): DataFrame = {
-    // ONE scan of the (window-bearing) transcript view: iv/ks/psi each
-    // consume it 1-2x (5 subtrees total) — persist the labeled view once
-    // (LRU-evictable; spills at scale), same branch-point discipline as the
-    // similarity pipelines.
-    val split = Split.timeSplit(Tables.transcripts(spark, dir), "ts", Boundary)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+  def driftReport(spark: SparkSession, dir: String): DataFrame =
+    CacheScope.using { scope =>
+      // ONE scan of the (window-bearing) transcript view: iv/ks/psi each
+      // consume it 1-2x (5 subtrees total) — persist the labeled view once
+      // (spills at scale), same branch-point discipline as the similarity
+      // pipelines.
+      val split = scope.persist(
+        Split.timeSplit(Tables.transcripts(spark, dir), "ts", Boundary))
       // single-pass tagged KS/PSI (FeatureStats.ksTagged/psiTagged): one
       // grouped count over the persisted split instead of a per-side count
       // + re-merge join per statistic — values identical, half the shuffles
@@ -146,8 +141,7 @@ object FeatureStatsQueries {
           .select(lit("psi_value").as("metric"), col("psi").as("stat")))
         .orderBy("metric")
       localized(report).orderBy("metric")
-    } finally split.unpersist()
-  }
+    }
 
   /** q47 — the composition the whole engine exists for: a feature COMPUTED
     * by the pipeline (trailing 1h count from [[Rolling.rollingAgg]], the
@@ -234,9 +228,8 @@ object FeatureStatsQueries {
       .select("conv_id", "turn_idx", "ts")
     val joined = graft.tjk.AsOf.asofJoin(spine,
         CoreQueries.purchases(spark, dir), "conv_id", "ts", "ev_ts", Seq("pv"))
-    val split = Split.timeSplit(joined, "ts", Boundary)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    CacheScope.using { scope =>
+      val split = scope.persist(Split.timeSplit(joined, "ts", Boundary))
       // single-pass tagged KS/PSI — same rationale as driftReport
       val isTrain = col("split") === "train"
       val report = FeatureStats.ksTagged(split, "pv", isTrain)
@@ -245,7 +238,7 @@ object FeatureStatsQueries {
           .select(lit("psi_asof_pv").as("metric"), col("psi").as("stat")))
         .orderBy("metric")
       localized(report).orderBy("metric")
-    } finally split.unpersist()
+    }
   }
 
   /** q51 — outlier bounds for a CONTINUOUS feature (per-turn-normalized
@@ -262,13 +255,12 @@ object FeatureStatsQueries {
     * (+2 rows slack for the 6-dp output rounding) — a sketch regression
     * fails the driver sweep loudly instead of passing as `no_oracle`.
     */
-  def outlierApprox(spark: SparkSession, dir: String): DataFrame = {
-    val acc = 10000
-    val data = Tables.transcripts(spark, dir)
-      .select((col("value") / (col("turn_idx") + 1)).as("f"))
-      .where(col("f").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+  def outlierApprox(spark: SparkSession, dir: String): DataFrame =
+    CacheScope.using { scope =>
+      val acc = 10000
+      val data = scope.persist(Tables.transcripts(spark, dir)
+        .select((col("value") / (col("turn_idx") + 1)).as("f"))
+        .where(col("f").isNotNull))
       val rep = FeatureStats.outlierBoundsApprox(
         data, col("f"), "value_per_turn", accuracy = acc)
       val local = localized(rep)
@@ -291,8 +283,7 @@ object FeatureStatsQueries {
         check(k.getLong(2), k.getLong(3), 0.75, "q3", q3)
       }
       local
-    } finally data.unpersist()
-  }
+    }
 
   val asofDriftSql: String =
     s"""WITH ${Tables.transcriptsSqlCte},

@@ -363,33 +363,31 @@ object SourceStreamQueries {
       def agg(src: DataFrame): DataFrame =
         Sessionize.sessionAgg(src, "conv_id", "ts", "turn_idx",
           Duration.ofMinutes(30))
-      // the CSV-side aggregate is consumed twice (fingerprint compare AND
-      // the returned rows) — persist it so the text re-read + sessionize
-      // runs once; released in the outer finally via unpersist below
-      val a = agg(fromCsv)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // ONE job for both fingerprints (they are independent subtrees, so a
-      // union evaluates them in the same action) instead of two sequential
-      // collect jobs — same (row_count, xor-hash) compare, half the driver
-      // round-trips.
-      def fpDf(src: DataFrame, tag: String): DataFrame =
-        src.agg(count(lit(1)).as("rc"),
-          bit_xor(xxhash64(src.columns.map(col): _*)).as("ch"))
-          .select(lit(tag).as("src"), col("rc"), col("ch"))
-      val fps = fpDf(a, "csv").unionByName(fpDf(agg(fromJson), "json"))
-        .collect().map(r => r.getString(0) ->
-          ((r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2)))).toMap
-      require(fps("csv") == fps("json"),
-        s"CSV vs JSON round-trip diverged: ${fps("csv")} vs ${fps("json")}")
-
-      try {
+      CacheScope.using { scope =>
+        // the CSV-side aggregate is consumed twice (fingerprint compare AND
+        // the returned rows) — persist it so the text re-read + sessionize
+        // runs once
+        val a = scope.persist(agg(fromCsv))
+        // ONE job for both fingerprints (they are independent subtrees, so a
+        // union evaluates them in the same action) instead of two sequential
+        // collect jobs — same (row_count, xor-hash) compare, half the
+        // collect round-trips.
+        def fpDf(src: DataFrame, tag: String): DataFrame =
+          src.agg(count(lit(1)).as("rc"),
+            bit_xor(xxhash64(src.columns.map(col): _*)).as("ch"))
+            .select(lit(tag).as("src"), col("rc"), col("ch"))
+        val fps = fpDf(a, "csv").unionByName(fpDf(agg(fromJson), "json"))
+          .collect().map(r => r.getString(0) ->
+            ((r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2)))).toMap
+        require(fps("csv") == fps("json"),
+          s"CSV vs JSON round-trip diverged: ${fps("csv")} vs ${fps("json")}")
         a.orderBy("conv_id", "session_id").collect().toSeq
           .map(r => (r.getString(0), r.getString(1),
             r.getAs[java.time.LocalDateTime](2), r.getAs[java.time.LocalDateTime](3),
             r.getLong(4)))
           .toDF("conv_id", "session_id", "session_start", "session_end", "n_turns")
           .orderBy("conv_id", "session_id")
-      } finally a.unpersist()
+      }
     } finally deleteRec(new java.io.File(tmp))
   }
 

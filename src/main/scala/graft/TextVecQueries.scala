@@ -107,9 +107,8 @@ object TextVecQueries {
     * report queries use).
     */
   private[graft] def curate(
-      d: DataFrame, minQuality: Double, minTokens: Long): DataFrame = {
-    val scope = new CacheScope
-    try {
+      d: DataFrame, minQuality: Double, minTokens: Long): DataFrame =
+    CacheScope.using { scope =>
       val kept = scope.persist(TextOps.textStats(d)
         .where(col("text").isNotNull &&
           col("quality_score") >= minQuality && col("n_tokens") >= minTokens)
@@ -127,8 +126,7 @@ object TextVecQueries {
           sum(col("group_size")).as("n_source_docs"))
       localized(rep)
         .orderBy("split", "lang_pred")
-    } finally scope.release()
-  }
+    }
 
   val corpusCurateSql: String =
     s"""WITH $statsCtesSql,
@@ -172,16 +170,14 @@ object TextVecQueries {
   def corpusMix(spark: SparkSession, dir: String): DataFrame =
     mixed(docs(spark, dir))
 
-  private[graft] def mixed(d: DataFrame): DataFrame = {
-    val scope = new CacheScope
-    try {
+  private[graft] def mixed(d: DataFrame): DataFrame =
+    CacheScope.using { scope =>
       val scored = scope.persist(TextOps.textStats(d)
         .where(col("text").isNotNull)
         .select("doc_id", "lang_pred", "n_tokens"))
       localized(Mix.mixReport(scored, MixWeights))
         .orderBy("lang_pred")
-    } finally scope.release()
-  }
+    }
 
   val corpusMixSql: String = {
     val wRows = MixWeights.toSeq.sortBy(_._1)
@@ -643,7 +639,7 @@ object TextVecQueries {
       when(ok, out).otherwise(raise_error(concat(
         lit(s"q24 law: $name mismatch at doc_id="),
         col("doc_id").cast("string")))).as(name)
-    both
+    CacheScope.unmanaged.persist(both
       .select(
         col("doc_id"),
         guard("n_bytes", col("n_bytes") === col("law_nbytes"), col("n_bytes")),
@@ -656,14 +652,14 @@ object TextVecQueries {
           (size(col("frame_hashes")) ===
             when(col("law_nbytes") === 0L, 0).otherwise(col("law_nf"))) &&
             (col("law_fh").isNull || col("frame_hashes") === col("law_fh")),
-          size(col("frame_hashes"))))
-      // persist before the global sort: a range-partitioned ORDER BY first
+          size(col("frame_hashes")))))
+      // persisted before the global sort: a range-partitioned ORDER BY first
       // SAMPLES its child — fully executing the segment after the last
       // exchange — then executes it again for the real shuffle. Unpersisted,
       // the law byte-walk + stub extraction (the expensive part of this
-      // query) would run twice per action. LRU-evictable, released by the
-      // harness's between-query cache clear like every operator persist.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // query) would run twice per action. The returned frame reads the
+      // persist, so nothing here can release it: the catalog harness's
+      // between-query clearCache() does.
       .orderBy("doc_id")
   }
 
@@ -722,7 +718,7 @@ object TextVecQueries {
     // spread: PNG ENCODE alone is ~0.5 ms/doc of real DEFLATE work — on a
     // one-split corpus the encode+decode pipeline was measured running on a
     // single task while 31 cores idled
-    MediaOps.decodeAvFeatures(
+    CacheScope.unmanaged.persist(MediaOps.decodeAvFeatures(
         MediaOps.syntheticAvMedia(
           requireAscii(TextOps.spread(docs(spark, dir)))
             .where(col("text").isNotNull)))
@@ -731,11 +727,10 @@ object TextVecQueries {
         round(col("img_mean"), 6).as("img_mean"),
         col("n_samples"), col("sample_rate"),
         round(col("dur_ms"), 6).as("dur_ms"),
-        round(col("amp_mean"), 6).as("amp_mean"))
-      // persist before the global sort (same rationale as lawGuards): the
-      // ORDER BY's range sampling would otherwise run the REAL PNG/WAV
-      // encode + decode a second time per action
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        round(col("amp_mean"), 6).as("amp_mean")))
+      // persisted before the global sort (same rationale and lifetime as
+      // lawGuards): the ORDER BY's range sampling would otherwise run the
+      // REAL PNG/WAV encode + decode a second time per action
       .orderBy("doc_id")
 
   val mediaDecodeSql: String =

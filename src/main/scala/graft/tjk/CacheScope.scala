@@ -3,15 +3,20 @@ package graft.tjk
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-/** Caller-facing release hook for intermediates an operator persists on the
-  * caller's behalf (exact-dedup fingerprints, shingle fan-outs, MinHash /
-  * SimHash signatures, LSH subplans).
+/** The one owner of a persisted frame's lifetime: every persist in the
+  * engine goes through a scope, and a scope's `release()` unpersists what it
+  * tracks. Releasing early is always safe for correctness (Spark recomputes
+  * an unpersisted subplan from its lineage); it only forfeits the reuse the
+  * persist bought.
   *
-  * Those frames are private to the operator — the caller never sees them, so
-  * without a hook it CANNOT unpersist them, and repeated operator calls in a
-  * long-lived session accumulate cached frames until executor-LRU pressure
-  * evicts them (ADVICE r4 item 2). Pass a scope, materialize the result, then
-  * `release()`:
+  * The one rule, by who consumes the persisted frame:
+  *  - consumed before the function returns (a collected report, a loop of
+  *    collects, a localized aggregate) → [[CacheScope.using]], which releases in
+  *    a `finally`, also when the body throws;
+  *  - read by a lazy frame the function returns (operator intermediates such
+  *    as exact-dedup fingerprints, shingle fan-outs, LSH signatures) → the
+  *    caller's scope (`scope =`), released by the caller after it
+  *    materializes the result:
   *
   * {{{
   * val scope = new CacheScope
@@ -20,11 +25,8 @@ import org.apache.spark.storage.StorageLevel
   * scope.release()          // the plan stays valid, it just recomputes
   * }}}
   *
-  * Releasing before the result is consumed is safe for correctness (Spark
-  * recomputes the unpersisted subplans) but forfeits the dedup the persist
-  * bought. The default [[CacheScope.unmanaged]] keeps today's semantics:
-  * intermediates stay cached until LRU eviction or a session-level
-  * `catalog.clearCache()` (what Verify/Bench do between queries).
+  * [[CacheScope.unmanaged]] is a scope nobody releases; use it only where the
+  * caller is the catalog harness, whose between-query `clearCache()` frees it.
   */
 final class CacheScope {
   private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -46,8 +48,18 @@ final class CacheScope {
 }
 
 object CacheScope {
-  /** A scope nobody releases — operator intermediates live until executor
-    * LRU eviction or a session cache clear, exactly the pre-hook behavior.
+  /** Runs `body` with a fresh scope and releases it afterwards, whether
+    * `body` returns or throws. `body` must consume its persists before it
+    * returns: a lazy frame it hands back would recompute them.
+    */
+  def using[T](body: CacheScope => T): T = {
+    val scope = new CacheScope
+    try body(scope) finally scope.release()
+  }
+
+  /** A scope nobody releases: its frames live until executor LRU eviction
+    * or a session cache clear (what Bench, Verify and `Dev` do between
+    * queries).
     */
   def unmanaged: CacheScope = new CacheScope
 }

@@ -190,27 +190,24 @@ object FeatureStats {
     */
   private[graft] def ksTagged(
       df: DataFrame, valueCol: String, isA: Column,
-      maxDomain: Long = MaxExactDomain): DataFrame = {
-    val merged = df.where(col(valueCol).isNotNull)
+      maxDomain: Long = MaxExactDomain): DataFrame = CacheScope.using { scope =>
+    val merged = scope.persist(df.where(col(valueCol).isNotNull)
       .groupBy(col(valueCol).cast("double").as("v"))
       .agg(sum(when(isA, 1L).otherwise(0L)).as("n_a"),
-        sum(when(isA, 0L).otherwise(1L)).as("n_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      requireBoundedDomain(merged.count(), maxDomain, "ks", valueCol)
-      val w = Window.orderBy(col("v"))
-        .rowsBetween(Window.unboundedPreceding, 0L)
-      localized(merged
-        .withColumn("ca", sum(col("n_a")).over(w))
-        .withColumn("cb", sum(col("n_b")).over(w))
-        .withColumn("ta", sum(col("n_a")).over(Window.partitionBy()))
-        .withColumn("tb", sum(col("n_b")).over(Window.partitionBy()))
-        // nullif: an empty (or all-null) side makes its total 0 — the KS of a
-        // degenerate pair is undefined and must come back NULL, not throw
-        // DIVIDE_BY_ZERO under ANSI
-        .agg(round(max(abs(col("ca") / nullif(col("ta"), lit(0L)) -
-          col("cb") / nullif(col("tb"), lit(0L)))), 6).as("ks")))
-    } finally merged.unpersist()
+        sum(when(isA, 0L).otherwise(1L)).as("n_b")))
+    requireBoundedDomain(merged.count(), maxDomain, "ks", valueCol)
+    val w = Window.orderBy(col("v"))
+      .rowsBetween(Window.unboundedPreceding, 0L)
+    localized(merged
+      .withColumn("ca", sum(col("n_a")).over(w))
+      .withColumn("cb", sum(col("n_b")).over(w))
+      .withColumn("ta", sum(col("n_a")).over(Window.partitionBy()))
+      .withColumn("tb", sum(col("n_b")).over(Window.partitionBy()))
+      // nullif: an empty (or all-null) side makes its total 0 — the KS of a
+      // degenerate pair is undefined and must come back NULL, not throw
+      // DIVIDE_BY_ZERO under ANSI
+      .agg(round(max(abs(col("ca") / nullif(col("ta"), lit(0L)) -
+        col("cb") / nullif(col("tb"), lit(0L)))), 6).as("ks")))
   }
 
   /** Outlier bounds + clamp report for a bounded-decimal feature — the last
@@ -239,9 +236,8 @@ object FeatureStats {
     // not stall the quartile window's single task), and LOCALIZE the 1-row
     // bounds so the clamp pass below no longer references the persisted
     // frame and it can be released before returning.
-    val counts = data.groupBy("vi").agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bounds = try {
+    val bounds = CacheScope.using { scope =>
+      val counts = scope.persist(data.groupBy("vi").agg(count(lit(1)).as("cnt")))
       requireBoundedDomain(counts.count(), maxDomain, "outlierReport", f.name)
       val cum = counts
         .withColumn("cum", sum(col("cnt")).over(
@@ -255,7 +251,7 @@ object FeatureStats {
         .select(col("n"), col("q1c"), col("q3c"),
           (col("q1c") - lit(TukeyK) * (col("q3c") - col("q1c"))).as("loc"),
           (col("q3c") + lit(TukeyK) * (col("q3c") - col("q1c"))).as("hic")))
-    } finally counts.unpersist()
+    }
     data.crossJoin(broadcast(bounds))
       .groupBy("n", "q1c", "q3c", "loc", "hic")
       .agg(

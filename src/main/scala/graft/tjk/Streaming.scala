@@ -33,13 +33,6 @@ object Streaming {
     Sessionize.sessionWindowAgg(
       df.withWatermark(tsCol, watermark), entity, tsCol, gapExpr)
 
-  /** Streaming exact dedup within the watermark horizon — the incremental
-    * counterpart of TextOps.exactDedup for continuously-arriving documents.
-    */
-  def dedupStream(df: DataFrame, tsCol: String, watermark: String, keys: Seq[String]): DataFrame =
-    df.withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(keys)
-
   case class RollingEvent(conv_id: String, turn_idx: Int,
       ts: java.sql.Timestamp, value: Double)
   case class RollingFeature(conv_id: String, turn_idx: Int,

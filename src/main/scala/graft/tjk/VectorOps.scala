@@ -59,7 +59,8 @@ object VectorOps {
     *     vectors sharing a (band, hash) bucket — shuffle is on the band hash,
     *     so work is proportional to bucket sizes, not n²;
     *  3. candidates verified with the exact codegen'd cosine (join back to
-    *     the corpus by id — candidates stay id-only through the shuffle).
+    *     the cached signature rows by id — candidates stay id-only through
+    *     the shuffle, and the corpus is scanned once).
     *
     * Approximate by construction: a qualifying pair that shares no band is
     * missed (P[miss] = (1−pʳ)^B with p = 1 − θ/π). With 64 planes in 16 bands,
@@ -76,10 +77,10 @@ object VectorOps {
       scope: CacheScope = CacheScope.unmanaged): DataFrame = {
     val spark = vecs.sparkSession
     val r = LshPlanes / LshBands
-    // cache the signatures: the band self-join consumes this subplan twice
-    // (a and b sides), and without the cache each side re-scans the corpus
-    // and re-evaluates the signature — same branch-point discipline as
-    // minhashLshPairs (LRU-evictable, spills at scale, releasable via scope).
+    // cache the signatures WITH their embeddings: the band self-join and
+    // both verify join-backs read this subplan, and without the cache each
+    // re-scans the corpus — same branch-point discipline as minhashLshPairs
+    // (spills at scale, releasable via scope).
     // The source runs through TextOps.spread (stats-gated, large inputs pass
     // untouched): a small corpus arrives as ONE parquet split, so the cached
     // sig would be ONE partition — and since the band self-join broadcasts
@@ -87,8 +88,8 @@ object VectorOps {
     // single partition on a single task (measured: 1.2 s on one core,
     // 1.28M bucket pairs, 31 cores idle). Spreading the signature source
     // parallelizes the pair-expansion stage without touching its values.
-    val sig = scope.persist(TextOps.spread(vecs).select(col("vec_id"),
-      expressions.NativeFunctions.hyperplaneSigNative(
+    val sig = scope.persist(TextOps.spread(vecs).select(
+      col("vec_id"), col("embedding"), expressions.NativeFunctions.hyperplaneSigNative(
         spark, col("embedding"), hyperplanes(LshPlanes, dim)).as("bitstr")))
     val bandRows = sig.select(col("vec_id"), inline(expr(
       s"transform(sequence(0, ${LshBands - 1}), " +
@@ -97,7 +98,7 @@ object VectorOps {
       .select("id_a", "id_b").distinct()
     val cosN = expressions.NativeFunctions.cosineNative(
       spark, col("embedding_a"), col("embedding_b"))
-    TextOps.withBoth(cand, vecs, "vec_id", "embedding")
+    TextOps.withBoth(cand, sig, "vec_id", "embedding")
       .withColumn("cos", round(cosN, 6))
       .where(col("cos") >= threshold)
       .select("id_a", "id_b", "cos")
@@ -193,12 +194,11 @@ object VectorOps {
     import org.apache.spark.sql.expressions.Window
     val cosN = (a: Column, b: Column) =>
       expressions.NativeFunctions.cosineNative(spark, a, b)
-    val train = vecs
-      .select(col("vec_id"), col("embedding"))
-      .orderBy(xxhash64(col("vec_id")), col("vec_id"))
-      .limit(KmeansSampleMax)
-      .cache()
-    try {
+    CacheScope.using { scope =>
+      val train = scope.persist(vecs
+        .select(col("vec_id"), col("embedding"))
+        .orderBy(xxhash64(col("vec_id")), col("vec_id"))
+        .limit(KmeansSampleMax))
       var cents: Array[(Int, Array[Float])] = train.limit(nCells)
         .select("embedding").as[Array[Float]].collect()
         .zipWithIndex.map { case (e, i) => (i, e) }
@@ -233,7 +233,7 @@ object VectorOps {
         cents = cents.map { case (cid, old) => (cid, means.getOrElse(cid, old)) }
       }
       spark.createDataFrame(cents.toSeq).toDF("cid", "ce")
-    } finally train.unpersist()
+    }
   }
 
   /** IVF: corpus assigned to its nearest [[kmeansCentroids]] cell (one

@@ -36,6 +36,43 @@ class DevSuite extends SparkTestBase {
     Dev.profile(spark, sf, Seq("q13_topk"))
   }
 
+  test("every catalog query releases its caches, except those whose result reads a persist") {
+    // These return a lazy frame over an operator persist, so only the
+    // harness's between-query clearCache() (which Dev.each runs) frees it.
+    val lazyPersist = Set("q17_dedup_exact", "q18_ngram_jaccard", "q19_minhash_lsh",
+      "q20_simhash", "q22_dedup_embed", "q24_media", "q50_media_decode")
+    val cm = spark.sharedState.cacheManager
+    cm.clearCache()
+    val leftCached = SparkEntry.queries.keys.toSeq.sorted.filter { q =>
+      assert(cm.isEmpty, s"cache not empty entering $q")
+      var left = false
+      Dev.each(spark, sf, Seq(q), "cache") { (_, df) =>
+        df.write.format("noop").mode("overwrite").save()
+        left = !cm.isEmpty
+      }
+      left
+    }
+    assert(leftCached.toSet == lazyPersist)
+    assert(cm.isEmpty)
+  }
+
+  test("q43 releases its CSV aggregate when the CSV-vs-JSON check fails") {
+    // The CSV writer trims a value's leading whitespace and JSON keeps it,
+    // so conv_ids with a leading space make the two fingerprints differ.
+    import spark.implicits._
+    val dir = tmp()
+    val t0 = java.time.LocalDateTime.parse("2026-01-01T00:00:00")
+    (0 until 64).map(i => (s" u$i", "message", "hi", t0.plusMinutes(i), 1.0, i.toLong))
+      .toDF("user_id", "event_type", "props", "ts", "value", "event_id")
+      .write.parquet(new File(dir, "events.parquet").getPath)
+    val cm = spark.sharedState.cacheManager
+    cm.clearCache()
+    val e = intercept[IllegalArgumentException](
+      SourceStreamQueries.csvJsonSource(spark, dir.getPath))
+    assert(e.getMessage.contains("CSV vs JSON round-trip diverged"), e.getMessage)
+    assert(cm.isEmpty, "q43 left its CSV aggregate cached")
+  }
+
   test("every mode rejects a misspelled query name, naming it, and writes nothing") {
     val bad = "q13_topk_typo"
     val modes: Seq[(String, File => Unit)] = Seq(

@@ -174,6 +174,17 @@ class PlanShapeSuite extends SparkTestBase {
       s"law re-introduced a second scan:\n${plan.take(2000)}")
   }
 
+  test("q22 reads embeddings once: the verify joins back from the cached signatures") {
+    // The plain plan string repeats a cached subtree under every
+    // InMemoryTableScan that reads it; the formatted plan numbers each
+    // distinct node once, so count distinct scan ids.
+    val q22 = SparkEntry.queries("q22_dedup_embed")(spark, "/root/testdata/sf0.001")
+    val plan = q22.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+    val scans = "Scan \\w+ +\\((\\d+)\\)".r.findAllMatchIn(plan).map(_.group(1)).toSet
+    assert(scans.size == 1, s"embeddings scanned ${scans.size} times:\n${plan.take(4000)}")
+  }
+
   test("q54 packing is one narrow shuffle plus the output sort — no join") {
     // scan → narrow project → hash-repartition by shard (+ in-partition
     // sort) → streaming walk → range exchange for the dump's ORDER BY.
@@ -266,6 +277,26 @@ class PlanShapeSuite extends SparkTestBase {
       "Bench's timed sink is no longer the noop datasource")
     assert(!timed.contains(".count()"),
       "Bench's timed path regressed to a pruning count() sink")
+  }
+
+  test("persist only through CacheScope: no other src/main code line caches a frame") {
+    // Source-text pin: a hand-written persist/unpersist pair leaks when an
+    // action between them throws; CacheScope.using releases in a finally.
+    import scala.jdk.CollectionConverters._
+    val banned = Seq(".persist(", ".cache()", "unpersist(", "StorageLevel")
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    assert(files.exists(_.endsWith("CacheScope.scala")), files)
+    val hits = for {
+      f <- files if !f.endsWith("CacheScope.scala")
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      t = line.trim
+      if !(t.startsWith("//") || t.startsWith("*") || t.startsWith("/*"))
+      // a CacheScope call is the one allowed persist
+      code = line.replaceAll("(scope|CacheScope\\.unmanaged)\\.persist\\(", "")
+      if banned.exists(code.contains)
+    } yield s"$f:${i + 1}: $t"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("q08 exercises the merge fallback (MapPartitions node present)") {

@@ -92,22 +92,4 @@ class StreamingSuite extends SparkTestBase {
       assert(NaiveOracle.allclose(Some(ss), Some(bs)), s"sum mismatch at $k: $ss vs $bs")
     }
   }
-
-  test("streaming dedup drops duplicates within the watermark") {
-    implicit val sc = spark.sqlContext
-    val t0 = new Timestamp(1767225600000L)
-    val stream = MemoryStream[Turn]
-    val q = Streaming.dedupStream(stream.toDF(), "ts", "1 hour", Seq("conv_id", "turn_idx"))
-      .writeStream.format("memory").queryName("dedup_stream")
-      .outputMode("append").start()
-    stream.addData(Turn("c1", 0, "user", "hello", null, t0))
-    q.processAllAvailable()
-    stream.addData(Turn("c1", 0, "user", "hello", null, t0)) // dup within watermark
-    stream.addData(Turn("c1", 1, "user", "world", null, t0))
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("dedup_stream").select("conv_id", "turn_idx").collect()
-      .map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
-    assert(got == Seq(("c1", 0), ("c1", 1)))
-  }
 }
