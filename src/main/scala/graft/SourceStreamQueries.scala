@@ -315,8 +315,8 @@ object SourceStreamQueries {
   /** q43 — CSV and JSON sources exercised end-to-end (SURVEY.md §2.2's last
     * unexercised row): the transcript view is round-tripped through BOTH
     * text formats (µs timestamp format preserved explicitly), re-read with
-    * the declared schema, sessionized, and the two results are required
-    * IDENTICAL in-query; the CSV-derived result is returned and checked
+    * the declared schema, and the two re-read row sets are required
+    * IDENTICAL in-query; the CSV rows are sessionized, returned and checked
     * against the parquet-derived DuckDB oracle — so a lossy round-trip in
     * either format fails loudly on either engine.
     */
@@ -343,7 +343,12 @@ object SourceStreamQueries {
       val one = view.coalesce(1)
       def opts[T](w: org.apache.spark.sql.DataFrameWriter[T]) =
         w.option("timestampFormat", fmt).option("timestampNTZFormat", fmt)
-      opts(one.write).option("header", "true").mode("overwrite").csv(s"$tmp/csv")
+      // The CSV writer trims leading and trailing whitespace by default
+      // (the reader does not); JSON keeps it. Keep it on both sides.
+      opts(one.write).option("header", "true")
+        .option("ignoreLeadingWhiteSpace", "false")
+        .option("ignoreTrailingWhiteSpace", "false")
+        .mode("overwrite").csv(s"$tmp/csv")
       opts(one.write).mode("overwrite").json(s"$tmp/json")
 
       // multiLine: a text value containing an embedded newline is WRITTEN
@@ -360,28 +365,25 @@ object SourceStreamQueries {
         .option("timestampFormat", fmt).option("timestampNTZFormat", fmt)
         .json(s"$tmp/json")
 
-      def agg(src: DataFrame): DataFrame =
-        Sessionize.sessionAgg(src, "conv_id", "ts", "turn_idx",
-          Duration.ofMinutes(30))
       CacheScope.using { scope =>
-        // the CSV-side aggregate is consumed twice (fingerprint compare AND
-        // the returned rows) — persist it so the text re-read + sessionize
-        // runs once
-        val a = scope.persist(agg(fromCsv))
-        // ONE job for both fingerprints (they are independent subtrees, so a
-        // union evaluates them in the same action) instead of two sequential
-        // collect jobs — same (row_count, xor-hash) compare, half the
-        // collect round-trips.
+        // the CSV rows are consumed twice (fingerprint compare AND the
+        // returned aggregate) — persist them so the single-task multiLine
+        // read runs once
+        val csvRows = scope.persist(fromCsv)
+        // The compare covers every column of the re-read ROWS, so a lossy
+        // text/tool round trip fails here, not only one that moves the
+        // session aggregate. ONE job for both fingerprints (independent
+        // subtrees, so a union evaluates them in the same action).
+        val (rowCount, contentHash) = Lineage.fingerprint(view.columns.toSeq)
         def fpDf(src: DataFrame, tag: String): DataFrame =
-          src.agg(count(lit(1)).as("rc"),
-            bit_xor(xxhash64(src.columns.map(col): _*)).as("ch"))
-            .select(lit(tag).as("src"), col("rc"), col("ch"))
-        val fps = fpDf(a, "csv").unionByName(fpDf(agg(fromJson), "json"))
-          .collect().map(r => r.getString(0) ->
-            ((r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2)))).toMap
+          src.agg(rowCount, contentHash)
+            .select(lit(tag).as("src"), col("row_count"), col("content_hash"))
+        val fps = fpDf(csvRows, "csv").unionByName(fpDf(fromJson, "json"))
+          .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
         require(fps("csv") == fps("json"),
           s"CSV vs JSON round-trip diverged: ${fps("csv")} vs ${fps("json")}")
-        a.orderBy("conv_id", "session_id").collect().toSeq
+        Sessionize.sessionAgg(csvRows, "conv_id", "ts", "turn_idx", Duration.ofMinutes(30))
+          .orderBy("conv_id", "session_id").collect().toSeq
           .map(r => (r.getString(0), r.getString(1),
             r.getAs[java.time.LocalDateTime](2), r.getAs[java.time.LocalDateTime](3),
             r.getLong(4)))

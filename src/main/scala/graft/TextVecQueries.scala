@@ -664,7 +664,7 @@ object TextVecQueries {
   }
 
   /** The SQL-expressible slice of the media feature pipeline (byte count,
-    * header hex, byte-mean) — runs the SAME batched mapPartitions extractor
+    * header hex, byte-mean) — runs the SAME mapPartitions extractor
     * as q24 but restricts output to columns DuckDB can recompute from the
     * synthetic blobs (UTF-8 text bytes; the corpus is ASCII so byte stats
     * equal char stats on the oracle side), giving the multimodal plumbing a
@@ -703,7 +703,7 @@ object TextVecQueries {
     * partial as far as the container allows): per doc, a 16×16 grayscale
     * PNG (JDK ImageIO — actual DEFLATE compression) and a mono PCM16
     * RIFF/WAV are ENCODED distributed, then DECODED back through the
-    * batched per-partition pipeline (ImageIO read + RIFF chunk walk), and
+    * per-partition pipeline (ImageIO read + RIFF chunk walk), and
     * the decoded statistics are checked bit-exactly: pixels/samples derive
     * from the (ASCII-guarded) text bytes, so DuckDB recomputes every
     * decoded figure from the text. A decoder bug — wrong padding, wrong

@@ -83,11 +83,11 @@ object FeatureStats {
           (col("n") - col("n_missing")), 6).as("mean"),
         // greatest(…, 0): for a (near-)constant feature the two analytically
         // equal terms are rounded independently as doubles and the variance
-        // can land one ulp NEGATIVE — sqrt would report NaN (and poison
-        // outlierBoundsSigma). The outer when(): an ALL-MISSING feature has
-        // no variance to report — without it greatest(NULL, 0.0) skips the
-        // null and the row would claim a MEASURED zero-variance feature
-        // next to mean = null. The oracle SQL guards identically.
+        // can land one ulp NEGATIVE — sqrt would report NaN. The outer
+        // when(): an ALL-MISSING feature has no variance to report —
+        // without it greatest(NULL, 0.0) skips the null and the row would
+        // claim a MEASURED zero-variance feature next to mean = null. The
+        // oracle SQL guards identically.
         when(col("n") === col("n_missing"), lit(null).cast("double"))
           .otherwise(round(sqrt(greatest(
             col("sumsq_i") / lit((f.scale * f.scale).toDouble) / (col("n") - col("n_missing")) -
@@ -280,7 +280,7 @@ object FeatureStats {
     * in-query law re-derives the ranks and enforces exactly this).
     * Output head matches [[outlierReport]]: (feature, n, q1, q3, lo, hi);
     * below/above counts and clamped sums need the bounds first and cost one
-    * more pass either way — compose with [[clampOutliers]].
+    * more pass either way.
     */
   def outlierBoundsApprox(
       df: DataFrame, c: Column, name: String,
@@ -298,29 +298,6 @@ object FeatureStats {
           lit(TukeyK) * (col("q").getItem(1) - col("q").getItem(0)), 6).as("lo"),
         round(col("q").getItem(1) +
           lit(TukeyK) * (col("q").getItem(1) - col("q").getItem(0)), 6).as("hi"))
-
-  /** Moment-based (k·σ) bounds from the exact integer moments — the cheap
-    * single-aggregation alternative when quartiles aren't needed. Same
-    * 1-row (feature, n, lo, hi) shape contract as the IQR fences.
-    */
-  def outlierBoundsSigma(df: DataFrame, f: NumFeature, k: Double = 3.0): DataFrame =
-    profileNumeric(df, f).select(col("feature"), col("n"),
-      round(col("mean") - lit(k) * col("std"), 6).as("lo"),
-      round(col("mean") + lit(k) * col("std"), 6).as("hi"))
-
-  /** Column-level clamp + flag: `<c>_clamped` (winsorized to [lo, hi]) and
-    * `<c>_outlier` (true outside the fences; null value ⇒ null/ false-free
-    * row is preserved as null). Composes with any bounds source.
-    */
-  def clampOutliers(df: DataFrame, c: String, lo: Double, hi: Double): DataFrame =
-    df
-      // least/greatest IGNORE nulls (they return the extreme non-null
-      // operand), so a null value must be passed through explicitly — a
-      // missing measurement is not an in-range one
-      .withColumn(s"${c}_clamped",
-        when(col(c).isNull, lit(null).cast("double"))
-          .otherwise(greatest(least(col(c), lit(hi)), lit(lo))))
-      .withColumn(s"${c}_outlier", col(c) < lo || col(c) > hi)
 
   /** Information Value of a binned numeric feature against a binary label,
     * Laplace-smoothed: IV = Σ_bins (g_i − b_i) · ln(g_i / b_i) with

@@ -1,6 +1,6 @@
 package graft.tjk
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** O10 — per-partition lineage manifests + row-count/hash metrics
@@ -30,34 +30,37 @@ object Lineage {
     * content_hash). One extra narrow aggregation over the stage output; at
     * scale this is a map-side-combinable agg, not a second full shuffle.
     */
-  def manifest(df: DataFrame, stage: String): DataFrame =
-    df
-      .withColumn("__h", xxhash64(df.columns.toSeq.map(col): _*))
-      .groupBy(spark_partition_id().as("partition_id"))
-      .agg(
-        count(lit(1)).as("row_count"),
-        bit_xor(col("__h")).as("content_hash"))
+  def manifest(df: DataFrame, stage: String): DataFrame = {
+    val (rowCount, contentHash) = fingerprint(df.columns.toSeq)
+    df.groupBy(spark_partition_id().as("partition_id"))
+      .agg(rowCount, contentHash)
       .select(lit(stage).as("stage"), col("partition_id"),
         col("row_count"), col("content_hash"))
+  }
 
   /** Table-level (partition-layout-independent) fingerprint. */
   def tableFingerprint(df: DataFrame): (Long, Long) = {
-    val r = df
-      .agg(
-        count(lit(1)).as("row_count"),
-        bit_xor(xxhash64(df.columns.toSeq.map(col): _*)).as("content_hash"))
-      .collect()(0)
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    val (rowCount, contentHash) = fingerprint(df.columns.toSeq)
+    val r = df.agg(rowCount, contentHash).collect()(0)
+    (r.getLong(0), r.getLong(1))
   }
+
+  /** The one content fingerprint, as two aggregate columns over `cols`:
+    * `row_count` and `content_hash` (the XOR of the rows' `xxhash64`; 0 for
+    * no rows).
+    */
+  private[graft] def fingerprint(cols: Seq[String]): (Column, Column) = (
+    count(lit(1)).as("row_count"),
+    coalesce(bit_xor(xxhash64(cols.map(col): _*)), lit(0L)).as("content_hash"))
 }
 
 /** O11 — bucket-granular checkpoint/resume (BASELINE.json:6 "resumable from
   * snapshot/checkpoint boundaries"). The job's output is written per bucket
   * (`bucket = pmod(xxhash64(entity), B)`), each bucket commit is an atomic
   * directory rename plus a manifest row (row_count + content_hash). A restart
-  * skips buckets whose manifest verifies. On Iceberg this maps 1:1 to one
-  * snapshot commit per bucket (behind the TableIO seam); on Parquet the
-  * atomic rename provides the same all-or-nothing visibility.
+  * skips buckets whose manifest verifies. On Iceberg this would map 1:1 to
+  * one snapshot commit per bucket; on Parquet the atomic rename provides the
+  * same all-or-nothing visibility.
   */
 object Resume {
 
@@ -157,11 +160,13 @@ object Resume {
           .exists(_.getName.startsWith("__bucket="))
         val fpRows =
           if (!anyWritten) Array.empty[org.apache.spark.sql.Row]
-          else spark.read.parquet(tmp.getPath)
-            .groupBy(col("__bucket").cast("long").as("__b"))
-            .agg(count(lit(1)).as("__cnt"),
-              bit_xor(xxhash64(dataCols.map(col): _*)).as("__hash"))
-            .collect()
+          else {
+            val (rowCount, contentHash) = Lineage.fingerprint(dataCols)
+            spark.read.parquet(tmp.getPath)
+              .groupBy(col("__bucket").cast("long").as("__b"))
+              .agg(rowCount, contentHash)
+              .collect()
+          }
         // A bucket value outside [0, buckets) has no bucket to commit to:
         // its rows would be deleted with _tmp_run and left out of every
         // manifest. Fail before any rename instead of dropping them.
@@ -174,8 +179,7 @@ object Resume {
               s" (${stray.map(_.getLong(1)).sum} rows); nothing was committed")
         }
         val fps: Map[Int, (Long, Long)] = fpRows
-          .map(r => r.getLong(0).toInt ->
-            ((r.getLong(1), if (r.isNullAt(2)) 0L else r.getLong(2)))).toMap
+          .map(r => r.getLong(0).toInt -> ((r.getLong(1), r.getLong(2)))).toMap
         // Commit per bucket: data rename first, manifest last. A bucket with
         // no rows gets an empty committed dir + a (0, 0) manifest, so the
         // full bucket domain is always accounted for.

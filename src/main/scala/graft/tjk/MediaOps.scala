@@ -17,9 +17,9 @@ import org.apache.spark.sql.functions._
   *    MP3-class): [[decodeStub]] stays a clearly-marked deterministic fake
   *    that consumes the same bytes a real decoder would; swapping in a real
   *    codec changes ONE function, not the pipeline.
-  * Both tiers run through the same batched per-partition shape (the Scala
-  * analogue of `mapInPandas`), so the plumbing — schema, partitioning,
-  * batch amortization of codec init — is identical.
+  * Both tiers run through the same per-partition shape (the Scala analogue
+  * of `mapInPandas`), so the plumbing — schema, partitioning — is
+  * identical.
   */
 object MediaOps {
 
@@ -194,46 +194,41 @@ object MediaOps {
     }(Encoders.product[AvRow]).toDF()
   }
 
-  /** REAL decode, batched per partition like [[extractFeatures]]: PNG via
+  /** REAL decode, per partition like [[extractFeatures]]: PNG via
     * ImageIO, WAV via the RIFF parser. All statistics are exact integer
     * sums divided once, so they are bit-reproducible cross-engine.
     */
-  def decodeAvFeatures(media: DataFrame, batchSize: Int = 64): Dataset[AvFeatures] = {
+  def decodeAvFeatures(media: DataFrame): Dataset[AvFeatures] = {
     val ds = media.as(Encoders.product[AvRow])
     ds.mapPartitions { it =>
       javax.imageio.ImageIO.setUseCache(false) // in-memory streams, no temp files
-      it.grouped(batchSize).flatMap { batch =>
-        // real pipeline: decoder/codec context init once per batch here
-        batch.iterator.map { r =>
-          val (w, h, imgMean) = decodeImage(r.img)
-          val (n, rate, ampMean) = decodeWav(r.wav)
-          AvFeatures(r.doc_id, w, h, imgMean,
-            n, rate, n.toDouble * 1000.0 / rate, ampMean)
-        }
+      it.map { r =>
+        val (w, h, imgMean) = decodeImage(r.img)
+        val (n, rate, ampMean) = decodeWav(r.wav)
+        AvFeatures(r.doc_id, w, h, imgMean,
+          n, rate, n.toDouble * 1000.0 / rate, ampMean)
       }
     }(Encoders.product[AvFeatures])
   }
 
-  /** Batched per-partition feature extraction — the Scala analogue of a
-    * `mapInPandas` batch UDF: rows are processed in fixed-size batches per
-    * partition (batch shape matters for real decoders that amortize codec
-    * init), schema in/out is declared via Encoders. Typed facade over
-    * [[extractFeaturesKeeping]] — ONE batching/decode core, two surfaces.
+  /** Per-partition feature extraction — the Scala analogue of a
+    * `mapInPandas` UDF: schema in/out is declared via Encoders. Typed facade
+    * over [[extractFeaturesKeeping]] — ONE decode core, two surfaces.
     */
-  def extractFeatures(media: DataFrame, batchSize: Int = 64): Dataset[MediaFeatures] =
-    extractFeaturesKeeping(media.select("doc_id", "blob", "meta"), batchSize)
+  def extractFeatures(media: DataFrame): Dataset[MediaFeatures] =
+    extractFeaturesKeeping(media.select("doc_id", "blob", "meta"))
       .as(Encoders.product[MediaFeatures])
 
   /** [[extractFeatures]] with column PASSTHROUGH: every input column beyond
-    * (doc_id, blob, meta) is carried through the batched extractor and
+    * (doc_id, blob, meta) is carried through the extractor and
     * appended after the feature columns. This is the 100 TB composition
     * shape — at scale you never decode-then-JOIN features back to their
     * metadata (a full extra shuffle of the corpus); you carry the columns
-    * through the narrow map. This is the single batching/decode core
+    * through the narrow map. This is the single decode core
     * ([[decodeStub]] + [[sampleFrames]]); [[extractFeatures]] is its typed
     * no-passthrough facade.
     */
-  def extractFeaturesKeeping(media: DataFrame, batchSize: Int = 64): DataFrame = {
+  def extractFeaturesKeeping(media: DataFrame): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{BinaryType, StructType}
     require(media.schema("blob").dataType == BinaryType,
@@ -261,16 +256,13 @@ object MediaOps {
     val iMeta = s.fieldIndex("meta")
     val iExtras = extras.map(f => s.fieldIndex(f.name))
     norm.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        // real pipeline: decoder init once per batch here
-        batch.iterator.map { r =>
-          val blob = r.getAs[Array[Byte]](iBlob)
-          val nFrames = r.getStruct(iMeta).getAs[Int]("n_frames")
-          val (header, mean) = decodeStub(blob)
-          Row.fromSeq(
-            Seq(r.getAs[Long](iDoc), blob.length.toLong, header, mean,
-              sampleFrames(blob, nFrames)) ++ iExtras.map(r.get))
-        }
+      it.map { r =>
+        val blob = r.getAs[Array[Byte]](iBlob)
+        val nFrames = r.getStruct(iMeta).getAs[Int]("n_frames")
+        val (header, mean) = decodeStub(blob)
+        Row.fromSeq(
+          Seq(r.getAs[Long](iDoc), blob.length.toLong, header, mean,
+            sampleFrames(blob, nFrames)) ++ iExtras.map(r.get))
       }
     }(Encoders.row(outSchema))
   }

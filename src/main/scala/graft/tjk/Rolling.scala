@@ -59,6 +59,11 @@ object Rolling {
     */
   val MaxChunkWindows = 8L
 
+  /** Inputs whose size estimate exceeds this are sampled for hot-key
+    * detection (see [[detectHotKeys]]).
+    */
+  val SampleMinBytes: Long = 64L << 20
+
   /** Trailing time-window aggregates; adds one column per spec.
     *
     * Under the default [[SkewPolicy.Auto]] this runs a small detection job
@@ -189,7 +194,8 @@ object Rolling {
   /** Hot-entity detection: per-entity count over the entity column only
     * (column pruning keeps the scan narrow; the partial aggregate collapses
     * a whale to one row per map task, so detection itself cannot skew).
-    * Inputs over ~64 MB are sampled 1% with a fixed seed — a deterministic
+    * Inputs over `sampleMinBytes` (default [[SampleMinBytes]], 64 MB) are
+    * sampled 1% with a fixed seed — a deterministic
     * plan, and statistically safe: a true whale (≥ threshold rows) appears
     * ≥ 0.3·threshold·fraction times in the sample with overwhelming
     * probability, and a false positive merely routes a warm-but-not-hot
@@ -198,7 +204,8 @@ object Rolling {
   private[graft] def detectHotKeys(
       df: DataFrame,
       entity: String,
-      threshold: Long): Seq[Any] = {
+      threshold: Long,
+      sampleMinBytes: Long = SampleMinBytes): Seq[Any] = {
     if (threshold <= 0L) return Nil
     val stats = df.queryExecution.optimizedPlan.stats
     val conf = df.sparkSession.sessionState.conf
@@ -221,11 +228,9 @@ object Rolling {
     // appear many times in the sample: threshold·fraction ≥ 30 keeps the
     // miss probability negligible (Chernoff at 0.3× the expectation). For
     // smaller thresholds the exact count runs instead — same plan shape,
-    // just no Sample node. The size floor is a conf so the sampled branch
-    // is suite-testable without a 64 MB fixture.
+    // just no Sample node. The size floor is a parameter so the sampled
+    // branch is suite-testable without a 64 MB fixture.
     val frac = 0.01
-    val sampleMinBytes = df.sparkSession.conf
-      .get("spark.graft.rolling.detect.sampleMinBytes", (64L << 20).toString).toLong
     val sample = sizeKnown && stats.sizeInBytes > BigInt(sampleMinBytes) &&
       threshold * frac >= 30.0
     val keys = df.select(col(entity))

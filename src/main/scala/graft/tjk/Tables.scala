@@ -11,8 +11,15 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  def read(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    TableIO.forRoot(sfDir).read(spark, name)
+  /** The one table reader: `<sfDir>/<name>.parquet` (the testdata layout)
+    * when it exists, else the directory form `<sfDir>/<name>`. An
+    * Iceberg reader would plug in here (no Iceberg runtime jar is available
+    * offline — SURVEY.md §0.5).
+    */
+  def read(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val file = new java.io.File(sfDir, s"$name.parquet")
+    spark.read.parquet(if (file.exists()) file.getPath else s"$sfDir/$name")
+  }
 
   /** events viewed as transcripts:
     * conv_id = cast(user_id as string); turn_idx = dense per-entity sequence

@@ -268,24 +268,6 @@ class FeatureStatsSuite extends SparkTestBase {
       plan.take(2000))
   }
 
-  test("clampOutliers + sigma bounds: flags and winsorizes consistently") {
-    val spark2 = spark
-    import spark2.implicits._
-    val d = (Seq(1.0, 2.0, 3.0, 1000.0).map(Option(_)) :+ None).toDF("value")
-    val out = FeatureStats.clampOutliers(d, "value", 0.0, 10.0)
-      .orderBy(col("value").asc_nulls_last).collect()
-    assert(out.map(r => if (r.isNullAt(1)) null else r.getDouble(1)).toSeq ==
-      Seq(1.0, 2.0, 3.0, 10.0, null))
-    assert(out.map(r => if (r.isNullAt(2)) null else r.getBoolean(2)).toSeq ==
-      Seq(false, false, false, true, null))
-    val sb = FeatureStats.outlierBoundsSigma(d, NumFeature("value", col("value"), 2), 1.0)
-      .collect()(0)
-    // mean of {1,2,3,1000} = 251.5; σ = sqrt(sumsq/4 - mean²)
-    val std = math.sqrt((1.0 + 4.0 + 9.0 + 1000000.0) / 4 - 251.5 * 251.5)
-    assert(math.abs(sb.getDouble(2) - (251.5 - std)) < 1e-4)
-    assert(math.abs(sb.getDouble(3) - (251.5 + std)) < 1e-4)
-  }
-
   test("iv: informative feature scores higher than a non-informative one") {
     val spark2 = spark
     import spark2.implicits._

@@ -299,6 +299,21 @@ class PlanShapeSuite extends SparkTestBase {
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
+  test("one content fingerprint: only Lineage folds bit_xor(xxhash64(…)) in src/main") {
+    // Source-text pin: every row-count + hash fold goes through
+    // Lineage.fingerprint, so cached reference fingerprints stay comparable.
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    assert(files.exists(_.endsWith("Lineage.scala")), files)
+    val hits = for {
+      f <- files if !f.endsWith("Lineage.scala")
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("bit_xor(xxhash64(")
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   test("q08 exercises the merge fallback (MapPartitions node present)") {
     // q08 legitimately shares q06's oracle SQL — same as-of semantics,
     // different physical path. Pin that it actually PLANS the sort-merge

@@ -200,4 +200,16 @@ class ResumeSuite extends SparkTestBase {
     val folded = m.agg(sum(col("row_count")), bit_xor(col("content_hash"))).collect()(0)
     assert((folded.getLong(0), folded.getLong(1)) == a)
   }
+
+  test("tableFingerprint values are pinned: cached reference fingerprints stay valid") {
+    // Literal values of a fixed frame (strings, doubles and nulls), so a
+    // change to the fold cannot silently invalidate fingerprints on disk.
+    val df = spark.range(1000L).select(
+      col("id"),
+      concat(lit("c"), (col("id") % 7).cast("string")).as("k"),
+      (col("id") * 0.5).as("v"),
+      when(col("id") % 5 =!= 0, col("id").cast("int")).as("n"))
+    assert(Lineage.tableFingerprint(df) == ((1000L, -2708096048943820555L)))
+    assert(Lineage.tableFingerprint(df.limit(0)) == ((0L, 0L)))
+  }
 }

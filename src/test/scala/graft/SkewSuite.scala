@@ -162,11 +162,8 @@ class SkewSuite extends SparkTestBase {
       .unionByName(spark.range(5000L).select(
         concat(lit("c"), (col("id") % 500).cast("string")).as("conv_id"),
         col("id").cast("int").as("turn_idx")))
-    spark.conf.set("spark.graft.rolling.detect.sampleMinBytes", "1000")
-    try {
-      val hot = Rolling.detectHotKeys(whale, "conv_id", 10000L)
-      assert(hot == Seq("w"), s"sampled detection returned $hot")
-    } finally spark.conf.unset("spark.graft.rolling.detect.sampleMinBytes")
+    val hot = Rolling.detectHotKeys(whale, "conv_id", 10000L, sampleMinBytes = 1000L)
+    assert(hot == Seq("w"), s"sampled detection returned $hot")
   }
 
   test("default path survives a whale entity (10⁶ rows, 24h frame)") {

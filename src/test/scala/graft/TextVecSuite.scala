@@ -348,7 +348,7 @@ class TextVecSuite extends SparkTestBase {
 
   test("media plumbing: schema, batch shape, deterministic stub features") {
     val media = MediaOps.syntheticMedia(planted.withColumn("doc_id", col("doc_id")))
-    val feats = MediaOps.extractFeatures(media, batchSize = 8).collect()
+    val feats = MediaOps.extractFeatures(media).collect()
     assert(feats.length == planted.count())
     val byId = feats.map(f => f.doc_id -> f).toMap
     // exact text copies → identical blobs → identical features modulo frames
@@ -356,7 +356,7 @@ class TextVecSuite extends SparkTestBase {
     assert(byId(0L).mean_byte == byId(2000L).mean_byte)
     assert(byId(0L).n_bytes == byId(2000L).n_bytes)
     // deterministic under repartition
-    val again = MediaOps.extractFeatures(media.repartition(5), batchSize = 3)
+    val again = MediaOps.extractFeatures(media.repartition(5))
       .collect().map(f => f.doc_id -> f.frame_hashes).toMap
     feats.foreach(f => assert(again(f.doc_id) == f.frame_hashes))
   }
