@@ -462,7 +462,7 @@ object CoreQueries {
         RollingSpec("value", Agg.Sum, H1),
         RollingSpec("value", Agg.Min, D1),
         RollingSpec("value", Agg.Max, D1)),
-      chunkSpanMicros = Rolling.MaxChunkWindows * D1.toMillis * 1000L)
+      chunkSpanMicros = Rolling.MaxChunkWindows * micros(D1))
       .select(col("conv_id"), col("turn_idx"),
         col("count_value_3600s"),
         round(col("sum_value_3600s"), 6).as("sum_value_3600s"),
@@ -491,7 +491,7 @@ object CoreQueries {
     Skew.chunkedRollingAgg(t(spark, dir), "conv_id", "ts", Seq(
         RollingSpec("role", Agg.NUnique, H1),
         RollingSpec("tool", Agg.NUnique, D1)),
-      chunkSpanMicros = Rolling.MaxChunkWindows * D1.toMillis * 1000L)
+      chunkSpanMicros = Rolling.MaxChunkWindows * micros(D1))
       .select(col("conv_id"), col("turn_idx"),
         col("nunique_role_3600s"), col("nunique_tool_86400s"))
       .orderBy("conv_id", "turn_idx")

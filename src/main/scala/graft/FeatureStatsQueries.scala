@@ -128,16 +128,16 @@ object FeatureStatsQueries {
       // pipelines.
       val split = scope.persist(
         Split.timeSplit(Tables.transcripts(spark, dir), "ts", Boundary))
-      // single-pass tagged KS/PSI (FeatureStats.ksTagged/psiTagged): one
-      // grouped count over the persisted split instead of a per-side count
-      // + re-merge join per statistic — values identical, half the shuffles
+      // single-pass tagged KS/PSI (FeatureStats.ks/psi): one grouped count
+      // over the persisted split instead of a per-side count + re-merge
+      // join per statistic — values identical, half the shuffles
       val isTrain = col("split") === "train"
       val report = FeatureStats
         .iv(split, "value", col("role") === "purchase", BinW, NBins)
         .select(lit("iv_value").as("metric"), col("iv").as("stat"))
-        .unionByName(FeatureStats.ksTagged(split, "value", isTrain)
+        .unionByName(FeatureStats.ks(split, "value", isTrain)
           .select(lit("ks_value").as("metric"), col("ks").as("stat")))
-        .unionByName(FeatureStats.psiTagged(split, "value", isTrain, BinW, NBins)
+        .unionByName(FeatureStats.psi(split, "value", isTrain, BinW, NBins)
           .select(lit("psi_value").as("metric"), col("psi").as("stat")))
         .orderBy("metric")
       localized(report).orderBy("metric")
@@ -232,9 +232,9 @@ object FeatureStatsQueries {
       val split = scope.persist(Split.timeSplit(joined, "ts", Boundary))
       // single-pass tagged KS/PSI — same rationale as driftReport
       val isTrain = col("split") === "train"
-      val report = FeatureStats.ksTagged(split, "pv", isTrain)
+      val report = FeatureStats.ks(split, "pv", isTrain)
         .select(lit("ks_asof_pv").as("metric"), col("ks").as("stat"))
-        .unionByName(FeatureStats.psiTagged(split, "pv", isTrain, BinW, NBins)
+        .unionByName(FeatureStats.psi(split, "pv", isTrain, BinW, NBins)
           .select(lit("psi_asof_pv").as("metric"), col("psi").as("stat")))
         .orderBy("metric")
       localized(report).orderBy("metric")

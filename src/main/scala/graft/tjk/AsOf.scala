@@ -82,7 +82,7 @@ object AsOf {
     val outSchema = StructType(
       spineSchema.fields ++
         payload.map(p => paySchema(p).copy(nullable = true)))
-    val tolMicros = tolerance.map(d => d.toMillis * 1000L)
+    val tolMicros = tolerance.map(micros)
 
     val sortedSchema = sorted.schema
     val eIdx = sortedSchema.fieldIndex("__e")
@@ -169,9 +169,8 @@ object AsOf {
   private def applyTolerance(matched: DataFrame, tolerance: Option[Duration]): DataFrame =
     tolerance match {
       case Some(d) =>
-        val tolMicros = d.toMillis * 1000L
         matched.withColumn("__match",
-          when(col("__tm") - col("__match.__mts") <= tolMicros, col("__match")))
+          when(col("__tm") - col("__match.__mts") <= micros(d), col("__match")))
       case None => matched
     }
 

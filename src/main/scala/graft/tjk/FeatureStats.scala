@@ -119,22 +119,13 @@ object FeatureStats {
     greatest(least(floor(c / binWidth), lit((nBins - 1).toLong)), lit(0L))
       .cast("int")
 
-  /** Population Stability Index between populations `a` (expected) and `b`
-    * (actual) over fixed-width bins of `valueCol`: [[psiTagged]] over the
-    * union of the two value columns, `a`'s rows tagged.
-    */
-  def psi(
-      a: DataFrame, b: DataFrame, valueCol: String,
-      binWidth: Double, nBins: Int): DataFrame =
-    psiTagged(tagged(a, b, valueCol), valueCol, col(SideTag), binWidth, nBins)
-
   /** PSI between the rows of `df` where `isA` holds (expected) and the rest
     * (actual), over fixed-width bins of `valueCol`, with Laplace smoothing
     * [[Smoothing]] on the COUNTS (so empty bins are defined on both sides):
     * PSI = Σ_bins (p_b − p_a) · ln(p_b / p_a). One binned count shuffle
     * counts both sides; the Σ runs over ≤ nBins rows.
     */
-  private[graft] def psiTagged(
+  def psi(
       df: DataFrame, valueCol: String, isA: Column,
       binWidth: Double, nBins: Int): DataFrame = {
     val eps = Smoothing
@@ -155,24 +146,6 @@ object FeatureStats {
       .agg(round(sum(col("dp") * col("lr")), 6).as("psi"))
   }
 
-  /** Exact two-sample Kolmogorov–Smirnov statistic between `a` and `b` over
-    * a bounded-domain numeric column: [[ksTagged]] over the union of the
-    * two value columns, `a`'s rows tagged.
-    */
-  def ks(
-      a: DataFrame, b: DataFrame, valueCol: String,
-      maxDomain: Long = MaxExactDomain): DataFrame =
-    ksTagged(tagged(a, b, valueCol), valueCol, col(SideTag), maxDomain)
-
-  private val SideTag = "_is_a"
-
-  /** `a`'s `valueCol` tagged [[SideTag]] = true, unioned with `b`'s tagged
-    * false — the one-frame input of the tagged kernels.
-    */
-  private def tagged(a: DataFrame, b: DataFrame, valueCol: String): DataFrame =
-    a.select(col(valueCol), lit(true).as(SideTag))
-      .unionByName(b.select(col(valueCol), lit(false).as(SideTag)))
-
   /** Exact two-sample KS statistic between the rows of `df` where `isA`
     * holds and the rest: max over observed values of |F_a − F_b|. Both
     * sides' per-value counts (cardinality ≤ the value domain) come from a
@@ -188,7 +161,7 @@ object FeatureStats {
     * returning. An unbounded continuous feature fails loudly instead of
     * stalling the single-task sort.
     */
-  private[graft] def ksTagged(
+  def ks(
       df: DataFrame, valueCol: String, isA: Column,
       maxDomain: Long = MaxExactDomain): DataFrame = CacheScope.using { scope =>
     val merged = scope.persist(df.where(col(valueCol).isNotNull)
@@ -302,7 +275,7 @@ object FeatureStats {
   /** Information Value of a binned numeric feature against a binary label,
     * Laplace-smoothed: IV = Σ_bins (g_i − b_i) · ln(g_i / b_i) with
     * g_i/b_i the smoothed shares of positive/negative rows in bin i — the
-    * [[psiTagged]] sum with the negatives as side `a` and the positives as
+    * [[psi]] sum with the negatives as side `a` and the positives as
     * side `b`.
     */
   def iv(
@@ -311,6 +284,6 @@ object FeatureStats {
     // a NULL label is unknown, not negative: unfiltered, `!labelCol` is
     // NULL and every unlabeled row would silently count as a positive,
     // skewing WoE/IV with no warning
-    psiTagged(df.where(labelCol.isNotNull), valueCol, !labelCol, binWidth, nBins)
+    psi(df.where(labelCol.isNotNull), valueCol, !labelCol, binWidth, nBins)
       .withColumnRenamed("psi", "iv")
 }

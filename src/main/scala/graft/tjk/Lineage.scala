@@ -155,14 +155,18 @@ object Resume {
         // Fingerprint what was actually written (one pass over the OUTPUT,
         // which is output-sized — the input is never re-read). An all-empty
         // result writes no partition dirs at all; skip the read then (a
-        // partition-less parquet dir has no schema to infer).
-        val anyWritten = Option(tmp.listFiles()).getOrElse(Array.empty)
-          .exists(_.getName.startsWith("__bucket="))
+        // partition-less parquet dir has no schema to infer). The bucket
+        // dirs are read by name under `basePath`, not through `_tmp_run`:
+        // Spark ignores a path whose name starts with `_` (which keeps the
+        // staging dir hidden from readers of `outDir`) and would read it
+        // only through its all-paths-ignored fall-back.
+        val written = Option(tmp.listFiles()).getOrElse(Array.empty)
+          .filter(_.getName.startsWith("__bucket=")).map(_.getPath)
         val fpRows =
-          if (!anyWritten) Array.empty[org.apache.spark.sql.Row]
+          if (written.isEmpty) Array.empty[org.apache.spark.sql.Row]
           else {
             val (rowCount, contentHash) = Lineage.fingerprint(dataCols)
-            spark.read.parquet(tmp.getPath)
+            spark.read.option("basePath", tmp.getPath).parquet(written.toSeq: _*)
               .groupBy(col("__bucket").cast("long").as("__b"))
               .agg(rowCount, contentHash)
               .collect()

@@ -27,7 +27,7 @@ object Pipeline {
     * time `ts`, tie-break `turn_idx`. `skewPolicy` threads to every rolling
     * call. Under the default Auto one detection job runs, and the session
     * detection cache collapses repeated calls over the same input to that
-    * ONE job. Lags, ffill and sessionize all order by (ts, turn_idx): a lag
+    * ONE job; WindowOnly runs none and routes nothing. Lags, ffill and sessionize all order by (ts, turn_idx): a lag
     * never reads a row with a later ts (even when ts runs backwards against
     * turn_idx), and the three share one sort.
     */

@@ -19,11 +19,11 @@ import graft.tjk.expressions.NativeFunctions
   * one per feature.
   *
   * Two r3 defaults close the remaining whale-entity hazards:
-  *  - [[SkewPolicy.Auto]]: hot entities (per-entity rows over the session
-  *    threshold) are detected up front and routed through the exact chunked
-  *    path ([[Skew.chunkedRollingAgg]], O(rows) amortized) — a Window node
-  *    would put a whale's whole timeline on ONE task and recompute every
-  *    frame from scratch (O(rows × frame)).
+  *  - [[SkewPolicy.Auto]]: hot entities (per-entity rows over
+  *    [[Rolling.HotThreshold]]) are detected up front and routed through
+  *    the exact chunked path ([[Skew.chunkedRollingAgg]], O(rows)
+  *    amortized) — a Window node would put a whale's whole timeline on
+  *    ONE task and recompute every frame from scratch (O(rows × frame)).
   *  - exact windowed nunique plans as the native
   *    [[graft.tjk.expressions.WindowNUnique]] typed aggregate, not
   *    `size(collect_set(...))` — no frame-sized array is materialized per
@@ -35,11 +35,11 @@ import graft.tjk.expressions.NativeFunctions
   */
 object Rolling {
 
-  /** Session conf key: per-entity row count above which an entity is "hot"
-    * and leaves the Window path. 0 or negative disables detection.
+  /** Per-entity row count above which [[SkewPolicy.Auto]] calls an entity
+    * "hot" and routes it off the Window path; [[SkewPolicy.WindowOnly]]
+    * turns detection off.
     */
-  val HotThresholdKey = "spark.graft.rolling.hotThreshold"
-  val HotThresholdDefault = 500000L
+  val HotThreshold = 500000L
 
   /** Routing cap: detection routes at most this many (largest) entities to
     * the chunked path. More candidates than this is not "a few whales" but a
@@ -67,14 +67,10 @@ object Rolling {
   /** Trailing time-window aggregates; adds one column per spec.
     *
     * Under the default [[SkewPolicy.Auto]] this runs a small detection job
-    * at CALL time (a sampled per-entity count — one narrow scan, map-side
-    * combinable; the same aggregation shape as the lineage pass, SURVEY.md
-    * §4.2). No hot keys — the overwhelmingly common case — returns the
-    * plain single-Window-node plan unchanged (ONE exchange, pinned in
-    * PlanShapeSuite). With hot keys, cold entities keep that plan and hot
-    * entities go through the chunked path in chunks of [[MaxChunkWindows]]
-    * max windows; results are identical (SkewSuite property), only the task
-    * layout changes.
+    * at CALL time (a sampled per-entity count over [[HotThreshold]] — one
+    * narrow scan, map-side combinable; the same aggregation shape as the
+    * lineage pass, SURVEY.md §4.2) and hands the hot keys to [[routed]].
+    * [[SkewPolicy.WindowOnly]] runs no detection and routes nothing.
     */
   def rollingAgg(
       df: DataFrame,
@@ -84,11 +80,25 @@ object Rolling {
       policy: SkewPolicy = SkewPolicy.Auto): DataFrame = {
     if (specs.isEmpty) return df
     val hot = policy match {
-      case SkewPolicy.WindowOnly => Seq.empty
-      case SkewPolicy.Auto =>
-        val t = df.sparkSession.conf.get(HotThresholdKey, HotThresholdDefault.toString).toLong
-        detectHotKeysCached(df, entity, t)
+      case SkewPolicy.WindowOnly => Nil
+      case SkewPolicy.Auto       => detectHotKeysCached(df, entity)
     }
+    routed(df, entity, tsCol, specs, hot)
+  }
+
+  /** The skew router. No `hot` keys — the overwhelmingly common case —
+    * returns the plain single-Window-node plan (ONE exchange, pinned in
+    * PlanShapeSuite). Otherwise cold entities keep that plan and the `hot`
+    * ones go through the chunked path in chunks of [[MaxChunkWindows]] max
+    * windows; results are identical (SkewSuite property), only the task
+    * layout changes.
+    */
+  private[graft] def routed(
+      df: DataFrame,
+      entity: String,
+      tsCol: String,
+      specs: Seq[RollingSpec],
+      hot: Seq[Any]): DataFrame =
     if (hot.isEmpty) windowRolling(df, entity, tsCol, specs)
     else {
       // coalesce(false): a NULL entity never matches the hot set — it must
@@ -101,8 +111,9 @@ object Rolling {
       // (Catalyst plans it as an InSet hash probe; SkewSuite pins the cap).
       val isHot = coalesce(col(entity).isin(hot: _*), lit(false)) &&
         col(tsCol).isNotNull
-      // One max window when 8 of them overflow: any span ≥ maxW is exact.
-      val maxW = specs.map(_.windowMicros).max
+      // A zero-width window still needs a positive span (pmod by 0 throws);
+      // one max window when 8 of them overflow: any span ≥ maxW is exact.
+      val maxW = math.max(specs.map(_.windowMicros).max, 1L)
       val chunkSpan =
         if (maxW > Long.MaxValue / MaxChunkWindows) maxW else MaxChunkWindows * maxW
       val cold = windowRolling(df.where(!isHot), entity, tsCol, specs)
@@ -110,7 +121,6 @@ object Rolling {
         df.where(isHot), entity, tsCol, specs, chunkSpan)
       cold.unionByName(hotDf)
     }
-  }
 
   private def windowRolling(
       df: DataFrame,
@@ -139,9 +149,9 @@ object Rolling {
     * plan's semantic hash + node count (alias/id-invariant, and — crucially
     * — NOT a reference to the plan itself: a cached plan strongly
     * references its SparkSession through LogicalRelation/HadoopFsRelation,
-    * which would pin the WeakHashMap's weak session key forever) plus
-    * (entity, threshold), so a pipeline composing several rolling calls
-    * over the same input pays ONE detection job, not one per call. Bounded
+    * which would pin the WeakHashMap's weak session key forever) plus the
+    * entity, so a pipeline composing several rolling calls over the same
+    * input pays ONE detection job, not one per call. Bounded
     * LRU per session; sessions are weak keys and values hold only small
     * key lists. A hash collision or a stale entry (input files rewritten
     * under the same plan within one session) only mis-ROUTES — results are
@@ -150,7 +160,7 @@ object Rolling {
     */
   private val detectionCache =
     new java.util.WeakHashMap[SparkSession,
-      java.util.LinkedHashMap[(Int, Int, String, Long), Seq[Any]]]()
+      java.util.LinkedHashMap[(Int, Int, String), Seq[Any]]]()
   private val DetectionCacheMax = 64
 
   /** Test pin: number of detection JOBS actually run (cache misses that
@@ -161,29 +171,24 @@ object Rolling {
   def clearDetectionCache(spark: SparkSession): Unit =
     detectionCache.synchronized { detectionCache.remove(spark) }
 
-  private def detectHotKeysCached(
-      df: DataFrame,
-      entity: String,
-      threshold: Long): Seq[Any] = {
-    if (threshold <= 0L) return Nil
+  private def detectHotKeysCached(df: DataFrame, entity: String): Seq[Any] = {
     val spark = df.sparkSession
     val canon = df.queryExecution.optimizedPlan.canonicalized
     // (semanticHash, node count) — two independent cheap fingerprints; a
     // simultaneous collision only affects routing, never results
-    val key = (canon.semanticHash(), canon.collect { case _ => 1 }.sum,
-      entity, threshold)
+    val key = (canon.semanticHash(), canon.collect { case _ => 1 }.sum, entity)
     detectionCache.synchronized {
       val m = detectionCache.computeIfAbsent(spark, _ =>
-        new java.util.LinkedHashMap[(Int, Int, String, Long), Seq[Any]](16, 0.75f, true) {
+        new java.util.LinkedHashMap[(Int, Int, String), Seq[Any]](16, 0.75f, true) {
           override def removeEldestEntry(
-              e: java.util.Map.Entry[(Int, Int, String, Long), Seq[Any]]): Boolean =
+              e: java.util.Map.Entry[(Int, Int, String), Seq[Any]]): Boolean =
             size > DetectionCacheMax
         })
       Option(m.get(key))
     } match {
       case Some(hit) => hit
       case None =>
-        val res = detectHotKeys(df, entity, threshold)
+        val res = detectHotKeys(df, entity, HotThreshold)
         detectionCache.synchronized {
           Option(detectionCache.get(spark)).foreach(_.put(key, res))
         }
@@ -206,7 +211,6 @@ object Rolling {
       entity: String,
       threshold: Long,
       sampleMinBytes: Long = SampleMinBytes): Seq[Any] = {
-    if (threshold <= 0L) return Nil
     val stats = df.queryExecution.optimizedPlan.stats
     val conf = df.sparkSession.sessionState.conf
     val sizeKnown = stats.sizeInBytes < BigInt(conf.defaultSizeInBytes)
@@ -288,9 +292,8 @@ object Rolling {
       tsCol: String,
       valueCol: String,
       window: java.time.Duration): DataFrame = {
-    val micros = window.toMillis * 1000L
     val frame = Window.partitionBy(col(entity)).orderBy(tsMicros(col(tsCol)))
-      .rangeBetween(-micros, 0L)
+      .rangeBetween(-micros(window), 0L)
     df.withColumn(s"approx_nunique_${valueCol}_${window.toSeconds}s",
       approx_count_distinct(col(valueCol), 0.05).over(frame))
   }

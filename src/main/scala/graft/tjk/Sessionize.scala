@@ -31,7 +31,7 @@ object Sessionize {
       tsCol: String,
       tieCol: String,
       gap: Duration): DataFrame = {
-    val gapMicros = gap.toMillis * 1000L
+    val gapMicros = micros(gap)
     val w = Window.partitionBy(col(entity)).orderBy(col(tsCol), col(tieCol))
     val run = w.rowsBetween(Window.unboundedPreceding, 0L)
     val prev = lag(tsMicros(col(tsCol)), 1).over(w)

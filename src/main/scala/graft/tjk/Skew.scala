@@ -24,8 +24,9 @@ import graft.tjk.expressions.WindowNUnique.normalize
   *    non-owner context, repartition by (entity, chunk), and compute the
   *    trailing frames with an exact sliding structure in mapPartitions,
   *    emitting owner rows only. The band is `maxW` of a `span`, so a span of
-  *    one `maxW` duplicates EVERY row; [[Rolling.rollingAgg]] passes
-  *    `Rolling.MaxChunkWindows` max windows, so 1/8 of them. Count/nunique/
+  *    one `maxW` duplicates EVERY row; the router ([[Rolling.routed]])
+  *    passes `Rolling.MaxChunkWindows` max windows (a zero-width window
+  *    counts as 1 µs), so 1/8 of them. Count/nunique/
   *    min/max results are byte-identical to [[Rolling.rollingAgg]]
   *    (property-tested); sum/mean agree to floating-point summation-order
   *    equivalence — byte-identical whenever per-frame adds are exact (ints,
@@ -83,8 +84,8 @@ object Skew {
     * and output schema as [[Rolling.rollingAgg]], but a hot entity's rows are
     * spread over ceil(timespan / chunkSpan) tasks instead of one.
     *
-    * chunkSpanMicros must be ≥ max window width `maxW` so each row's
-    * trailing frame lives entirely in its own chunk plus the previous
+    * chunkSpanMicros must be positive and ≥ max window width `maxW` so each
+    * row's trailing frame lives entirely in its own chunk plus the previous
     * chunk's last `maxW` (the context band, duplicated forward). Rows in the
     * band are shuffled and slid twice, so the duplicated share is
     * maxW / chunkSpanMicros: all rows at a span of one `maxW`, 1/8 at the
@@ -98,6 +99,7 @@ object Skew {
       chunkSpanMicros: Long): DataFrame = {
     require(specs.nonEmpty, "no specs")
     val maxW = specs.map(_.windowMicros).max
+    require(chunkSpanMicros > 0L, s"chunk span $chunkSpanMicros must be positive")
     require(chunkSpanMicros >= maxW,
       s"chunk span $chunkSpanMicros < max window $maxW")
 

@@ -45,17 +45,18 @@ object Agg {
   */
 sealed trait SkewPolicy
 object SkewPolicy {
-  /** DEFAULT: detect hot entities (per-entity row count over the session
-    * threshold `spark.graft.rolling.hotThreshold`, sampled on large inputs)
-    * and route them through the exact chunked path; everything else keeps
-    * the single-Window-node plan. Costs one cheap detection job at plan
+  /** DEFAULT: detect hot entities (per-entity row count over
+    * [[Rolling.HotThreshold]], sampled on large inputs) and route them
+    * through the exact chunked path; everything else keeps the
+    * single-Window-node plan. Costs one cheap detection job at plan
     * construction; results are identical either way (chunking is
     * result-invariant, property-pinned in SkewSuite).
     */
   case object Auto extends SkewPolicy
-  /** Single Window node, no detection job — for inputs KNOWN to carry no hot
-    * entity (tiny dimensions, pre-bucketed slices) or for benchmarking the
-    * raw window path. A whale entity on this path owns one task end-to-end.
+  /** Single Window node, no detection job — the one way to turn the skew
+    * router off: for inputs KNOWN to carry no hot entity (tiny dimensions,
+    * pre-bucketed slices) or for benchmarking the raw window path. A whale
+    * entity on this path owns one task end-to-end.
     */
   case object WindowOnly extends SkewPolicy
 }
@@ -69,7 +70,8 @@ case class RollingSpec(
     agg: Agg,
     window: Duration,
     strict: Boolean = false) {
-  def windowMicros: Long = window.toMillis * 1000L
+  require(!window.isNegative, s"$this: negative window")
+  def windowMicros: Long = micros(window)
   def outName: String =
     s"${agg.name}_${col}_${window.toSeconds}s" + (if (strict) "_strict" else "")
 }

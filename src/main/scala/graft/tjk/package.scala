@@ -12,6 +12,12 @@ package object tjk {
     */
   def tsMicros(c: Column): Column = unix_micros(c.cast("timestamp"))
 
+  /** A window, gap or tolerance in µs, exact (sub-millisecond parts kept);
+    * throws on overflow rather than wrapping.
+    */
+  def micros(d: java.time.Duration): Long =
+    Math.addExact(Math.multiplyExact(d.getSeconds, 1000000L), d.getNano / 1000L)
+
   /** md5-derived deterministic bucket in [0, n) — the repo's ONE convention
     * for subset predicates and resume buckets that an external engine must
     * replicate (DuckDB has md5 but not xxhash64). The Spark expression and

@@ -49,7 +49,7 @@ class AsOfSuite extends SparkTestBase {
   private def naive(strict: Boolean, tol: Option[Duration]): Map[Int, Option[Double]] = {
     val sp = spine.map { case (e, _, t) => (e, t.getTime * 1000L) }
     val ev = events.map { case (e, t, tie, v) => (e, t.getTime * 1000L, tie, v) }
-    val res = NaiveOracle.asof(sp, ev, strict, tol.map(_.toMillis * 1000L))
+    val res = NaiveOracle.asof(sp, ev, strict, tol.map(micros))
     spine.map(_._2).zip(res).toMap
   }
 
@@ -128,7 +128,7 @@ class AsOfSuite extends SparkTestBase {
         val nsp = turns.map(t => (t.conv_id, NaiveOracle.micros(t.ts)))
         val nev = evSeq.map(t => (t.conv_id, NaiveOracle.micros(t.ts), t.turn_idx.toLong, t.text.length.toDouble))
         val n = turns.map(t => (t.conv_id, t.turn_idx))
-          .zip(NaiveOracle.asof(nsp, nev, strict, tol.map(_.toMillis * 1000L))).toMap
+          .zip(NaiveOracle.asof(nsp, nev, strict, tol.map(micros))).toMap
         assert(a == n, s"engine vs naive strict=$strict tol=$tol")
       }
     }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.tjk._
 import graft.tjk.FeatureStats.NumFeature
@@ -21,6 +22,21 @@ class FeatureStatsSuite extends SparkTestBase {
         when(isnan(col("value")), lit(null).cast("double"))
           .otherwise(col("value")))
   }
+
+  /** `a`'s `valueCol` tagged `is_a` = true, unioned with `b`'s tagged false:
+    * the one frame that the tagged `psi`/`ks` read.
+    */
+  private def sides(a: DataFrame, b: DataFrame, valueCol: String): DataFrame =
+    a.select(col(valueCol), lit(true).as("is_a"))
+      .unionByName(b.select(col(valueCol), lit(false).as("is_a")))
+
+  private def psiAB(a: DataFrame, b: DataFrame, valueCol: String,
+      binWidth: Double, nBins: Int): DataFrame =
+    FeatureStats.psi(sides(a, b, valueCol), valueCol, col("is_a"), binWidth, nBins)
+
+  private def ksAB(a: DataFrame, b: DataFrame, valueCol: String,
+      maxDomain: Long = FeatureStats.MaxExactDomain): DataFrame =
+    FeatureStats.ks(sides(a, b, valueCol), valueCol, col("is_a"), maxDomain)
 
   test("profileNumeric: exact moments with a null present") {
     val r = FeatureStats.profileNumeric(df, NumFeature("value", col("value"), 2))
@@ -46,19 +62,19 @@ class FeatureStatsSuite extends SparkTestBase {
     val a = Seq(1.0, 2.0, 3.0, 4.0).toDF("value")
     val b = Seq(3.0, 4.0, 5.0, 6.0).toDF("value")
     // F_a - F_b maximal at v=2: |2/4 - 0/4| = 0.5
-    val ks = FeatureStats.ks(a, b, "value").collect()(0).getDouble(0)
-    assert(ks == 0.5, s"ks=$ks")
+    val stat = ksAB(a, b, "value").collect()(0).getDouble(0)
+    assert(stat == 0.5, s"ks=$stat")
   }
 
   test("psi: identical populations give ~0; shifted give > 0") {
     val spark2 = spark
     import spark2.implicits._
     val a = (1 to 100).map(i => (i % 10) * 10.0 + 1).toDF("value")
-    val zero = FeatureStats.psi(a, a, "value", 10.0, 10)
+    val zero = psiAB(a, a, "value", 10.0, 10)
       .collect()(0).getDouble(0)
     assert(zero == 0.0, s"psi(identical)=$zero")
     val b = (1 to 100).map(i => (i % 5) * 10.0 + 1).toDF("value")
-    val drift = FeatureStats.psi(a, b, "value", 10.0, 10)
+    val drift = psiAB(a, b, "value", 10.0, 10)
       .collect()(0).getDouble(0)
     assert(drift > 0.5, s"psi(shifted)=$drift")
   }
@@ -80,8 +96,8 @@ class FeatureStatsSuite extends SparkTestBase {
       val other = d.where(!col("y"))
       Seq(
         FeatureStats.profileNumeric(d, NumFeature("value", col("value"), 2)).collect()(0).toSeq,
-        FeatureStats.psi(half, other, "value", 50.0, 10).collect()(0).toSeq,
-        FeatureStats.ks(half, other, "value").collect()(0).toSeq,
+        psiAB(half, other, "value", 50.0, 10).collect()(0).toSeq,
+        ksAB(half, other, "value").collect()(0).toSeq,
         FeatureStats.iv(d, "value", col("y"), 50.0, 10).collect()(0).toSeq)
     }
     assert(all(df.repartition(1)) == all(df.repartition(13)))
@@ -93,13 +109,13 @@ class FeatureStatsSuite extends SparkTestBase {
     // widthBin: an outlier past Int.MaxValue/binWidth must land in the top
     // bin, not throw CAST_OVERFLOW under ANSI
     val extreme = Seq(5.0e7, 1.0, 2.0).toDF("value")
-    val psi = FeatureStats.psi(extreme, extreme, "value", 0.01, 10)
+    val stat = psiAB(extreme, extreme, "value", 0.01, 10)
       .collect()(0).getDouble(0)
-    assert(psi == 0.0, s"identical populations with an extreme row: psi=$psi")
+    assert(stat == 0.0, s"identical populations with an extreme row: psi=$stat")
     // ks: an empty side yields NULL, not DIVIDE_BY_ZERO
     val a = Seq(1.0, 2.0).toDF("value")
     val empty = Seq.empty[Double].toDF("value")
-    assert(FeatureStats.ks(a, empty, "value").collect()(0).isNullAt(0))
+    assert(ksAB(a, empty, "value").collect()(0).isNullAt(0))
     // iv: a NULL label is excluded, not silently counted as negative
     val lab = Seq((5.0, Some(true)), (5.0, Some(false)), (5.0, None))
       .toDF("value", "y")
@@ -200,7 +216,7 @@ class FeatureStatsSuite extends SparkTestBase {
     // sort is only safe on a bounded domain), not stall.
     val cont = (1 to 200).map(_ * 0.01).toDF("value")
     val exKs = intercept[IllegalArgumentException] {
-      FeatureStats.ks(cont, cont, "value", maxDomain = 100L)
+      ksAB(cont, cont, "value", maxDomain = 100L)
     }
     assert(exKs.getMessage.contains("maxDomain"), exKs.getMessage)
     val exOr = intercept[IllegalArgumentException] {
@@ -211,7 +227,7 @@ class FeatureStatsSuite extends SparkTestBase {
     // at or under the cap both still work, values unchanged, and the guard
     // path leaks no cached frame
     spark.sharedState.cacheManager.clearCache()
-    assert(FeatureStats.ks(cont, cont, "value", maxDomain = 200L)
+    assert(ksAB(cont, cont, "value", maxDomain = 200L)
       .collect()(0).getDouble(0) == 0.0)
     FeatureStats.outlierReport(cont,
       NumFeature("value", col("value"), 2), maxDomain = 200L).collect()

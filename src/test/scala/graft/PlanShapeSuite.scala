@@ -107,10 +107,9 @@ class PlanShapeSuite extends SparkTestBase {
     val skewed = Gen.transcripts(spark, nConvs = 10, seed = 42L,
         medianLen = 8, hotFactor = 40)
       .withColumn("value", length(col("text")).cast("double"))
-    val df = withHotThreshold(10L) {
-      Rolling.rollingAgg(skewed, "conv_id", "ts",
-        Seq(RollingSpec("value", Agg.Sum, Duration.ofHours(1))))
-    }
+    val df = Rolling.routed(skewed, "conv_id", "ts",
+      Seq(RollingSpec("value", Agg.Sum, Duration.ofHours(1))),
+      Rolling.detectHotKeys(skewed, "conv_id", 10L))
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("Union"), s"guard did not route (no union):\n$plan")
     assert(exchanges(df) == 2, plan) // window(conv_id) + chunk(conv_id,__chunk)
@@ -310,6 +309,22 @@ class PlanShapeSuite extends SparkTestBase {
       f <- files if !f.endsWith("Lineage.scala")
       (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
       if line.contains("bit_xor(xxhash64(")
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("no session conf and no millisecond truncation in src/main") {
+    // Source-text pins: the engine reads no `spark.graft.` session conf
+    // (SkewPolicy.WindowOnly is the one skew off-switch), and a Duration
+    // becomes µs only through the exact `micros`, never `toMillis`.
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    assert(files.exists(_.endsWith("Rolling.scala")), files)
+    val hits = for {
+      f <- files
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("spark.graft.") || line.contains("toMillis")
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("\n"))
   }

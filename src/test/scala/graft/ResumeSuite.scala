@@ -191,6 +191,42 @@ class ResumeSuite extends SparkTestBase {
     deleteRec(new java.io.File(outDir))
   }
 
+  test("the staging read-back names its bucket dirs: no 'All paths were ignored' fall-back") {
+    // `_tmp_run` is hidden from Spark's path filter by its leading `_`; read
+    // as a directory, Spark warns that it ignored every path and then reads
+    // them anyway. The read-back must not depend on that fall-back.
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("resume-readback", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        lines.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.datasources.DataSource").asInstanceOf[Logger]
+    val level = logger.getLevel
+    logger.addAppender(appender)
+    logger.setLevel(Level.WARN)
+    val input = turnsDf(Gen.turnsSeq(47L, 8, 10))
+    val outDir = Files.createTempDirectory("tjk_resume_readback").toString
+    val res =
+      try Resume.runBucketed(spark, input, "conv_id", outDir, 4)(job)
+      finally {
+        logger.removeAppender(appender)
+        logger.setLevel(level)
+        appender.stop()
+      }
+    assert(res.map(_.rowCount).sum == input.count())
+    val ignored = lines.toArray.map(_.toString).filter(_.contains("All paths were ignored"))
+    assert(ignored.isEmpty, ignored.mkString("\n"))
+    assert(!new java.io.File(s"$outDir/_tmp_run").exists())
+    deleteRec(new java.io.File(outDir))
+  }
+
   test("lineage fingerprint is partition-layout independent") {
     val df = turnsDf(Gen.turnsSeq(42L, 10, 30))
     val a = Lineage.tableFingerprint(df.repartition(1))

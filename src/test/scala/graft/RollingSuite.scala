@@ -27,7 +27,7 @@ class RollingSuite extends SparkTestBase {
   }
 
   private val H1 = java.time.Duration.ofHours(1)
-  private val W = H1.toMillis * 1000L
+  private val W = micros(H1)
 
   private def opt(r: Row, i: Int): Option[Double] =
     if (r.isNullAt(i)) None else Some(r.getDouble(i))
@@ -89,6 +89,28 @@ class RollingSuite extends SparkTestBase {
       .select("turn_idx", "sum_value_r1").collect()
       .map(r => r.getInt(0) -> r.getDouble(1)).toMap
     assert(out == Map(0 -> 1.0, 1 -> 3.0, 2 -> 5.0, 3 -> 7.0))
+  }
+
+  test("a 500 µs window over turns 300 µs apart keeps its sub-millisecond width") {
+    import org.apache.spark.sql.functions._
+    val w = java.time.Duration.ofNanos(500000L)
+    val df = spark.range(4L).select(lit("c").as("conv_id"),
+      col("id").cast("int").as("turn_idx"),
+      timestamp_micros(lit(1767225600000000L) + col("id") * 300L).as("ts"),
+      (col("id") + 1).cast("double").as("value"))
+    val out = Rolling.rollingAgg(df, "conv_id", "ts", Seq(
+        RollingSpec("value", Agg.Count, w),
+        RollingSpec("value", Agg.Sum, w),
+        RollingSpec("value", Agg.Sum, w, strict = true)))
+      .select("turn_idx", "count_value_0s", "sum_value_0s", "sum_value_0s_strict")
+      .collect().map(r => r.getInt(0) ->
+        ((r.getLong(1), r.getDouble(2), if (r.isNullAt(3)) None else Some(r.getDouble(3)))))
+      .toMap
+    // turns at 0, 300, 600, 900 µs with values 1..4: [ts − 500, ts] holds
+    // the turn itself and the one before it (except the first)
+    assert(out == Map(
+      0 -> ((1L, 1.0, None)), 1 -> ((2L, 3.0, Some(1.0))),
+      2 -> ((2L, 5.0, Some(2.0))), 3 -> ((2L, 7.0, Some(3.0)))))
   }
 
   test("range frame includes equal-ts peers; strict frame excludes them") {

@@ -22,6 +22,18 @@ class SessionizeSuite extends SparkTestBase {
       2 -> ((2L, "c#2")), 3 -> ((2L, "c#2"))))
   }
 
+  test("a 500 µs gap: turns 300 µs apart stay in session, 600 µs apart split") {
+    import org.apache.spark.sql.functions._
+    val offsets = Seq(0L, 300L, 600L, 1200L, 1500L)
+    val df = spark.createDataFrame(offsets.zipWithIndex.map { case (m, i) => (i, m) })
+      .toDF("turn_idx", "m")
+      .select(lit("c").as("conv_id"), col("turn_idx"),
+        timestamp_micros(lit(base * 1000L) + col("m")).as("ts"))
+    val got = Sessionize.sessionize(df, "conv_id", "ts", "turn_idx", Duration.ofNanos(500000L))
+      .orderBy("turn_idx").select("session_seq").collect().map(_.getLong(0)).toSeq
+    assert(got == Seq(1L, 1L, 1L, 2L, 2L))
+  }
+
   test("session_window form agrees with window form at the gap boundary (probed)") {
     // Probed on Spark 4.1.2: a turn at exactly prev+gap MERGES into the
     // session; only gap > threshold splits — identical to the window form.
@@ -37,7 +49,7 @@ class SessionizeSuite extends SparkTestBase {
       val got = Sessionize.sessionize(turnsDf(turns), "conv_id", "ts", "turn_idx", GAP)
         .select("conv_id", "turn_idx", "session_seq").collect()
         .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
-      val want = NaiveOracle.sessionSeq(turns, GAP.toMillis * 1000L)
+      val want = NaiveOracle.sessionSeq(turns, micros(GAP))
       assert(got == want)
     }
   }
@@ -63,7 +75,7 @@ class SessionizeSuite extends SparkTestBase {
     val turns = Gen.turnsSeq(45L, 5, 60)
     val aggs = Sessionize.sessionAgg(turnsDf(turns), "conv_id", "ts", "turn_idx", GAP)
       .collect()
-    val bySession = NaiveOracle.sessionSeq(turns, GAP.toMillis * 1000L)
+    val bySession = NaiveOracle.sessionSeq(turns, micros(GAP))
       .groupBy { case ((cid, _), seq) => (cid, seq) }
     assert(aggs.length == bySession.size)
     aggs.foreach { r =>

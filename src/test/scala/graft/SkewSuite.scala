@@ -41,7 +41,7 @@ class SkewSuite extends SparkTestBase {
         .toMap
     val win = collect(Rolling.rollingAgg(skewed, "conv_id", "ts", specs))
     val chk = collect(Skew.chunkedRollingAgg(skewed, "conv_id", "ts", specs,
-      chunkSpanMicros = 2 * H1.toMillis * 1000L))
+      chunkSpanMicros = 2 * micros(H1)))
     assert(win.keySet == chk.keySet)
     win.foreach { case (k, wv) =>
       val cv = chk(k)
@@ -90,9 +90,7 @@ class SkewSuite extends SparkTestBase {
         round(col("mean_value_3600s"), 9).as("m"),
         col("nunique_tool_3600s"),
         round(col("sum_value_3600s_strict"), 9).as("ss")))
-    val guarded = fp(withHotThreshold(100L) {
-      Rolling.rollingAgg(skewed, "conv_id", "ts", specs)
-    })
+    val guarded = fp(Rolling.routed(skewed, "conv_id", "ts", specs, hot))
     val plain = fp(Rolling.rollingAgg(skewed, "conv_id", "ts", specs,
       SkewPolicy.WindowOnly))
     assert(guarded == plain)
@@ -114,10 +112,9 @@ class SkewSuite extends SparkTestBase {
     val specs = Seq(
       RollingSpec("value", Agg.Sum, H1),
       RollingSpec("value", Agg.NUnique, H1))
-    assert(Rolling.detectHotKeys(df, "conv_id", 2L).size == Rolling.MaxHotKeys)
-    val guarded = withHotThreshold(2L) {
-      Rolling.rollingAgg(df, "conv_id", "ts", specs)
-    }
+    val hot = Rolling.detectHotKeys(df, "conv_id", 2L)
+    assert(hot.size == Rolling.MaxHotKeys)
+    val guarded = Rolling.routed(df, "conv_id", "ts", specs, hot)
     def fp(d: org.apache.spark.sql.DataFrame) = Lineage.tableFingerprint(
       d.select(col("conv_id"), col("ts"),
         round(col("sum_value_3600s"), 9).as("s"),
@@ -141,10 +138,9 @@ class SkewSuite extends SparkTestBase {
       (0 until 40).map(i => (if (i < 30) "hot" else null, i,
         new java.sql.Timestamp(1700000000000L + i * 1000L), i.toDouble))
     val df = rows.toDF("conv_id", "turn_idx", "ts", "value")
-    val out = withHotThreshold(10L) {
-      Rolling.rollingAgg(df, "conv_id", "ts",
-        Seq(RollingSpec("value", Agg.Count, Duration.ofHours(1))))
-    }
+    val out = Rolling.routed(df, "conv_id", "ts",
+      Seq(RollingSpec("value", Agg.Count, Duration.ofHours(1))),
+      Rolling.detectHotKeys(df, "conv_id", 10L))
     assert(out.count() == 40L)
     val nulls = out.where(col("conv_id").isNull)
       .orderBy("turn_idx").collect()
@@ -187,11 +183,14 @@ class SkewSuite extends SparkTestBase {
       timestamp_micros(lit(1700000000000000L) + col("id") * 60000L).as("ts"),
       (col("id") % 1000).cast("double").as("value"))
     val t0 = System.nanoTime()
-    val out = withHotThreshold(100000L) {
-      Rolling.rollingAgg(whale, "conv_id", "ts",
-        Seq(RollingSpec("value", Agg.Sum, d24),
-          RollingSpec("value", Agg.NUnique, d24)))
-    }.select("turn_idx", "sum_value_86400s", "nunique_value_86400s")
+    Rolling.clearDetectionCache(spark)
+    val rolled = Rolling.rollingAgg(whale, "conv_id", "ts",
+      Seq(RollingSpec("value", Agg.Sum, d24),
+        RollingSpec("value", Agg.NUnique, d24)))
+    assert(rolled.queryExecution.analyzed.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.MapPartitions]),
+      "the default path did not route the whale")
+    val out = rolled.select("turn_idx", "sum_value_86400s", "nunique_value_86400s")
     val got = out.where(col("turn_idx").isin(0, 999, 123456, 999999))
       .collect().map(r => r.getInt(0) -> ((r.getDouble(1), r.getLong(2)))).toMap
     val sec = (System.nanoTime() - t0) / 1e9
@@ -268,44 +267,33 @@ class SkewSuite extends SparkTestBase {
 
   test("detection runs ONE job for a 2-call pipeline (session cache reuse)") {
     // VERDICT r3 item 3 / SURVEY §4.2 "reuse, don't re-scan": two rolling
-    // calls over the SAME input + threshold must share one detection scan.
+    // calls over the SAME input must share one detection scan. The input's
+    // size estimate clears the HotThreshold / 64 early-out, so the first
+    // call really runs the job.
+    val df = whaleOf(5000L, 10000000L)
     Rolling.clearDetectionCache(spark)
     val before = Rolling.detectionJobs.get()
-    withHotThreshold(101L) {
-      Rolling.rollingAgg(skewed, "conv_id", "ts",
-        Seq(RollingSpec("value", Agg.Sum, H1))).count()
-      Rolling.rollingAgg(skewed, "conv_id", "ts",
-        Seq(RollingSpec("value", Agg.Count, H1))).count()
-    }
+    Rolling.rollingAgg(df, "conv_id", "ts",
+      Seq(RollingSpec("value", Agg.Sum, H1))).count()
+    Rolling.rollingAgg(df, "conv_id", "ts",
+      Seq(RollingSpec("value", Agg.Count, H1))).count()
     assert(Rolling.detectionJobs.get() - before == 1L,
       s"expected 1 detection job, ran ${Rolling.detectionJobs.get() - before}")
-    // Different threshold = different cache key = a fresh (correct) scan.
-    withHotThreshold(102L) {
-      Rolling.rollingAgg(skewed, "conv_id", "ts",
-        Seq(RollingSpec("value", Agg.Sum, H1))).count()
-    }
-    assert(Rolling.detectionJobs.get() - before == 2L)
   }
 
-  test("hotThreshold <= 0 disables detection: no detection job, no routing") {
+  test("WindowOnly runs no detection job and routes nothing") {
+    // The same input under Auto runs a detection job (see above), so the
+    // zero below is not vacuous; given its whale, the router splits it.
+    val df = whaleOf(5000L, 10000000L)
     val specs = Seq(RollingSpec("value", Agg.Sum, H1))
-    def union(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.executedPlan.toString.contains("Union")
-    // the same input routes at a positive threshold, so the check below
-    // is not vacuous
-    assert(union(withHotThreshold(100L) {
-      Rolling.rollingAgg(skewed, "conv_id", "ts", specs)
-    }), "fixture whale did not route at threshold 100")
-    Seq(0L, -1L).foreach { t =>
-      Rolling.clearDetectionCache(spark)
-      val before = Rolling.detectionJobs.get()
-      val out = withHotThreshold(t) {
-        Rolling.rollingAgg(skewed, "conv_id", "ts", specs)
-      }
-      assert(Rolling.detectionJobs.get() == before,
-        s"threshold $t still ran a detection job")
-      assert(!union(out), s"threshold $t still routed hot keys")
-    }
+    def chunked(d: org.apache.spark.sql.DataFrame) = d.queryExecution.analyzed.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.MapPartitions])
+    assert(chunked(Rolling.routed(df, "conv_id", "ts", specs, Seq("w"))))
+    Rolling.clearDetectionCache(spark)
+    val before = Rolling.detectionJobs.get()
+    val out = Rolling.rollingAgg(df, "conv_id", "ts", specs, SkewPolicy.WindowOnly)
+    assert(Rolling.detectionJobs.get() == before, "WindowOnly ran a detection job")
+    assert(!chunked(out), "WindowOnly routed hot keys")
   }
 
   test("WindowNUnique rejects binary input at analysis (reference-equality hazard)") {
@@ -335,7 +323,7 @@ class SkewSuite extends SparkTestBase {
     // routing would silently change NaN semantics)
     val chunked = Skew.chunkedRollingAgg(df, "conv_id", "ts",
         Seq(RollingSpec("value", Agg.NUnique, H1)),
-        chunkSpanMicros = H1.toMillis * 1000L)
+        chunkSpanMicros = micros(H1))
       .orderBy("turn_idx").select("nunique_value_3600s").collect().map(_.getLong(0))
     assert(chunked.toSeq == Seq(1L, 1L, 2L, 2L), chunked.toSeq.toString)
   }
@@ -356,15 +344,17 @@ class SkewSuite extends SparkTestBase {
     val df = rows.toDF("conv_id", "turn_idx", "ts", "value")
     val specs = Seq(RollingSpec("value", Agg.Sum, H1),
       RollingSpec("value", Agg.Count, H1))
-    def fp(p: SkewPolicy) = Lineage.tableFingerprint(
-      Rolling.rollingAgg(df, "conv_id", "ts", specs, p)
-        .select(col("conv_id"), col("turn_idx"),
-          round(col("sum_value_3600s"), 9).as("s"), col("count_value_3600s")))
-    assert(withHotThreshold(10L)(fp(SkewPolicy.Auto)) == fp(SkewPolicy.WindowOnly))
+    def fp(d: org.apache.spark.sql.DataFrame) = Lineage.tableFingerprint(
+      d.select(col("conv_id"), col("turn_idx"),
+        round(col("sum_value_3600s"), 9).as("s"), col("count_value_3600s")))
+    val hot = Rolling.detectHotKeys(df, "conv_id", 10L)
+    assert(hot == Seq("hot"))
+    assert(fp(Rolling.routed(df, "conv_id", "ts", specs, hot)) ==
+      fp(Rolling.rollingAgg(df, "conv_id", "ts", specs, SkewPolicy.WindowOnly)))
     // and a DIRECT chunked call on null-ts data fails loudly, never NPEs
     val ex = intercept[org.apache.spark.SparkException] {
       Skew.chunkedRollingAgg(df, "conv_id", "ts", specs,
-        chunkSpanMicros = H1.toMillis * 1000L).collect()
+        chunkSpanMicros = micros(H1)).collect()
     }
     assert(ex.getMessage.contains("null ts") ||
       Option(ex.getCause).exists(_.getMessage.contains("null ts")), ex.getMessage)
@@ -423,8 +413,8 @@ class SkewSuite extends SparkTestBase {
     // rows. A span of one max window would duplicate every hot row (2×).
     val n = 20000L
     val df = whaleOf(n, 120000000L)
-    Rolling.clearDetectionCache(spark)
-    val out = withHotThreshold(1000L)(Rolling.rollingAgg(df, "conv_id", "ts", spanSpecs))
+    val out = Rolling.routed(df, "conv_id", "ts", spanSpecs,
+      Rolling.detectHotKeys(df, "conv_id", 1000L))
     out.collect()
     object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     val chunkRecords = Aqe.collect(out.queryExecution.executedPlan) {
@@ -442,8 +432,8 @@ class SkewSuite extends SparkTestBase {
   test("short-timeline whale and an overflow-wide window: results == WindowOnly") {
     // 5,000 turns 10 s apart ≈ 14 h: two 8 h chunks, the band in both.
     val df = whaleOf(5000L, 10000000L)
-    Rolling.clearDetectionCache(spark)
-    val guarded = withHotThreshold(1000L)(Rolling.rollingAgg(df, "conv_id", "ts", spanSpecs))
+    val hot = Rolling.detectHotKeys(df, "conv_id", 1000L)
+    val guarded = Rolling.routed(df, "conv_id", "ts", spanSpecs, hot)
     assert(guarded.queryExecution.analyzed.exists(
       _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.MapPartitions]),
       "whale was not routed to the chunked path")
@@ -456,28 +446,54 @@ class SkewSuite extends SparkTestBase {
       RollingSpec("value", Agg.Count, H1))
     def wideFp(d: org.apache.spark.sql.DataFrame) = Lineage.tableFingerprint(
       d.select((Seq("conv_id", "turn_idx") ++ wide.map(_.outName)).map(col): _*))
-    assert(wideFp(withHotThreshold(1000L)(Rolling.rollingAgg(df, "conv_id", "ts", wide))) ==
+    assert(wideFp(Rolling.routed(df, "conv_id", "ts", wide, hot)) ==
       wideFp(Rolling.rollingAgg(df, "conv_id", "ts", wide, SkewPolicy.WindowOnly)))
   }
 
   test("band edge: rows at pmod == span − maxW feed the next chunk's frames (span 8·maxW)") {
     // A row at exactly span − maxW into its chunk is the lower frame bound
     // of the next chunk's first row, for strict and non-strict frames.
-    val w = H1.toMillis * 1000L
+    val w = micros(H1)
     val span = Rolling.MaxChunkWindows * w
     val b = (1700000000000000L / span) * span
-    val micros = (0L until 4L).flatMap { k =>
+    val stamps = (0L until 4L).flatMap { k =>
       val c = b + k * span
       Seq(c, c + 1, c + span - w - 1, c + span - w, c + span - w, c + span - w + 1,
         c + span - 600000000L, c + span - 1, c + span, c + span + 1, c + span + w - 1)
     }
-    val df = spark.createDataFrame(micros.zipWithIndex.map { case (m, i) =>
+    val df = spark.createDataFrame(stamps.zipWithIndex.map { case (m, i) =>
         (m, i, (i % 7).toDouble, (i % 3).toString) })
       .toDF("m", "turn_idx", "value", "tool")
       .select(lit("e").as("conv_id"), col("turn_idx"),
         timestamp_micros(col("m")).as("ts"), col("value"), col("tool"))
     assert(spanFp(Skew.chunkedRollingAgg(df, "conv_id", "ts", spanSpecs, span)) ==
       spanFp(Rolling.rollingAgg(df, "conv_id", "ts", spanSpecs, SkewPolicy.WindowOnly)))
+  }
+
+  test("zero-width and sub-millisecond windows route hot == WindowOnly") {
+    // At a 0 µs max window the chunk span was 0 and the chunk id a pmod by
+    // zero; a 500 µs window truncated to 0 µs the same way.
+    val rows = spark.range(200L).select(lit("hot").as("conv_id"),
+      col("id").cast("int").as("turn_idx"),
+      timestamp_micros(lit(1700000000000000L) + (col("id") / 2).cast("long") * 300L).as("ts"),
+      (col("id") % 7).cast("double").as("value"))
+    val hot = Rolling.detectHotKeys(rows, "conv_id", 10L)
+    assert(hot == Seq("hot"))
+    Seq(Duration.ZERO, Duration.ofNanos(500000L)).foreach { w =>
+      val specs = Seq(RollingSpec("value", Agg.Count, w), RollingSpec("value", Agg.Sum, w))
+      def fp(d: org.apache.spark.sql.DataFrame) = Lineage.tableFingerprint(
+        d.select((Seq("conv_id", "turn_idx") ++ specs.map(_.outName)).map(col): _*))
+      assert(fp(Rolling.routed(rows, "conv_id", "ts", specs, hot)) ==
+        fp(Rolling.rollingAgg(rows, "conv_id", "ts", specs, SkewPolicy.WindowOnly)), s"window $w")
+    }
+    val neg = intercept[IllegalArgumentException] {
+      RollingSpec("value", Agg.Count, Duration.ofSeconds(-1))
+    }
+    assert(neg.getMessage.contains("RollingSpec(value,Count,PT-1S"), neg.getMessage)
+    intercept[IllegalArgumentException] {
+      Skew.chunkedRollingAgg(rows, "conv_id", "ts",
+        Seq(RollingSpec("value", Agg.Count, Duration.ZERO)), chunkSpanMicros = 0L)
+    }
   }
 
   test("generator produces the intended hot tail (skew exists to be handled)") {

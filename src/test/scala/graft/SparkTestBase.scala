@@ -15,15 +15,6 @@ object SparkTestBase {
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
 
-  /** Runs `body` with the skew router's hot threshold
-    * (`Rolling.HotThresholdKey`) set to `t`, then unsets it. `rollingAgg`
-    * detects at call time, so the call must sit inside `body`.
-    */
-  def withHotThreshold[T](t: Long)(body: => T): T = {
-    spark.conf.set(graft.tjk.Rolling.HotThresholdKey, t.toString)
-    try body finally spark.conf.unset(graft.tjk.Rolling.HotThresholdKey)
-  }
-
   def turnsDf(turns: Seq[graft.tjk.Turn]): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
