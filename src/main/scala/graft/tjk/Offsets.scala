@@ -6,11 +6,12 @@ import org.apache.spark.sql.functions._
 
 /** O4 lag/lead + O6 forward-fill (SURVEY.md §2.1).
   *
-  * Order within entity is the stable total order (turn_idx, ts) mandated by
-  * BASELINE.json:15. `lead` looks into the future by construction — it exists
-  * for label/target building and is flagged leaky-by-design via the
-  * `__leaky_` column-name prefix so pipeline assembly can refuse to mix it
-  * into feature sets.
+  * The caller passes the order within the entity; it should be a total
+  * order over the entity's rows. `Pipeline.backfill` passes (ts, turn_idx),
+  * sessionize's order; q05's lags pass (turn_idx, ts). `lead` looks into the
+  * future by construction — it exists for label/target building and is
+  * flagged leaky-by-design via the `__leaky_` column-name prefix so
+  * pipeline assembly can refuse to mix it into feature sets.
   */
 object Offsets {
 

@@ -294,7 +294,7 @@ object Rolling {
       window: java.time.Duration): DataFrame = {
     val frame = Window.partitionBy(col(entity)).orderBy(tsMicros(col(tsCol)))
       .rangeBetween(-micros(window), 0L)
-    df.withColumn(s"approx_nunique_${valueCol}_${window.toSeconds}s",
+    df.withColumn(s"approx_nunique_${valueCol}_${windowName(window)}",
       approx_count_distinct(col(valueCol), 0.05).over(frame))
   }
 

@@ -1,6 +1,7 @@
 package graft.tjk
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Text-analysis + deduplication operators for large-scale training-data
@@ -10,12 +11,11 @@ import org.apache.spark.sql.functions._
   *
   * Dedup family:
   *  - exact: md5 fingerprint groupBy (one shuffle on the hash).
-  *  - n-gram Jaccard: exact pairwise Jaccard over word k-shingles, candidate
-  *    pairs blocked by shared NON-HOT shingle (a pair with zero shared
-  *    shingles has Jaccard 0 and is correctly absent; the [[HotShingleDf]]
-  *    cap keeps one ubiquitous shingle from creating a quadratic hot block)
-  *    — shuffle is on the shingle, so a hot document spreads across
-  *    partitions.
+  *  - n-gram Jaccard: exact pairwise Jaccard over word k-shingle sets.
+  *    Candidates come from the set-similarity prefix filter (a pair that can
+  *    reach the threshold shares a shingle among both docs' first few in one
+  *    global rarest-first order), restricted to NON-HOT shingles (the
+  *    [[HotShingleDf]] cap); each candidate is verified on its two sets.
   *  - MinHash+LSH: 32 md5-based min-hashes → 8 bands × 4 rows; candidates =
   *    pairs sharing a band; similarity estimated as matching-component
   *    fraction. md5 (not xxhash64) so the DuckDB oracle can replicate
@@ -35,10 +35,10 @@ object TextOps {
   val MinHashK = 32
   val Bands = 8 // rows per band = MinHashK / Bands = 4
 
-  /** Candidate-join guard: shingles appearing in more document sets than this
-    * are excluded from candidate GENERATION (never from Jaccard verification).
-    * A shingle with document frequency f contributes O(f²) candidate pairs,
-    * so one ubiquitous shingle would otherwise create a quadratic hot block.
+  /** Candidate guard: a shingle in more document sets than this never makes
+    * a candidate (it still counts in the Jaccard verification), so a pair
+    * whose every shared shingle is hot is absent. The q18 oracle replicates
+    * the cap.
     */
   val HotShingleDf = 128
 
@@ -164,13 +164,25 @@ object TextOps {
 
   // ------------------------------------------------------------ shingles
 
-  /** Distinct word k-shingles per doc; docs shorter than k words drop out. */
-  def shingles(docs: DataFrame, k: Int = Shingle): DataFrame =
+  /** `f` over each doc's array of distinct word k-shingles; docs shorter
+    * than k words drop out. [[shingles]] explodes the array expression
+    * itself, not a projected column: over a column, Catalyst's inferred
+    * `size(gs) > 0` filter is pushed below the projection and builds every
+    * array twice.
+    */
+  private def overShingles(docs: DataFrame, k: Int)(f: Column => Column): DataFrame =
     withTokens(spread(docs))
       .where(size(col("ws")) >= k)
-      .select(col("doc_id"), explode(expr(
-        s"array_distinct(transform(sequence(0, size(ws) - $k), i -> concat_ws(' ', slice(ws, i + 1, $k))))"
-      )).as("g"))
+      .select(col("doc_id"), f(expr(
+        s"array_distinct(transform(sequence(0, size(ws) - $k), i -> concat_ws(' ', slice(ws, i + 1, $k))))")))
+
+  /** Each doc's distinct word shingles as one array, `(doc_id, gs)`. */
+  private[graft] def shingleSets(docs: DataFrame): DataFrame =
+    overShingles(docs, Shingle)(_.as("gs"))
+
+  /** Distinct word k-shingles per doc, one `(doc_id, g)` row each. */
+  def shingles(docs: DataFrame, k: Int = Shingle): DataFrame =
+    overShingles(docs, k)(explode(_).as("g"))
 
   /** Intra-document k-gram repetition — the duplicate-n-gram quality
     * signal of crawl-filtering pipelines (a document that keeps repeating
@@ -205,98 +217,51 @@ object TextOps {
           col("n_distinct").cast("double") / col("n_grams").cast("double"), 6))
   }
 
-  /** Shingles whose document frequency exceeds the cap — the quadratic
-    * hot-block set. Tiny by construction (AQE broadcasts it).
-    */
-  private def hotShingles(sh: DataFrame, maxShingleDf: Int): DataFrame =
-    sh.groupBy("g").agg(count(lit(1)).as("df"))
-      .where(col("df") > maxShingleDf).select("g")
-
-  /** (id_a, id_b, inter_rare): candidate pairs sharing ≥1 NON-HOT shingle
-    * (`hot` = precomputed [[hotShingles]] set), with the count of shared
-    * non-hot shingles — produced directly by the rare-shingle self-join's
-    * group-by, so candidate generation and the rare part of the
-    * intersection cost ONE aggregation.
-    */
-  private def rarePairCounts(sh: DataFrame, hot: DataFrame): DataFrame =
-    bucketPairs(sh.join(hot, Seq("g"), "left_anti"), "doc_id", Seq("g"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter_rare"))
-
-  /** Candidate pairs sharing ≥1 non-hot shingle (df ≤ maxShingleDf).
-    * Package-visible so the hot-shingle bound is directly testable.
+  /** Prefix-filter candidates over `(doc_id, gs)` sets (Vernica, Carey & Li,
+    * SIGMOD 2010): order all shingles by `(df, g)`, rarest first, and index
+    * only the non-hot ones among each set's first `n − ⌈t′·n⌉ + 1`. A pair
+    * with Jaccard ≥ t′ has at most `n − ⌈t′·n⌉` of a set's shingles outside
+    * the intersection, so its first shared shingle lies in both prefixes;
+    * hot shingles sort after every non-hot one, so if the pair shares a
+    * non-hot shingle, that first one is non-hot and indexed. Pairs also pass
+    * the length filter `min(n) ≥ max(n)·t′` (Jaccard ≤ min/max).
+    *
+    * t′ sits 1e-6 below the threshold: the emitted Jaccard is rounded to
+    * 6 dp before `≥ threshold`, and `n·threshold` in double can land just
+    * above an integer (25 × 0.28 = 7.000000000000001).
     */
   private[graft] def ngramCandidates(
-      sh: DataFrame, maxShingleDf: Int): DataFrame =
-    rarePairCounts(sh, hotShingles(sh, maxShingleDf)).select("id_a", "id_b")
+      sets: DataFrame, threshold: Double, maxShingleDf: Int): DataFrame = {
+    val t = threshold - 1e-6
+    val indexed = sets
+      .select(col("doc_id"), size(col("gs")).as("n"), explode(col("gs")).as("g"))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("g")))
+      .withColumn("pos",
+        row_number().over(Window.partitionBy("doc_id").orderBy("df", "g")))
+      .where(col("df") <= maxShingleDf &&
+        col("pos") <= col("n") - ceil(col("n") * t) + 1)
+      .select("doc_id", "g", "n")
+    bucketPairs(indexed, "doc_id", Seq("g"))
+      .where(least(col("n_a"), col("n_b")) >= greatest(col("n_a"), col("n_b")) * t)
+      .select("id_a", "id_b").distinct()
+  }
 
-  /** Exact n-gram Jaccard near-dup pairs (j ≥ threshold) over candidates
-    * sharing at least one non-hot shingle. The [[HotShingleDf]] cap applies
-    * to candidate GENERATION only; the emitted Jaccard is exact over the
-    * FULL shingle sets, decomposed as |A∩B| = rare-part + hot-part:
-    *
-    *  - rare-part falls out of the candidate self-join's group-by (free);
-    *  - hot-part re-joins candidates against only the (doc, HOT shingle)
-    *    rows — a set linear in Σ df(hot), never the C(df,2) pair blow-up,
-    *    and empty on any corpus without hot shingles.
-    *
-    * A pair whose EVERY shared shingle is hot is missed — at threshold 0.8
-    * a true pair shares ≥ 80% of its shingle union, so any realistic cap
-    * loses nothing (planted-hot-shingle property pinned in TextVecSuite;
-    * the DuckDB oracle replicates the same capped-candidates + exact-verify
-    * semantics).
+  /** Exact n-gram Jaccard near-dup pairs (j ≥ threshold, rounded to 6 dp)
+    * among pairs sharing at least one non-hot shingle: [[ngramCandidates]]
+    * verified by `|A∩B| / (|A| + |B| − |A∩B|)` over the FULL shingle sets,
+    * hot shingles included.
     */
   def ngramJaccardPairs(
       docs: DataFrame,
       threshold: Double,
       maxShingleDf: Int = HotShingleDf,
       scope: CacheScope = CacheScope.unmanaged): DataFrame = {
-    // The shingle fan-out feeds several consumers (df-cap, candidate self-
-    // join, hot-part verify, per-doc counts); persist it once (spilling to
-    // disk at scale) instead of re-running the split+explode scan per
-    // consumer — the same branch-point discipline as minhashLshPairs. The
-    // blocks stay LRU-evictable (MEMORY_AND_DISK storage is reclaimed under
-    // executor memory pressure); a caller wanting eager release passes a
-    // [[CacheScope]] and releases after consuming the result.
-    val sh = scope.persist(shingles(docs))
-    // hot is tiny by construction but its PLAN is a full-corpus groupBy
-    // over the shingle fan-out — unpersisted it would re-run for each of
-    // its three consumers (the isEmpty probe, the anti-join, the hot-part
-    // join): three full shuffles for a set that fits in memory.
-    val hot = scope.persist(hotShingles(sh, maxShingleDf))
-    // One tiny probe job: on a corpus with NO hot shingle (df ≤ cap
-    // everywhere — most corpora most of the time), the anti-join and the
-    // whole hot-part machinery are identities over empty sets; skip their
-    // ~4 stages instead of letting AQE discover the emptiness shuffle by
-    // shuffle. Values are identical by construction either way (hot-part
-    // = 0 for every pair when no shingle is hot).
-    val anyHot = !hot.isEmpty
-    val inter =
-      if (!anyHot)
-        rarePairCounts(sh, hot.limit(0))
-          .withColumnRenamed("inter_rare", "inter")
-      else {
-        // interRare feeds BOTH the hot-part probe join and the final
-        // rare+hot merge; unpersisted, the whole rare self-join pipeline
-        // would run twice. Pair-count-sized, LRU-evictable like sh/hot.
-        val interRare = scope.persist(rarePairCounts(sh, hot))
-        val hotSh = sh.join(hot, Seq("g"))
-        val interHot = interRare.select("id_a", "id_b")
-          .join(hotSh.select(col("doc_id").as("id_a"), col("g")), Seq("id_a"))
-          .join(hotSh.select(col("doc_id").as("id_b"), col("g")), Seq("id_b", "g"))
-          .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter_hot"))
-        interRare
-          .join(interHot, Seq("id_a", "id_b"), "left")
-          .withColumn("inter",
-            col("inter_rare") + coalesce(col("inter_hot"), lit(0L)))
-      }
-    // Consumed by BOTH join sides (n_a and n_b): persisted, the count
-    // aggregation walks the gram stream ONCE instead of once per side —
-    // a full pass over the shingle cache removed (measured: two identical
-    // 0.7 s / 4.5 s-CPU stages at bench scale). Doc-count-sized.
-    val cnt = scope.persist(sh.groupBy("doc_id").agg(count(lit(1)).as("n")))
-    withBoth(inter, cnt, "doc_id", "n")
+    // read by candidate generation and by both verify join-backs
+    val sets = scope.persist(shingleSets(docs))
+    withBoth(ngramCandidates(sets, threshold, maxShingleDf), sets, "doc_id", "gs")
+      .withColumn("inter", size(array_intersect(col("gs_a"), col("gs_b"))))
       .withColumn("jaccard", round(col("inter").cast("double") /
-        (col("n_a") + col("n_b") - col("inter")).cast("double"), 6))
+        (size(col("gs_a")) + size(col("gs_b")) - col("inter")).cast("double"), 6))
       .where(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }

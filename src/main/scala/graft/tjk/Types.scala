@@ -73,7 +73,7 @@ case class RollingSpec(
   require(!window.isNegative, s"$this: negative window")
   def windowMicros: Long = micros(window)
   def outName: String =
-    s"${agg.name}_${col}_${window.toSeconds}s" + (if (strict) "_strict" else "")
+    s"${agg.name}_${col}_${windowName(window)}" + (if (strict) "_strict" else "")
 }
 
 /** One row-frame rolling feature: agg(col) over the trailing n rows

@@ -18,6 +18,12 @@ package object tjk {
   def micros(d: java.time.Duration): Long =
     Math.addExact(Math.multiplyExact(d.getSeconds, 1000000L), d.getNano / 1000L)
 
+  /** A window in an output column name: `<n>s` when it is whole seconds,
+    * else `<n>us`, so windows that differ below a second get distinct names.
+    */
+  private[tjk] def windowName(d: java.time.Duration): String =
+    if (d.getNano == 0) s"${d.getSeconds}s" else s"${micros(d)}us"
+
   /** md5-derived deterministic bucket in [0, n) — the repo's ONE convention
     * for subset predicates and resume buckets that an external engine must
     * replicate (DuckDB has md5 but not xxhash64). The Spark expression and

@@ -102,7 +102,8 @@ class RollingSuite extends SparkTestBase {
         RollingSpec("value", Agg.Count, w),
         RollingSpec("value", Agg.Sum, w),
         RollingSpec("value", Agg.Sum, w, strict = true)))
-      .select("turn_idx", "count_value_0s", "sum_value_0s", "sum_value_0s_strict")
+      .select("turn_idx", "count_value_500us", "sum_value_500us",
+        "sum_value_500us_strict")
       .collect().map(r => r.getInt(0) ->
         ((r.getLong(1), r.getDouble(2), if (r.isNullAt(3)) None else Some(r.getDouble(3)))))
       .toMap
@@ -111,6 +112,19 @@ class RollingSuite extends SparkTestBase {
     assert(out == Map(
       0 -> ((1L, 1.0, None)), 1 -> ((2L, 3.0, Some(1.0))),
       2 -> ((2L, 5.0, Some(2.0))), 3 -> ((2L, 7.0, Some(3.0)))))
+  }
+
+  test("windows that differ below a second get distinct output names") {
+    import java.time.Duration
+    val specs = Seq(Duration.ZERO, Duration.ofNanos(500000L),
+      Duration.ofSeconds(1), Duration.ofMillis(1500))
+      .map(RollingSpec("value", Agg.Count, _))
+    val out = Rolling.rollingAgg(turnsDf(Seq(Turn("c", 0, "user", "x", null,
+      new java.sql.Timestamp(1767225600000L)))), "conv_id", "ts", specs)
+    val names = specs.map(_.outName)
+    assert(names == Seq("count_value_0s", "count_value_500us",
+      "count_value_1s", "count_value_1500000us"))
+    assert(out.columns.count(names.contains) == 4)
   }
 
   test("range frame includes equal-ts peers; strict frame excludes them") {

@@ -18,6 +18,13 @@ class SimilarityLawsSuite extends SparkTestBase {
     ).toDF("vec_id", "embedding")
   }
 
+  /** Word 3-shingle set of a text, computed independently of the engine. */
+  private def shingleSet(t: String): Set[String] = {
+    val ws = t.split(" ")
+    if (ws.length < 3) Set.empty
+    else (0 to ws.length - 3).map(i => ws.slice(i, i + 3).mkString(" ")).toSet
+  }
+
   private def randomDocs(seed: Long, n: Int) = {
     val vocab = Seq("a", "b", "c", "d", "e", "f", "g", "h")
     val rng = new scala.util.Random(seed)
@@ -52,11 +59,6 @@ class SimilarityLawsSuite extends SparkTestBase {
       }
       // independent naive Jaccard over word 3-shingle sets
       val texts = docs.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      def shingleSet(t: String): Set[String] = {
-        val ws = t.split(" ")
-        if (ws.length < 3) Set.empty
-        else (0 to ws.length - 3).map(i => ws.slice(i, i + 3).mkString(" ")).toSet
-      }
       val naive = (for {
         a <- texts.keys; b <- texts.keys if a < b
         sa = shingleSet(texts(a)); sb = shingleSet(texts(b))
@@ -68,6 +70,36 @@ class SimilarityLawsSuite extends SparkTestBase {
       } yield (a, b) -> jr).toMap
       assert(uncapped == naive, s"seed $seed: engine Jaccard != naive recompute")
     }
+  }
+
+  test("prefix-filtered Jaccard == naive capped reference over caps × thresholds") {
+    // the capped semantics the q18 oracle replicates: exact J over the full
+    // sets, for the pairs that share at least one shingle of df ≤ cap; caps
+    // 2 and 4 make many shared shingles hot. Ten docs get a copy without
+    // their last word, so every threshold has pairs.
+    val base = randomDocs(14L, n = 30)
+    val docs = base.unionByName(base.where(col("doc_id") < 10L).select(
+      (col("doc_id") + 1000L).as("doc_id"),
+      expr("array_join(slice(split(text, ' '), 1, size(split(text, ' ')) - 1), ' ')")
+        .as("text")))
+    val sets = docs.collect().map(r => r.getLong(0) -> shingleSet(r.getString(1)))
+      .filter(_._2.nonEmpty).toMap
+    val df = sets.values.toSeq.flatten.groupBy(identity).map { case (g, o) => g -> o.size }
+    val sizes = for (cap <- Seq(2, 4, 128); t <- Seq(0.05, 0.12, 0.7)) yield {
+      val engine = TextOps.ngramJaccardPairs(docs, t, maxShingleDf = cap).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      val naive = (for {
+        a <- sets.keys; b <- sets.keys if a < b
+        inter = sets(a) & sets(b)
+        if inter.exists(df(_) <= cap)
+        j = inter.size.toDouble / (sets(a).size + sets(b).size - inter.size)
+        jr = BigDecimal(j).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+        if jr >= t
+      } yield (a, b) -> jr).toMap
+      assert(engine == naive, s"cap $cap, threshold $t")
+      (cap, naive.size)
+    }
+    assert(sizes.forall(_._2 > 0), sizes)
   }
 
   test("simhash law: identical docs always collide at hamming 0, both hash paths") {

@@ -55,24 +55,13 @@ class TextVecSuite extends SparkTestBase {
     // document frequency = |corpus|, the classic quadratic hot block.
     val salted = planted.withColumn("text",
       concat(col("text"), lit(" zqx wvu tsr")))
-    val sh = TextOps.shingles(salted)
     val nDocs = salted.count()
-    def pairSet(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val capped = pairSet(TextOps.ngramCandidates(sh, maxShingleDf = 10))
-    val uncapped = TextOps.ngramCandidates(sh, maxShingleDf = Int.MaxValue).count()
-    // uncapped: the sentinel makes EVERY pair a candidate (all-pairs)
-    assert(uncapped == nDocs * (nDocs - 1) / 2, s"uncapped=$uncapped")
-    // capped: no candidate from the base corpus is lost, and the candidate
-    // count stays far below all-pairs (the few additions vs the unsalted
-    // corpus are legitimate RARE boundary shingles the splice created —
-    // "lastword zqx wvu" collides between docs sharing a last word — not
-    // hot-shingle leakage)
-    val base = pairSet(TextOps.ngramCandidates(
-      TextOps.shingles(planted), maxShingleDf = 10))
-    assert(base.subsetOf(capped), s"cap lost ${(base -- capped).size} candidates")
-    assert(capped.size < uncapped / 2,
-      s"capped=${capped.size} not bounded vs all-pairs $uncapped")
+    val allPairs = nDocs * (nDocs - 1) / 2
+    val capped = TextOps.ngramCandidates(
+      TextOps.shingleSets(salted), 0.7, maxShingleDf = 10).count()
+    // the sentinel never becomes a candidate bucket, so the candidate count
+    // stays far below all-pairs
+    assert(capped < allPairs / 2, s"capped=$capped not bounded vs all-pairs $allPairs")
     // and no TRUE pair is lost: every planted near-dup/exact-dup still found,
     // with exact Jaccard verified over FULL shingle sets (sentinel included)
     val pairs = TextOps.ngramJaccardPairs(salted, threshold = 0.7,
@@ -85,6 +74,43 @@ class TextVecSuite extends SparkTestBase {
     (0 until 4).foreach { i =>
       assert(pairs((i.toLong, i + 2000L)) == 1.0)
     }
+  }
+
+  test("a pair exactly at the threshold is a candidate: the t′ margin") {
+    // Doc A has `words` distinct words; doc B is its first 9, so B's 7
+    // shingles are a subset of A's and J = 7 / (words − 2) exactly. A's other
+    // shingles have df 1 and sort first, filling A's prefix up to the last
+    // slot the margin buys. 25 × 0.28 = 7.000000000000001 in double, so a
+    // prefix or length filter built from the raw threshold drops the 0.28
+    // pair (10 × 0.7 is exactly 7.0 and passes either way).
+    for ((words, t) <- Seq((12, 0.7), (27, 0.28))) {
+      val a = (0 until words).map(i => s"w$i")
+      val docs = Seq((1L, a.mkString(" ")), (2L, a.take(9).mkString(" ")))
+        .toDF("doc_id", "text")
+      val out = TextOps.ngramJaccardPairs(docs, t).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      assert(out == Seq((1L, 2L, t)), s"threshold $t: $out")
+    }
+  }
+
+  test("building the q18 frame runs no Spark job") {
+    val sc = spark.sparkContext
+    def inGroup(g: String)(body: => Unit): Unit = {
+      sc.setJobGroup(g, g)
+      try body finally sc.clearJobGroup()
+    }
+    val scope = new CacheScope
+    inGroup("q18-build")(TextOps.ngramJaccardPairs(planted, 0.8, scope = scope))
+    scope.release()
+    // status events are processed in order: once a later marker job is
+    // visible, any job started while building would be visible too
+    inGroup("q18-marker")(sc.parallelize(Seq(1), 1).count())
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (sc.statusTracker.getJobIdsForGroup("q18-marker").isEmpty &&
+      System.nanoTime() < deadline) Thread.sleep(20)
+    assert(sc.statusTracker.getJobIdsForGroup("q18-marker").nonEmpty)
+    assert(sc.statusTracker.getJobIdsForGroup("q18-build").isEmpty,
+      "building the n-gram frame ran a job")
   }
 
   test("minhashSignatures (typed agg) ≡ the literal explode + builtin-md5 form") {
@@ -638,11 +664,10 @@ class TextVecSuite extends SparkTestBase {
       "release() must leave no cached frame behind")
     // the returned plan stays valid after release (recomputes)
     assert(out.count() == planted.count())
-    // ngram path tracks ALL its persists (shingles, hot set, per-doc
-    // counts — the r6 cnt persist that deduplicates the na/nb join sides)
+    // ngram path tracks its one persist: the per-doc shingle sets
     val scope2 = new CacheScope
     TextOps.ngramJaccardPairs(planted, 0.8, scope = scope2).count()
-    assert(scope2.size == 3)
+    assert(scope2.size == 1)
     scope2.release(blocking = true)
     assert(spark.sharedState.cacheManager.isEmpty)
   }
